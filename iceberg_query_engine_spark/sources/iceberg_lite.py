@@ -24,10 +24,16 @@ JSON values keyed by column NAME (the reference keys by column id
 with raw bytes); partition values are also kept inside the data files
 so reads need no partition-column reconstruction.
 
-Scale notes: file listing/pruning is metadata-only (no data I/O);
-the pruned file list feeds one `spark.read.parquet(*files)` — Spark
-then parallelizes over row groups. In production you'd use the real
-Iceberg connector; this exists for format parity with the reference.
+Scan shape: planning is metadata-only and starts no Spark job. Files
+are listed and pruned from the JSON manifests, and every Parquet read
+takes its schema from a file footer (the Spark schema key that Spark's
+own inference reads, via pyarrow) instead of an inference job. The kept
+data files are read in one scan per (sequence number, schema id) group
+and unioned. Position deletes are one broadcast anti-join; equality
+deletes are one broadcast anti-join per equality-column set, whose key
+files are unioned with their sequence numbers. Spark then parallelizes
+over row groups. In production you'd use the real Iceberg connector;
+this exists for format parity with the reference.
 """
 
 from __future__ import annotations
@@ -41,6 +47,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# the footer key Spark's own Parquet schema inference reads first
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# (file_path, pos): what write_position_deletes writes
+_POS_DELETE_SCHEMA = "file_path string, pos bigint"
 
 _OPS = {
     "=": lambda lo, hi, v: not (v < lo or v > hi),
@@ -70,6 +82,44 @@ class PartitionFilter:
         if self.column not in partition:
             return True  # unpartitioned on this column → conservative keep
         return partition[self.column] in [str(v) for v in self.values]
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """Spark schema stored in the footer of `path` (a file, or the first
+    *.parquet file of a directory), or None when there is no such file
+    or the file was not written by Spark."""
+    import pyarrow.parquet as pq
+
+    try:
+        if os.path.isdir(path):
+            names = sorted(fn for fn in os.listdir(path) if fn.endswith(".parquet"))
+            if not names:
+                return None
+            path = os.path.join(path, names[0])
+        kv = pq.read_metadata(path).metadata or {}
+        return StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
+    # missing key, unparsable schema JSON, unreadable footer: Spark's
+    # own inference then reads (or reports) the file
+    except (KeyError, TypeError, ValueError, OSError):
+        return None
+
+
+def _read_parquet(
+    spark: SparkSession, paths: list[str], schema: StructType | str | None = None
+) -> DataFrame:
+    """`spark.read.parquet(*paths)` without Spark's schema-inference job.
+
+    The schema is `schema` if given, else the Spark schema in the first
+    path's footer. That is the key Spark's inference reads, and without
+    mergeSchema inference also takes one file's schema for all paths.
+    read() passes groups written by ONE Spark job (one snapshot and
+    schema id, or one delete directory), so the first footer stands for
+    every file. Files without the key (e.g. written by pyarrow) fall back
+    to inference."""
+    schema = schema if schema is not None else _footer_schema(paths[0])
+    if schema is None:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 class IcebergLiteTable:
@@ -226,13 +276,19 @@ class IcebergLiteTable:
         (iceberg.rs:271-330). Spark re-applies exact filtering; pruning
         only shrinks the file list.
 
+        Building the frame starts no Spark job: each data-file group
+        (one sequence number and schema id, so one write job) and each
+        delete file is read under the schema in its first file's footer.
+
         Delete files (the v2 feature the reference's header claims but
         never implements) are applied after pruning: positional deletes
-        anti-join on (_metadata.file_path, _metadata.row_index);
-        equality deletes anti-join on their key columns, and only
-        against data files with a strictly smaller sequence number.
-        Both anti-joins broadcast the (small) delete side — the same
-        physical shape the real Iceberg Spark reader produces.
+        in one anti-join on (_metadata.file_path, _metadata.row_index);
+        equality deletes in one anti-join per equality-column set. The
+        set's key files are unioned, each tagged with its sequence
+        number, and a row is dropped when a key matches (null keys never
+        do) and the row's sequence number is strictly smaller. Every
+        anti-join broadcasts the (small) delete side — the same physical
+        shape the real Iceberg Spark reader produces.
         """
         explicit_travel = (
             snapshot_id is not None
@@ -299,7 +355,7 @@ class IcebergLiteTable:
             if not files:
                 raise ValueError(f"empty iceberg-lite table at {self.path}")
             any_entry = files[0][0]
-            df = spark.read.parquet(os.path.join(self.path, any_entry["file_path"]))
+            df = _read_parquet(spark, [os.path.join(self.path, any_entry["file_path"])])
             cols = _mapped_cols(any_entry.get("schema_id", 0))
             if cols is not None:
                 df = df.select(*cols)
@@ -316,7 +372,7 @@ class IcebergLiteTable:
             )
         parts = []
         for (seq, schema_id), paths in sorted(by_seq.items()):
-            df = spark.read.parquet(*paths)
+            df = _read_parquet(spark, paths)
             cols = _mapped_cols(schema_id)
             base = cols if cols is not None else ["*"]
             if need_meta:
@@ -339,13 +395,18 @@ class IcebergLiteTable:
             # delete keys reference files by the same absolute URI the
             # scan's _metadata produces (written from a live scan)
             del_paths = [os.path.join(self.path, e["file_path"]) for e in pos_dels]
-            dels = spark.read.parquet(*del_paths).select(
+            dels = _read_parquet(spark, del_paths, _POS_DELETE_SCHEMA).select(
                 F.col("file_path").alias("__file"), F.col("pos").alias("__pos")
             )
             out = out.join(F.broadcast(dels), ["__file", "__pos"], "left_anti")
-        for e, dseq in sorted(eq_dels, key=lambda t: t[1]):
-            keys = spark.read.parquet(os.path.join(self.path, e["file_path"]))
+        # equality deletes: key files that share a column set are unioned
+        # (positions __k0.., each tagged with its sequence number __dseq)
+        # and applied in ONE anti-join per set
+        key_sets: dict[tuple[str, ...], DataFrame] = {}
+        for e, dseq in eq_dels:
+            keys = _read_parquet(spark, [os.path.join(self.path, e["file_path"])])
             cols = e["equality_columns"]
+            names = cols
             # schema-tracked tables resolve key columns through FIELD
             # IDS: the key file is written under its era's names, but
             # the scanned rows carry the target schema's names — a
@@ -386,16 +447,20 @@ class IcebergLiteTable:
                         f"dropped field ids {dropped}; rewrite or expire "
                         "the delete before dropping its key column"
                     )
-                renamed = [by_id[i] for i in eq_ids]
-                keys = keys.select(
-                    *[F.col(c).alias(n) for c, n in zip(cols, renamed)]
-                )
-                cols = renamed
-            older = out.filter(F.col("__seq") < dseq).join(
-                F.broadcast(keys), cols, "left_anti"
+                names = [by_id[i] for i in eq_ids]
+            keys = keys.select(
+                *[F.col(c).alias(f"__k{i}") for i, c in enumerate(cols)],
+                F.lit(dseq).alias("__dseq"),
             )
-            newer = out.filter(F.col("__seq") >= dseq)
-            out = older.unionByName(newer)
+            prev = key_sets.get(tuple(names))
+            key_sets[tuple(names)] = keys if prev is None else prev.unionByName(keys)
+        for names, keys in key_sets.items():
+            # a row goes when a key matches (null keys never do) from a
+            # delete with a strictly larger sequence number than its own
+            cond = F.col("__seq") < F.col("__dseq")
+            for i, n in enumerate(names):
+                cond = cond & (F.col(n) == F.col(f"__k{i}"))
+            out = out.join(F.broadcast(keys), cond, "left_anti")
         return out.drop("__file", "__pos", "__seq")
 
     def read_incremental(
@@ -453,10 +518,10 @@ class IcebergLiteTable:
             any_files = self.data_files(to_sid)
             if not any_files:
                 raise ValueError(f"empty iceberg-lite table at {self.path}")
-            return spark.read.parquet(
-                os.path.join(self.path, any_files[0]["file_path"])
+            return _read_parquet(
+                spark, [os.path.join(self.path, any_files[0]["file_path"])]
             ).limit(0)
-        return spark.read.parquet(*paths)
+        return _read_parquet(spark, paths)
 
     @staticmethod
     def _stats_match(df_entry: dict, predicates) -> bool:
@@ -684,7 +749,7 @@ def write_position_deletes(
     data_paths = [
         os.path.join(path, e["file_path"]) for e, _s, c in triples if c == "data"
     ]
-    raw = spark.read.parquet(*data_paths).select(
+    raw = _read_parquet(spark, data_paths).select(
         F.col("_metadata.file_path").alias("file_path"),
         F.col("_metadata.row_index").alias("pos"),
         "*",

@@ -68,19 +68,21 @@ def table_bytes(sf_dir: str, name: str) -> int | None:
     Spark job, no data read. Scale gates read this to decide whether
     re-computing a derived frame (scan included) is cheaper than
     materializing it once (queries.tpch.persist_if_large); None when
-    the table is absent or unreadable so callers can pick their safe
-    side."""
+    the table is absent, unreadable or a directory with no *.parquet
+    file, so callers can pick their safe side (a 0 would read as "tiny"
+    and flip both size gates to their unsafe sides)."""
     try:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.isdir(path):
             # *.parquet only: sidecars (_SUCCESS, .crc) are not data and
             # would nudge the gate near its threshold (r9 ADVICE, low)
-            return sum(
+            sizes = [
                 os.path.getsize(os.path.join(dp, f))
                 for dp, _dirs, files in os.walk(path)
                 for f in files
                 if f.endswith(".parquet")
-            )
+            ]
+            return sum(sizes) if sizes else None
         return os.path.getsize(path)
     except Exception:
         return None

@@ -18,6 +18,8 @@ import json
 import sys
 import time
 
+from iceberg_query_engine_spark.queries.tpch import release_gated_persists
+
 
 def main() -> int:
     rnd = sys.argv[1] if len(sys.argv) > 1 else "0"
@@ -65,10 +67,6 @@ def main() -> int:
         # honor persist_if_large's ownership contract (r10): release
         # gated persists between queries so a large-sf sweep doesn't
         # accumulate MEMORY_AND_DISK caches across 293 entries
-        from iceberg_query_engine_spark.queries.tpch import (
-            release_gated_persists,
-        )
-
         release_gated_persists()
         spark.catalog.clearCache()
 

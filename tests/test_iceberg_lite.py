@@ -527,3 +527,168 @@ def test_expire_reclaims_delete_file_directories(spark, tmp_path):
     t = IcebergLiteTable(path)
     keys = sorted(r[0] for r in t.read(spark).select("n_nationkey").collect())
     assert keys == [1, 2, 4, 5, 7, 8, 10, 11, 13, 14]
+
+
+def _live(spark, path: str) -> dict:
+    """key -> value of the table's live rows; a key seen twice fails."""
+    rows = IcebergLiteTable(path).read(spark).collect()
+    out = {r[0]: r[1] for r in rows}
+    assert len(out) == len(rows), "duplicate live key"
+    return out
+
+
+def test_delete_merge_matches_model_under_seeded_churn(spark, tmp_path):
+    """Appends, upserts, equality deletes, position deletes and
+    compactions in a seeded order, each checked against a dict model.
+    The order always holds one key upserted twice in a row and an
+    equality delete followed by an append of the same key; a rename of
+    the key column between an upsert and the read sends field ids
+    through the merged anti-join."""
+    import random
+
+    from iceberg_query_engine_spark.sources.iceberg_lite import (
+        compact,
+        rename_column,
+        upsert_snapshot,
+        write_equality_deletes,
+        write_position_deletes,
+    )
+
+    rng = random.Random(20261017)
+    path = str(tmp_path / "churn_model")
+    key = "k"
+    model = {k: f"v{k}-0" for k in range(40)}
+    next_key = 40
+
+    def frame(rows: dict):
+        return spark.createDataFrame(
+            sorted(rows.items()), f"{key} bigint, v string"
+        )
+
+    def run(kind: str, step: int, keys: list | None = None) -> None:
+        nonlocal next_key
+        if kind == "append":
+            keys = keys or list(range(next_key, next_key + 5))
+            next_key = max(next_key, max(keys) + 1)
+            rows = {k: f"v{k}-{step}" for k in keys}
+            write_snapshot(frame(rows), path)
+            model.update(rows)
+        elif kind == "upsert":
+            keys = keys or rng.sample(sorted(model), 3) + [next_key]
+            next_key = max(next_key, max(keys) + 1)
+            rows = {k: f"v{k}-{step}" for k in keys}
+            upsert_snapshot(spark, path, frame(rows), [key])
+            model.update(rows)
+        elif kind == "eq_delete":
+            keys = keys or rng.sample(sorted(model), 2)
+            dels = spark.createDataFrame([(k,) for k in keys], f"{key} bigint")
+            write_equality_deletes(spark, path, dels, [key])
+            for k in keys:
+                model.pop(k, None)
+        elif kind == "pos_delete":
+            r = rng.randrange(7)
+            write_position_deletes(spark, path, f"{key} % 7 = {r}")
+            for k in [k for k in model if k % 7 == r]:
+                del model[k]
+        else:
+            compact(spark, path)
+        assert _live(spark, path) == model, f"step {step}: {kind}"
+
+    write_snapshot(frame(model), path)
+    kinds = ["append", "upsert", "eq_delete", "pos_delete", "compact"]
+    order: list[tuple[str, list | None]] = [(rng.choice(kinds), None) for _ in range(8)]
+    twice = rng.choice(sorted(model))
+    order[2:2] = [("upsert", [twice, next_key + 100]), ("upsert", [twice])]
+    gone = rng.choice(sorted(model.keys() - {twice}))
+    order[6:6] = [("eq_delete", [gone]), ("append", [gone])]
+    for step, (kind, keys) in enumerate(order, start=1):
+        run(kind, step, keys)
+    assert {"append", "upsert", "eq_delete", "pos_delete"} <= {k for k, _ in order}
+
+    run("upsert", len(order) + 1)
+    rename_column(path, "k", "key")
+    key = "key"
+    assert _live(spark, path) == model
+    after = ("upsert", "eq_delete", "append", "compact")
+    for step, kind in enumerate(after, start=len(order) + 2):
+        run(kind, step)
+
+
+def _spark_written_table_with_deletes(spark, sf_smoke: str, path: str) -> None:
+    from iceberg_query_engine_spark.sources.iceberg_lite import (
+        upsert_snapshot,
+        write_equality_deletes,
+        write_position_deletes,
+    )
+
+    nation = spark.read.parquet(f"{sf_smoke}/nation.parquet")
+    write_snapshot(nation.filter("n_nationkey < 20"), path)
+    write_position_deletes(spark, path, "n_nationkey % 5 = 0")
+    upsert_snapshot(
+        spark,
+        path,
+        nation.filter("n_nationkey IN (1, 2)").withColumn("n_regionkey", F.lit(9)),
+        ["n_nationkey"],
+    )
+    write_position_deletes(spark, path, "n_nationkey = 3")
+    dels = spark.createDataFrame([(2,), (4,)], "n_nationkey bigint")
+    write_equality_deletes(spark, path, dels, ["n_nationkey"])
+
+
+def test_read_starts_no_spark_job(spark, sf_smoke, tmp_path):
+    """Building the scan is metadata-only: every Parquet read takes its
+    schema from a file footer, so read() starts no Spark job even with
+    two position-delete and two equality-delete files live."""
+    path = str(tmp_path / "no_jobs")
+    _spark_written_table_with_deletes(spark, sf_smoke, path)
+    t = IcebergLiteTable(path)
+    kinds = [c for _e, _s, c in t._files_with_meta()]
+    assert kinds.count("position_deletes") == 2
+    assert kinds.count("equality_deletes") == 2
+
+    sc = spark.sparkContext
+    group = "iceberg-lite-read-no-jobs"
+    sc.setJobGroup(group, "read() must start no job")
+    try:
+        df = IcebergLiteTable(path).read(spark)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    rows = {r.n_nationkey: r.n_regionkey for r in df.collect()}
+    assert sorted(rows) == [1, 6, 7, 8, 9, 11, 12, 13, 14, 16, 17, 18, 19]
+    assert rows[1] == 9
+
+
+def test_read_falls_back_without_spark_footer(spark, tmp_path):
+    """A data file written outside Spark (pyarrow: no Spark schema in
+    the footer) is read through Spark's own schema inference."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_query_engine_spark.sources.iceberg_lite import (
+        _append_snapshot_files,
+        _footer_schema,
+        write_equality_deletes,
+    )
+
+    path = str(tmp_path / "pyarrow_lite")
+    os.makedirs(os.path.join(path, "data"))
+    rel = "data/pyarrow-0.parquet"
+    pq.write_table(
+        pa.table({"id": pa.array(range(6), pa.int64()), "s": list("abcdef")}),
+        os.path.join(path, rel),
+    )
+    assert _footer_schema(os.path.join(path, rel)) is None
+    _append_snapshot_files(
+        path,
+        [{"data_file": {"file_path": rel, "file_format": "PARQUET", "record_count": 6}}],
+        "data",
+        "append",
+    )
+    dels = spark.createDataFrame([(1,), (4,)], "id bigint")
+    write_equality_deletes(spark, path, dels, ["id"])
+    rows = sorted(tuple(r) for r in IcebergLiteTable(path).read(spark).collect())
+    assert rows == [(0, "a"), (2, "c"), (3, "d"), (5, "f")]

@@ -42,10 +42,14 @@ GATED_OPS = [
 ]
 
 
-def test_table_bytes_reads_disk_size(sf_smoke):
+def test_table_bytes_reads_disk_size(sf_smoke, tmp_path):
     b = table_bytes(sf_smoke, "lineitem")
     assert b is not None and b > 1000
     assert table_bytes(sf_smoke, "no_such_table") is None
+    # a directory with no parquet files is unknown, not empty
+    (tmp_path / "hollow.parquet").mkdir()
+    (tmp_path / "hollow.parquet" / "_SUCCESS").write_text("")
+    assert table_bytes(str(tmp_path), "hollow") is None
 
 
 def test_gate_off_below_threshold(spark, sf_smoke, monkeypatch):
