@@ -33,19 +33,6 @@ def cosine_similarity(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(dots / (na * nb))
 
 
-@pandas_udf("double")
-def dot_product(a: pd.Series, b: pd.Series) -> pd.Series:
-    ma = np.vstack([np.asarray(x, dtype=np.float64) for x in a])
-    mb = np.vstack([np.asarray(x, dtype=np.float64) for x in b])
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-
-@pandas_udf("double")
-def l2_norm(a: pd.Series) -> pd.Series:
-    ma = np.vstack([np.asarray(x, dtype=np.float64) for x in a])
-    return pd.Series(np.sqrt(np.einsum("ij,ij->i", ma, ma)))
-
-
 def nearest_centroid_udf(centroid_vecs: np.ndarray, centroid_ids: np.ndarray):
     """Factory: pandas UDF mapping a vector column to its nearest
     centroid `struct<bucket bigint, c_cos double>` (argmax rounded

@@ -27,13 +27,18 @@ so reads need no partition-column reconstruction.
 Scan shape: planning is metadata-only and starts no Spark job. Files
 are listed and pruned from the JSON manifests, and every Parquet read
 takes its schema from a file footer (the Spark schema key that Spark's
-own inference reads, via pyarrow) instead of an inference job. The kept
-data files are read in one scan per (sequence number, schema id) group
-and unioned. Position deletes are one broadcast anti-join; equality
-deletes are one broadcast anti-join per equality-column set, whose key
-files are unioned with their sequence numbers. Spark then parallelizes
-over row groups. In production you'd use the real Iceberg connector;
-this exists for format parity with the reference.
+own inference reads, via pyarrow) instead of an inference job. One
+helper (`IcebergLiteTable._scan`) builds every data scan: read(),
+read_incremental() and write_position_deletes(). It reads all kept data
+files whose schema id and footer schema are equal in ONE Parquet scan,
+projected once to the target schema; files without a Spark footer keep
+one scan per (sequence number, schema id) group. When deletes apply,
+each row's sequence number comes from one literal map keyed on
+`_metadata.file_name`. Position deletes are one broadcast anti-join;
+equality deletes are one broadcast anti-join per equality-column set,
+whose key files are unioned with their sequence numbers. Spark then
+parallelizes over row groups. In production you'd use the real Iceberg
+connector; this exists for format parity with the reference.
 """
 
 from __future__ import annotations
@@ -48,6 +53,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from .registry import _parse_bytes
 
 # the footer key Spark's own Parquet schema inference reads first
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -112,10 +119,9 @@ def _read_parquet(
     The schema is `schema` if given, else the Spark schema in the first
     path's footer. That is the key Spark's inference reads, and without
     mergeSchema inference also takes one file's schema for all paths.
-    read() passes groups written by ONE Spark job (one snapshot and
-    schema id, or one delete directory), so the first footer stands for
-    every file. Files without the key (e.g. written by pyarrow) fall back
-    to inference."""
+    Callers pass files whose footers are equal (a delete directory is
+    one write job), so the first footer stands for every file. Files
+    without the key (e.g. written by pyarrow) fall back to inference."""
     schema = schema if schema is not None else _footer_schema(paths[0])
     if schema is None:
         return spark.read.parquet(*paths)
@@ -255,6 +261,85 @@ class IcebergLiteTable:
         return out
 
     # -- scan -------------------------------------------------------------
+    def _mapped_cols(self, target_schema: dict | None, file_schema_id: int) -> list | None:
+        """Projection of a file schema to the target schema through field
+        ids, or None for identity."""
+        if target_schema is None or file_schema_id == target_schema["schema_id"]:
+            return None
+        fs = self.schema_by_id(file_schema_id)
+        by_id = {f["id"]: f["name"] for f in fs["fields"]}
+        return [
+            F.col(by_id[f["id"]]).alias(f["name"])
+            if f["id"] in by_id
+            else F.lit(None).cast(f["type"]).alias(f["name"])
+            for f in target_schema["fields"]
+        ]
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        files: list[tuple[str, int, int]],
+        target_schema: dict | None,
+        with_meta: bool = False,
+    ) -> DataFrame:
+        """Data files, given as (table-relative path, sequence number,
+        schema id), read under `target_schema` (None: as written).
+
+        Files group by (sequence number, schema id), so one write job,
+        and each group's first footer stands for the group. Groups whose
+        schema id and footer schema are equal share ONE Parquet scan,
+        projected once through `_mapped_cols`; a group without a Spark
+        footer keeps its own scan, read through inference. Scans are
+        unioned by name, which widens types that differ between footers
+        (an `int` file then a `bigint` one).
+
+        with_meta adds `__file` and `__pos` (the position-delete key)
+        and `__seq`, looked up in one literal map from
+        `_metadata.file_name` to the file's sequence number. A basename
+        already in a scan starts another scan, so the map stays exact;
+        engine-written names carry a uuid, so only hand-built tables
+        split this way."""
+        groups: dict[tuple[int, int], list[str]] = {}
+        for rel, seq, schema_id in files:
+            groups.setdefault((seq, schema_id), []).append(os.path.join(self.path, rel))
+        # scan key → (footer schema, scans as {basename: (path, seq)});
+        # a footer-less group's key holds its int seq where others hold
+        # the footer JSON, so it never merges
+        scans: dict[tuple, tuple[StructType | None, list[dict[str, tuple[str, int]]]]] = {}
+        for (seq, schema_id), paths in sorted(groups.items()):
+            footer = _footer_schema(paths[0])
+            key = (schema_id, footer.json() if footer is not None else seq)
+            splits = scans.setdefault(key, (footer, []))[1]
+            for p in paths:
+                name = os.path.basename(p)
+                by_name = next((s for s in splits if name not in s), None)
+                if by_name is None:
+                    by_name = {}
+                    splits.append(by_name)
+                by_name[name] = (p, seq)
+        parts = []
+        for (schema_id, _), (footer, splits) in scans.items():
+            cols = self._mapped_cols(target_schema, schema_id)
+            for by_name in splits:
+                df = _read_parquet(spark, [p for p, _ in by_name.values()], footer)
+                if with_meta:
+                    seqs = F.map_from_arrays(
+                        F.lit(list(by_name)), F.lit([s for _, s in by_name.values()])
+                    )
+                    df = df.select(
+                        *(cols or ["*"]),
+                        F.col("_metadata.file_path").alias("__file"),
+                        F.col("_metadata.row_index").alias("__pos"),
+                        seqs[F.col("_metadata.file_name")].alias("__seq"),
+                    )
+                elif cols is not None:
+                    df = df.select(*cols)
+                parts.append(df)
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
     def read(
         self,
         spark: SparkSession,
@@ -276,9 +361,10 @@ class IcebergLiteTable:
         (iceberg.rs:271-330). Spark re-applies exact filtering; pruning
         only shrinks the file list.
 
-        Building the frame starts no Spark job: each data-file group
-        (one sequence number and schema id, so one write job) and each
-        delete file is read under the schema in its first file's footer.
+        Building the frame starts no Spark job: every Parquet read takes
+        its schema from a footer. The kept data files are read by
+        `_scan`, in one scan per schema id and footer schema, and each
+        delete file is read under its own footer.
 
         Delete files (the v2 feature the reference's header claims but
         never implements) are applied after pruning: positional deletes
@@ -286,7 +372,8 @@ class IcebergLiteTable:
         equality deletes in one anti-join per equality-column set. The
         set's key files are unioned, each tagged with its sequence
         number, and a row is dropped when a key matches (null keys never
-        do) and the row's sequence number is strictly smaller. Every
+        do) and the row's sequence number (from `_scan`'s map) is
+        strictly smaller. Every
         anti-join broadcasts the (small) delete side — the same physical
         shape the real Iceberg Spark reader produces.
         """
@@ -316,21 +403,6 @@ class IcebergLiteTable:
         else:
             target_schema = self.current_schema()
 
-        def _mapped_cols(file_schema_id: int) -> list | None:
-            """Projection to the target schema, or None for identity."""
-            if target_schema is None:
-                return None
-            if file_schema_id == target_schema["schema_id"]:
-                return None
-            fs = self.schema_by_id(file_schema_id)
-            by_id = {f["id"]: f["name"] for f in fs["fields"]}
-            return [
-                F.col(by_id[f["id"]]).alias(f["name"])
-                if f["id"] in by_id
-                else F.lit(None).cast(f["type"]).alias(f["name"])
-                for f in target_schema["fields"]
-            ]
-
         triples = self._files_with_meta(snapshot_id)
         files = [(e, seq) for e, seq, c in triples if c == "data"]
         pos_dels = [e for e, _s, c in triples if c == "position_deletes"]
@@ -354,40 +426,12 @@ class IcebergLiteTable:
             # preserve schema from any file; empty result
             if not files:
                 raise ValueError(f"empty iceberg-lite table at {self.path}")
-            any_entry = files[0][0]
-            df = _read_parquet(spark, [os.path.join(self.path, any_entry["file_path"])])
-            cols = _mapped_cols(any_entry.get("schema_id", 0))
-            if cols is not None:
-                df = df.select(*cols)
-            return df.limit(0)
+            any_entry, seq = files[0]
+            any_file = (any_entry["file_path"], seq, any_entry.get("schema_id", 0))
+            return self._scan(spark, [any_file], target_schema).limit(0)
 
         need_meta = bool(pos_dels) or bool(eq_dels)
-        # group kept files by (sequence number, write schema) so
-        # equality deletes can respect the data-seq < delete-seq rule
-        # and each group gets one id-based projection
-        by_seq: dict[tuple[int, int], list[str]] = {}
-        for rel, seq, schema_id in kept:
-            by_seq.setdefault((seq, schema_id), []).append(
-                os.path.join(self.path, rel)
-            )
-        parts = []
-        for (seq, schema_id), paths in sorted(by_seq.items()):
-            df = _read_parquet(spark, paths)
-            cols = _mapped_cols(schema_id)
-            base = cols if cols is not None else ["*"]
-            if need_meta:
-                df = df.select(
-                    *base,
-                    F.col("_metadata.file_path").alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                    F.lit(seq).alias("__seq"),
-                )
-            elif cols is not None:
-                df = df.select(*cols)
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = self._scan(spark, kept, target_schema, with_meta=need_meta)
         if not need_meta:
             return out
 
@@ -484,7 +528,10 @@ class IcebergLiteTable:
 
         Metadata-only planning: the manifest diff selects whole files,
         so the scan reads ONLY the new files — incremental cost is
-        proportional to new data, never to table size.
+        proportional to new data, never to table size. The files are
+        read by `_scan` under the table's current schema, as read()
+        does, so files written under other footers or schema ids (a
+        widened type, a renamed column) read correctly together.
         """
         to_sid = (
             to_snapshot_id if to_snapshot_id is not None else self.current_snapshot_id()
@@ -503,7 +550,7 @@ class IcebergLiteTable:
         snap = self._snapshot(to_sid)
         with open(os.path.join(self.path, snap["manifest_list"])) as f:
             manifests = json.load(f)
-        paths: list[str] = []
+        files: list[tuple[str, int, int]] = []
         for m in manifests:
             if m.get("content", "data") != "data":
                 continue
@@ -511,17 +558,21 @@ class IcebergLiteTable:
                 continue
             with open(os.path.join(self.path, m["manifest_path"])) as f:
                 manifest = json.load(f)
+            seq = m.get("sequence_number", 0)
             for entry in manifest.get("entries", []):
-                paths.append(os.path.join(self.path, entry["data_file"]["file_path"]))
-        self.metrics = ScanMetrics(files_total=len(paths), files_scanned=len(paths))
-        if not paths:
+                fe = entry["data_file"]
+                files.append((fe["file_path"], seq, fe.get("schema_id", 0)))
+        self.metrics = ScanMetrics(files_total=len(files), files_scanned=len(files))
+        target_schema = self.current_schema()
+        if not files:
             any_files = self.data_files(to_sid)
             if not any_files:
                 raise ValueError(f"empty iceberg-lite table at {self.path}")
-            return _read_parquet(
-                spark, [os.path.join(self.path, any_files[0]["file_path"])]
+            fe = any_files[0]
+            return self._scan(
+                spark, [(fe["file_path"], 0, fe.get("schema_id", 0))], target_schema
             ).limit(0)
-        return _read_parquet(spark, paths)
+        return self._scan(spark, files, target_schema)
 
     @staticmethod
     def _stats_match(df_entry: dict, predicates) -> bool:
@@ -741,20 +792,24 @@ def write_position_deletes(
     """DELETE WHERE <condition> as an Iceberg-v2 positional delete:
     scan the current snapshot with file/row metadata, keep matching
     rows' (file_path, pos) pairs, commit them as a delete snapshot.
-    The data files are never rewritten — merge-on-read."""
+    The data files are never rewritten — merge-on-read.
+
+    The condition names columns of the table's current schema: the
+    data files are scanned through read()'s helper, so files written
+    before a rename match under the new name, and an old name does not
+    resolve."""
     table = IcebergLiteTable(path)
-    # scan raw data files with metadata columns: the (file, pos) keys
-    # are exactly what the condition matches in the current snapshot
-    triples = table._files_with_meta()
-    data_paths = [
-        os.path.join(path, e["file_path"]) for e, _s, c in triples if c == "data"
+    # the data files with their (file, pos) keys, deletes not applied:
+    # a key that is already deleted is harmless to delete again
+    files = [
+        (e["file_path"], seq, e.get("schema_id", 0))
+        for e, seq, c in table._files_with_meta()
+        if c == "data"
     ]
-    raw = _read_parquet(spark, data_paths).select(
-        F.col("_metadata.file_path").alias("file_path"),
-        F.col("_metadata.row_index").alias("pos"),
-        "*",
+    scan = table._scan(spark, files, table.current_schema(), with_meta=True)
+    keys = scan.filter(condition).select(
+        F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
     )
-    keys = raw.filter(condition).select("file_path", "pos")
     rel = f"data/delete-pos-{table.current_snapshot_id() + 1}-{uuid.uuid4().hex[:8]}"
     n, size = _write_delete_file(keys, path, rel)
     entry = {
@@ -1355,9 +1410,17 @@ def compact(
     old data + delete manifests. Earlier snapshots stay time-travelable
     (their manifest lists are untouched). At 100 TB this is the
     periodic maintenance job that keeps read amplification bounded —
-    here the rewrite funnels through the same single-scan read()."""
+    here the rewrite funnels through the same read().
+
+    The rewrite writes files of the size the session reads in one task:
+    the merged rows are coalesced to ceil(live data-file bytes /
+    `spark.sql.files.maxPartitionBytes`) tasks, the bytes taken from
+    the manifest's `file_size_in_bytes`. A partitioned compaction
+    still writes one file per partition value per task."""
     table = IcebergLiteTable(path)
-    df = table.read(spark)
+    live_bytes = sum(e.get("file_size_in_bytes", 0) for e in table.data_files())
+    split = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    df = table.read(spark).coalesce(max(1, -(-live_bytes // split)))
     snapshot_id = (table.current_snapshot_id() or 0) + 1
     entries = _write_data_entries(df, path, snapshot_id, partition_by, stats_columns)
     return _append_snapshot_files(path, entries, "data", "replace", replace=True)

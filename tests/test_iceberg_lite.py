@@ -692,3 +692,166 @@ def test_read_falls_back_without_spark_footer(spark, tmp_path):
     write_equality_deletes(spark, path, dels, ["id"])
     rows = sorted(tuple(r) for r in IcebergLiteTable(path).read(spark).collect())
     assert rows == [(0, "a"), (2, "c"), (3, "d"), (5, "f")]
+
+
+def _scans_reading(df, column: str) -> int:
+    """Parquet scans in the executed plan whose output holds `column`."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(rf"FileScan parquet \[[^\]]*\b{column}#", plan))
+
+
+def test_churn_shaped_read_is_one_data_scan(spark, sf_smoke, tmp_path):
+    """Three appends, an upsert and a position delete under one schema
+    read through ONE data-file scan; the sequence numbers that the
+    upsert's equality delete checks come from the per-file map."""
+    from iceberg_query_engine_spark.sources.iceberg_lite import (
+        upsert_snapshot,
+        write_position_deletes,
+    )
+
+    path = str(tmp_path / "one_scan")
+    nation = spark.read.parquet(f"{sf_smoke}/nation.parquet")
+    for lo, hi in ((0, 9), (10, 14), (15, 19)):
+        write_snapshot(nation.filter(f"n_nationkey BETWEEN {lo} AND {hi}"), path)
+    batch = nation.filter("n_nationkey IN (2, 12, 17)").withColumn(
+        "n_regionkey", F.col("n_regionkey") + 100
+    )
+    upsert_snapshot(spark, path, batch, ["n_nationkey"])
+    write_position_deletes(spark, path, "n_nationkey % 4 = 0")
+
+    df = IcebergLiteTable(path).read(spark)
+    # n_name is in no delete file, so this counts the data-file scans
+    assert _scans_reading(df, "n_name") == 1
+    assert _scans_reading(df, "n_nationkey") == 2  # + the upsert's key file
+    rows = {r.n_nationkey: r.n_regionkey for r in df.collect()}
+    base = {r.n_nationkey: r.n_regionkey for r in nation.collect()}
+    assert sorted(rows) == [k for k in range(20) if k % 4]
+    assert all(rows[k] == base[k] + (100 if k in (2, 17) else 0) for k in rows)
+
+
+def test_read_widens_int_then_bigint_appends(spark, tmp_path):
+    """An `id int` append then an `id bigint` append have different
+    footers, so they are separate scans that the union widens; the
+    incremental scan reads them the same way."""
+    from iceberg_query_engine_spark.sources.iceberg_lite import write_equality_deletes
+
+    path = str(tmp_path / "widen")
+    write_snapshot(spark.createDataFrame([(1,), (2,)], "id int"), path)
+    write_snapshot(spark.createDataFrame([(3,), (1 << 40,)], "id bigint"), path)
+    t = IcebergLiteTable(path)
+    df = t.read(spark)
+    assert df.schema.simpleString() == "struct<id:bigint>"
+    assert sorted(r.id for r in df.collect()) == [1, 2, 3, 1 << 40]
+    assert sorted(r.id for r in t.read_incremental(spark, 0).collect()) == [1, 2, 3, 1 << 40]
+
+    write_equality_deletes(spark, path, spark.createDataFrame([(2,), (3,)], "id bigint"), ["id"])
+    assert sorted(r.id for r in t.read(spark).collect()) == [1, 1 << 40]
+
+
+def test_same_basename_files_keep_their_sequence_numbers(spark, tmp_path):
+    """Two hand-built data files share a basename in different
+    directories, with an equality delete committed between them. Each
+    keeps its own sequence number, so the delete removes its key from
+    the older file only."""
+    import glob
+    import os
+
+    from iceberg_query_engine_spark.sources.iceberg_lite import (
+        _append_snapshot_files,
+        write_equality_deletes,
+    )
+
+    path = str(tmp_path / "same_name")
+
+    def add(sub: str, rows: list) -> None:
+        staging = os.path.join(path, f"_stage_{sub}")
+        spark.createDataFrame(rows, "id bigint, src string").coalesce(1).write.parquet(staging)
+        rel = f"data/{sub}/part.parquet"
+        os.makedirs(os.path.join(path, "data", sub))
+        os.replace(glob.glob(os.path.join(staging, "*.parquet"))[0], os.path.join(path, rel))
+        entry = {"data_file": {"file_path": rel, "record_count": len(rows)}}
+        _append_snapshot_files(path, [entry], "data", "append")
+
+    add("a", [(1, "a"), (2, "a"), (3, "a")])
+    write_equality_deletes(spark, path, spark.createDataFrame([(2,)], "id bigint"), ["id"])
+    add("b", [(2, "b"), (3, "b"), (4, "b")])
+    rows = sorted(tuple(r) for r in IcebergLiteTable(path).read(spark).collect())
+    assert rows == [(1, "a"), (2, "b"), (3, "a"), (3, "b"), (4, "b")]
+
+
+def test_compact_writes_target_size_files(spark, sf_oracle, tmp_path):
+    """compact() leaves ceil(live bytes / maxPartitionBytes) data files
+    (one at test scale, from many small ones), and a partitioned
+    compaction one file per partition value."""
+    import math
+
+    from iceberg_query_engine_spark.sources.iceberg_lite import (
+        compact,
+        write_position_deletes,
+    )
+    from iceberg_query_engine_spark.sources.registry import _parse_bytes
+
+    path = str(tmp_path / "compact_size")
+    orders = spark.read.parquet(f"{sf_oracle}/orders.parquet").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    for lo in (0, 5000, 10000):
+        write_snapshot(
+            orders.filter(F.col("o_orderkey").between(lo, lo + 3999)).repartition(4), path
+        )
+    write_position_deletes(spark, path, "o_orderkey % 10 = 0")
+    t = IcebergLiteTable(path)
+    assert len(t.data_files()) >= 10
+    want = orders.filter("o_orderkey % 5000 < 4000 AND o_orderkey % 10 != 0").count()
+
+    live = sum(e["file_size_in_bytes"] for e in t.data_files())
+    split = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    compact(spark, path)
+    assert len(t.data_files()) == math.ceil(live / split) == 1
+    assert t.read(spark).count() == want
+
+    # half the live bytes per task: two files
+    write_snapshot(orders.filter("o_orderkey >= 14000").repartition(4), path)
+    live = sum(e["file_size_in_bytes"] for e in t.data_files())
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(-(-live // 2)))
+    try:
+        compact(spark, path)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert len(t.data_files()) == 2
+
+    compact(spark, path, partition_by="o_orderstatus")
+    files = t.data_files()
+    statuses = [f["partition"]["o_orderstatus"] for f in files]
+    assert sorted(statuses) == sorted(set(statuses)) == ["F", "O", "P"]
+    assert t.read(spark).count() == want + orders.filter("o_orderkey >= 14000").count()
+
+
+def test_position_delete_condition_uses_current_schema(spark, tmp_path):
+    """write_position_deletes scans under the current schema: after a
+    rename, the new name matches rows of both eras and the old name
+    does not resolve."""
+    from pyspark.errors import AnalysisException
+
+    from iceberg_query_engine_spark.sources.iceberg_lite import (
+        rename_column,
+        write_position_deletes,
+    )
+
+    path = str(tmp_path / "pos_rename")
+    write_snapshot(
+        spark.createDataFrame([(k, f"v{k}") for k in range(10)], "k bigint, v string"), path
+    )
+    rename_column(path, "k", "key")
+    write_snapshot(
+        spark.createDataFrame([(k, f"v{k}") for k in range(10, 20)], "key bigint, v string"), path
+    )
+    write_position_deletes(spark, path, "key % 2 = 0")
+    t = IcebergLiteTable(path)
+    assert sorted(r.key for r in t.read(spark).collect()) == list(range(1, 20, 2))
+    with pytest.raises(AnalysisException):
+        write_position_deletes(spark, path, "k % 3 = 0")
+    assert sorted(r.key for r in t.read(spark).collect()) == list(range(1, 20, 2))
