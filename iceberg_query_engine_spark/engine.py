@@ -24,7 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions import compat, dialect
-from .session import get_spark
+from .session import codegen_counts, get_spark
 from .sources import registry
 
 
@@ -33,7 +33,11 @@ class QueryMetrics:
     """Mirrors the reference's QueryMetrics (context.rs:294-309):
     parse/plan/execute wall times plus executor spill totals pulled
     from the executed plan's SQL metrics (the Spark analogue of the
-    reference's memory-pool spill counters)."""
+    reference's memory-pool spill counters). ``codegen_compiles`` /
+    ``codegen_ms`` are the classes Janino compiled over analysis plus
+    collect (session.codegen_counts deltas; 0 when every class was
+    cached). The counter is JVM-global, so queries running concurrently
+    in one JVM blend into each other's counts."""
 
     parse_ms: float = 0.0
     plan_ms: float = 0.0
@@ -41,6 +45,8 @@ class QueryMetrics:
     total_ms: float = 0.0
     spill_bytes: int = 0
     output_rows: int = 0
+    codegen_compiles: int = 0
+    codegen_ms: float = 0.0
 
 
 @dataclass
@@ -117,11 +123,13 @@ class Engine:
         t0 = time.perf_counter()
         translated = dialect.translate(query)
         t1 = time.perf_counter()
+        c0, ms0 = codegen_counts(self.spark)
         df = self.spark.sql(translated)
         df.schema  # force analysis so plan_ms covers Catalyst work
         t2 = time.perf_counter()
         rows = df.collect()
         t3 = time.perf_counter()
+        c1, ms1 = codegen_counts(self.spark)
         return QueryResult(
             rows=rows,
             schema=[(f.name, f.dataType.simpleString()) for f in df.schema.fields],
@@ -133,6 +141,8 @@ class Engine:
                 total_ms=(t3 - t0) * 1000,
                 spill_bytes=_spill_bytes(df),
                 output_rows=len(rows),
+                codegen_compiles=c1 - c0,
+                codegen_ms=ms1 - ms0,
             ),
         )
 

@@ -600,23 +600,16 @@ def _lsh_topk(
     vector crosses Arrow once with its bucket id, and the kernel masks
     per query before the partial top-k. Same candidate set and
     tie-break as the bucket-equality join it replaces."""
-    import os
-
     import numpy as np
 
     from ..functions.vector import multi_query_topk_fn
+    from ..sources.registry import table_bytes
 
     (embeddings,) = tables(spark, sf_dir, "embeddings")
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isdir(path):
-        corpus_bytes = sum(
-            os.path.getsize(os.path.join(dp, fn))
-            for dp, _d, fns in os.walk(path)
-            for fn in fns
-        )
-    else:
-        corpus_bytes = os.path.getsize(path) if os.path.exists(path) else 0
-    hof = corpus_bytes < _LSH_CODEGEN_MIN_BYTES
+    # unknown size → the codegen chain: the HOF fold is the one that
+    # goes slow at scale, the chain only pays a fixed compile cost
+    corpus_bytes = table_bytes(sf_dir, "embeddings")
+    hof = corpus_bytes is not None and corpus_bytes < _LSH_CODEGEN_MIN_BYTES
     e = embeddings.select(
         "vec_id",
         _as_double(F.col("embedding")).alias("v"),

@@ -144,20 +144,12 @@ BUCKET_SPECS: dict[str, list[str]] = {
     "partsupp": ["ps_suppkey", "ps_partkey"],
 }
 
-# Above this size the bucketed write skips the one-file-per-bucket
-# repartition: the exchange needs ~2x the table's parquet bytes in
-# transient shuffle disk, which neither this VM nor a sane ingest
-# pipeline pays for a layout nicety (see the write path below).
+# Above this size (or when registry.table_bytes cannot tell it) the
+# bucketed write skips the one-file-per-bucket repartition: the
+# exchange needs ~2x the table's parquet bytes in transient shuffle
+# disk, which neither this VM nor a sane ingest pipeline pays for a
+# layout nicety (see the write path below).
 BUCKET_SHUFFLE_MAX_BYTES = 8 << 30
-
-
-def _table_bytes(path: str) -> int:
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-    return os.path.getsize(path) if os.path.exists(path) else 0
 
 
 _BUCKET_SIDECAR = "_bucket_count"
@@ -251,6 +243,8 @@ def register_catalog_layout(
     """
     import shutil
 
+    from ..sources.registry import table_bytes
+
     if buckets is None:
         buckets = pick_bucket_count(data_dir)
     db = f"tpch_{sf_name.replace('.', '_')}"
@@ -291,7 +285,9 @@ def register_catalog_layout(
                     f"SORTED BY ({', '.join(cols)}) INTO {t_buckets} BUCKETS "
                     f"LOCATION '{loc}'"
                 )
-            elif _table_bytes(path) <= BUCKET_SHUFFLE_MAX_BYTES:
+            elif (size := table_bytes(data_dir, t)) is not None and (
+                size <= BUCKET_SHUFFLE_MAX_BYTES
+            ):
                 # one file per bucket so sorted-bucket scans stay sorted
                 src = spark.read.parquet(path)
                 (
@@ -302,7 +298,8 @@ def register_catalog_layout(
                 )
                 _write_bucket_sidecar(loc, buckets)
             else:
-                # Big facts (sf100 lineitem = 19 GB parquet): the
+                # Big facts (sf100 lineitem = 19 GB parquet), or a size
+                # the walker cannot read (the safe side): the
                 # repartition exchange row-serializes the whole table
                 # (~2x parquet bytes of transient shuffle disk), which a
                 # single-disk bench box can't hold and a 1000-executor

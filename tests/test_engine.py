@@ -151,6 +151,10 @@ def test_engine_metrics_parity(engine):
     assert m.total_ms > 0 and m.execute_ms > 0 and m.plan_ms >= 0
     assert m.parse_ms >= 0 and m.spill_bytes >= 0
     assert m.output_rows == res.row_count == 1
+    assert m.codegen_compiles >= 0 and m.codegen_ms >= 0
+    # every class the first run generated is now cached
+    again = engine.sql("SELECT COUNT(*) AS n FROM lineitem").metrics
+    assert again.codegen_compiles == 0 and again.codegen_ms == 0
 
 
 def test_engine_timezone_functions(engine):

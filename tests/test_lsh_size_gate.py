@@ -28,3 +28,14 @@ def test_small_corpus_picks_hof_path(spark, sf_oracle):
     df = sim.sim_lsh_topk(spark, sf_oracle)
     plan = pi.formatted_plan(df)
     assert "aggregate(transform(" in plan or "aggregate(" in plan
+
+
+def test_unknown_size_picks_codegen_chain(spark, sf_oracle, monkeypatch):
+    # a size the walker cannot read takes the gate's safe side, the
+    # codegen chain: no interpreted HOF fold in the plan
+    from iceberg_query_engine_spark.plans import introspect as pi
+    from iceberg_query_engine_spark.sources import registry
+
+    monkeypatch.setattr(registry, "table_bytes", lambda sf_dir, name: None)
+    plan = pi.formatted_plan(sim.sim_lsh_topk(spark, sf_oracle))
+    assert "aggregate(" not in plan and "element_at(" in plan, plan

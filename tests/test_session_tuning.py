@@ -1,10 +1,14 @@
 """Size-aware session tuning (r4 verdict #2): the sf10-winning config
 lives in session.tune_for_corpus so any session inherits it by input
-size, not just the bench harness."""
+size, not just the bench harness. And the session caches its whole
+generated-class working set: a warm op compiles nothing new after other
+ops ran in between, where Spark's default 100-entry cache would have
+evicted its classes."""
 
 from __future__ import annotations
 
 from iceberg_query_engine_spark import session as S
+from iceberg_query_engine_spark.queries import catalog
 
 
 def test_corpus_bytes_counts_parquet(sf_oracle):
@@ -60,3 +64,28 @@ def test_sf10_corpus_floors_split_at_16m(spark, sf_oracle, monkeypatch):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+# In a fresh JVM at sf0.001 these compile 87 + 57 + 35 classes, more
+# than Spark's default cache of 100 holds: at 100 entries the rerun of
+# the first op recompiles 79 of its 87 classes.
+CYCLE = ("dedup_clusters", "dedup_minhash_lsh", "text_tfidf")
+
+
+def test_fixture_session_carries_cache_size(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        S.CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_warm_op_recompiles_nothing_after_a_cycle(spark, sf_smoke):
+    ops = catalog.all_queries()
+
+    def compiles(name: str) -> int:
+        before, _ = S.codegen_counts(spark)
+        ops[name](spark, sf_smoke).collect()
+        return S.codegen_counts(spark)[0] - before
+
+    for name in CYCLE:
+        compiles(name)
+    assert compiles(CYCLE[0]) <= 5
