@@ -517,12 +517,9 @@ def main(argv: list[str] | None = None) -> int:
             print(f"main rolled back to snapshot {sid}")
         elif args.action == "schema":
             cur = t.current_schema()
-            if cur is None:
-                print("schema tracking not active (legacy table)")
-            else:
-                print(f"current schema id {cur['schema_id']}")
-                for f in cur["fields"]:
-                    print(f"  {f['id']:>3}  {f['name']:<24} {f['type']}")
+            print(f"current schema id {cur['schema_id']}")
+            for f in cur["fields"]:
+                print(f"  {f['id']:>3}  {f['name']:<24} {f['type']}")
         elif args.action == "rename-column":
             if not (args.old and args.new):
                 p.error("rename-column requires --old and --new")

@@ -29,14 +29,23 @@ from .tpch import tables
 _CACHE: dict[str, str] = {}
 _DEL_CACHE: dict[str, str] = {}
 
+# a new root, not "iceberg_lite": tables cached under the old one may
+# predate schema-at-create, which reads refuse
+_CACHE_ROOT = "iceberg_lite_schema0"
+
+
+def _cache_path(sf_dir: str, name: str) -> str:
+    """Where the fixture table `name` built from `sf_dir` is cached."""
+    return os.path.join(
+        tempfile.gettempdir(), _CACHE_ROOT, sf_dir.strip("/").replace("/", "_"), name
+    )
+
 
 def _table(spark: SparkSession, sf_dir: str) -> str:
     key = sf_dir
     if key in _CACHE and os.path.exists(_CACHE[key]):
         return _CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(), "iceberg_lite", sf_dir.strip("/").replace("/", "_"), "orders"
-    )
+    path = _cache_path(sf_dir, "orders")
     if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(
@@ -109,12 +118,7 @@ def _delete_table(spark: SparkSession, sf_dir: str) -> str:
     key = sf_dir
     if key in _DEL_CACHE and os.path.exists(_DEL_CACHE[key]):
         return _DEL_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_del",
-    )
+    path = _cache_path(sf_dir, "orders_del")
     if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
@@ -167,12 +171,7 @@ def _upsert_table(spark: SparkSession, sf_dir: str) -> str:
     key = sf_dir
     if key in _UPSERT_CACHE and os.path.exists(_UPSERT_CACHE[key]):
         return _UPSERT_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_upsert",
-    )
+    path = _cache_path(sf_dir, "orders_upsert")
     if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
@@ -263,12 +262,8 @@ def _ivm_agg_table(spark: SparkSession, sf_dir: str) -> str:
     key = sf_dir
     if key in _IVM_CACHE and os.path.exists(_IVM_CACHE[key]):
         return _IVM_CACHE[key]
-    base = os.path.join(
-        tempfile.gettempdir(), "iceberg_lite", sf_dir.strip("/").replace("/", "_")
-    )
-    src_path, agg_path = os.path.join(base, "orders_ivm_src"), os.path.join(
-        base, "orders_ivm_agg"
-    )
+    src_path = _cache_path(sf_dir, "orders_ivm_src")
+    agg_path = _cache_path(sf_dir, "orders_ivm_agg")
     if not os.path.exists(os.path.join(agg_path, "metadata", "v0.metadata.json")):
         (orders,) = tables(spark, sf_dir, "orders")
         s1 = write_snapshot(orders.filter(F.col("o_orderkey") < 500), src_path)
@@ -391,12 +386,7 @@ def iceberg_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.iceberg_lite import compact, expire_snapshots
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_expire",
-    )
+    path = _cache_path(sf_dir, "orders_expire")
     # expiry MUTATES table state: rebuild fresh each call (idempotence)
     shutil.rmtree(path, ignore_errors=True)
     (orders,) = tables(spark, sf_dir, "orders")
@@ -451,12 +441,7 @@ def iceberg_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     size."""
     import shutil
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "cust_scd2",
-    )
+    path = _cache_path(sf_dir, "cust_scd2")
     shutil.rmtree(path, ignore_errors=True)
     (customer,) = tables(spark, sf_dir, "customer")
     dim = customer.filter(F.col("c_custkey") < 200).select(
@@ -533,10 +518,7 @@ def _wap_table(spark: SparkSession, sf_dir: str) -> str:
     key = sf_dir
     if key in _WAP_CACHE and os.path.exists(_WAP_CACHE[key]):
         return _WAP_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(), "iceberg_lite", sf_dir.strip("/").replace("/", "_"),
-        "orders_wap",
-    )
+    path = _cache_path(sf_dir, "orders_wap")
     if not _complete(path):
         import shutil
 
@@ -689,12 +671,7 @@ def _orphan_table(spark: SparkSession, sf_dir: str) -> str:
     key = sf_dir
     if key in _ORPHAN_CACHE and os.path.exists(_ORPHAN_CACHE[key]):
         return _ORPHAN_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_orphan",
-    )
+    path = _cache_path(sf_dir, "orders_orphan")
     if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
@@ -767,12 +744,7 @@ def _evo_table(spark: SparkSession, sf_dir: str) -> str:
     key = sf_dir
     if key in _EVO_CACHE and os.path.exists(_EVO_CACHE[key]):
         return _EVO_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_evo",
-    )
+    path = _cache_path(sf_dir, "orders_evo")
     if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(
@@ -834,12 +806,7 @@ def _pevo_table(spark: SparkSession, sf_dir: str) -> str:
     key = sf_dir
     if key in _PEVO_CACHE and os.path.exists(_PEVO_CACHE[key]):
         return _PEVO_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_pevo",
-    )
+    path = _cache_path(sf_dir, "orders_pevo")
     if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
@@ -898,12 +865,7 @@ def _rb_table(spark: SparkSession, sf_dir: str) -> str:
     key = sf_dir
     if key in _RB_CACHE and os.path.exists(_RB_CACHE[key]):
         return _RB_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "iceberg_lite",
-        sf_dir.strip("/").replace("/", "_"),
-        "orders_rb",
-    )
+    path = _cache_path(sf_dir, "orders_rb")
     if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
         (orders,) = tables(spark, sf_dir, "orders")
         write_snapshot(orders.filter(F.col("o_orderkey") < 300), path)

@@ -24,6 +24,16 @@ JSON values keyed by column NAME (the reference keys by column id
 with raw bytes); partition values are also kept inside the data files
 so reads need no partition-column reconstruction.
 
+Schema model: one, from the first commit. The commit that creates a
+table writes schema v0 (field ids 1..n, names and Spark type strings
+from the writer's DataFrame schema), every data entry records the
+schema id it was written under, and every equality delete records its
+key columns as field ids. Reads, deletes and DDL all resolve columns
+through those ids. Metadata without `schemas` (or an equality delete
+without `equality_ids`) comes from an engine that predates
+schema-at-create; it is refused with a ValueError, never guessed at,
+and such a table must be rewritten into a new one.
+
 Scan shape: planning is metadata-only and starts no Spark job. Files
 are listed and pruned from the JSON manifests, and every Parquet read
 takes its schema from a file footer (the Spark schema key that Spark's
@@ -128,6 +138,26 @@ def _read_parquet(
     return spark.read.schema(schema).parquet(*paths)
 
 
+def _predates_schema(path: str, what: str) -> ValueError:
+    """The one refusal for data an engine without schema-at-create wrote."""
+    return ValueError(
+        f"iceberg-lite table at {path} predates schema-at-create ({what}); "
+        "rewrite it into a new table"
+    )
+
+
+def _v0_schema(schema: StructType) -> dict:
+    """Schema v0 of a table created by a writer with Spark schema
+    `schema`: field ids 1..n in column order."""
+    return {
+        "schema_id": 0,
+        "fields": [
+            {"id": i + 1, "name": f.name, "type": f.dataType.simpleString()}
+            for i, f in enumerate(schema.fields)
+        ],
+    }
+
+
 class IcebergLiteTable:
     def __init__(self, path: str):
         self.path = path
@@ -139,7 +169,10 @@ class IcebergLiteTable:
 
     def metadata(self) -> dict:
         with open(self._meta_path()) as f:
-            return json.load(f)
+            meta = json.load(f)
+        if "schemas" not in meta:
+            raise _predates_schema(self.path, "its metadata has no schemas")
+        return meta
 
     def snapshots(self) -> list[dict]:
         meta_dir = os.path.join(self.path, "metadata")
@@ -154,17 +187,9 @@ class IcebergLiteTable:
         return self.metadata().get("current_snapshot_id")
 
     def refs(self) -> dict:
-        """Named refs (Iceberg branches/tags). Tables written before
-        branch support have no `refs` key — `main` is synthesized from
-        the current pointer, so every table has at least one branch."""
-        meta = self.metadata()
-        refs = dict(meta.get("refs", {}))
-        if "main" not in refs and meta.get("current_snapshot_id") is not None:
-            refs["main"] = {
-                "snapshot_id": meta["current_snapshot_id"],
-                "type": "branch",
-            }
-        return refs
+        """Named refs (Iceberg branches/tags); the first commit writes
+        `main`."""
+        return dict(self.metadata()["refs"])
 
     def resolve_ref(self, name: str) -> int:
         refs = self.refs()
@@ -216,22 +241,26 @@ class IcebergLiteTable:
             return json.load(f)
 
     # -- schema history ----------------------------------------------------
-    def schema_by_id(self, schema_id: int) -> dict | None:
-        """Schema dict for an id, or None when the table predates
-        schema tracking (legacy tables resolve columns by name)."""
-        schemas = self.metadata().get("schemas")
-        if not schemas:
-            return None
-        for s in schemas:
+    def schema_by_id(self, schema_id: int) -> dict:
+        """Schema dict (`schema_id`, `fields` of id/name/type) for an
+        id; v0 is the schema the table was created with."""
+        for s in self.metadata()["schemas"]:
             if s["schema_id"] == schema_id:
                 return s
         raise ValueError(f"unknown schema id {schema_id} at {self.path}")
 
-    def current_schema(self) -> dict | None:
-        meta = self.metadata()
-        if not meta.get("schemas"):
-            return None
-        return self.schema_by_id(meta["current-schema-id"])
+    def current_schema(self) -> dict:
+        """The schema that current reads and new writes use: v0 until
+        the first DDL, then the latest version."""
+        return self.schema_by_id(self.metadata()["current-schema-id"])
+
+    def _equality_ids(self, entry: dict) -> list[int]:
+        """Field ids of an equality delete's key columns."""
+        if "equality_ids" not in entry:
+            raise _predates_schema(
+                self.path, f"equality delete {entry['file_path']} has no equality_ids"
+            )
+        return entry["equality_ids"]
 
     def data_files(self, snapshot_id: int | None = None) -> list[dict]:
         return [
@@ -261,10 +290,10 @@ class IcebergLiteTable:
         return out
 
     # -- scan -------------------------------------------------------------
-    def _mapped_cols(self, target_schema: dict | None, file_schema_id: int) -> list | None:
+    def _mapped_cols(self, target_schema: dict, file_schema_id: int) -> list | None:
         """Projection of a file schema to the target schema through field
         ids, or None for identity."""
-        if target_schema is None or file_schema_id == target_schema["schema_id"]:
+        if file_schema_id == target_schema["schema_id"]:
             return None
         fs = self.schema_by_id(file_schema_id)
         by_id = {f["id"]: f["name"] for f in fs["fields"]}
@@ -279,11 +308,11 @@ class IcebergLiteTable:
         self,
         spark: SparkSession,
         files: list[tuple[str, int, int]],
-        target_schema: dict | None,
+        target_schema: dict,
         with_meta: bool = False,
     ) -> DataFrame:
         """Data files, given as (table-relative path, sequence number,
-        schema id), read under `target_schema` (None: as written).
+        schema id), read under `target_schema`.
 
         Files group by (sequence number, schema id), so one write job,
         and each group's first footer stands for the group. Groups whose
@@ -393,13 +422,10 @@ class IcebergLiteTable:
         # (VERSION/TIMESTAMP AS OF) reads under the schema of its era
         # (snapshot.schema_id). Files map through FIELD IDS, so renames
         # need no rewrite and added columns read as NULL from older
-        # files. Legacy tables (no `schemas` in metadata) take the
-        # name-based fast path.
-        if not self.metadata().get("schemas"):
-            target_schema = None
-        elif explicit_travel:
+        # files.
+        if explicit_travel:
             sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-            target_schema = self.schema_by_id(self._snapshot(sid).get("schema_id", 0))
+            target_schema = self.schema_by_id(self._snapshot(sid)["schema_id"])
         else:
             target_schema = self.current_schema()
 
@@ -419,7 +445,7 @@ class IcebergLiteTable:
             if predicates and not self._stats_match(df_entry, predicates):
                 m.files_pruned_by_stats += 1
                 continue
-            kept.append((df_entry["file_path"], seq, df_entry.get("schema_id", 0)))
+            kept.append((df_entry["file_path"], seq, df_entry["schema_id"]))
         m.files_scanned = len(kept)
         self.metrics = m
         if not kept:
@@ -427,7 +453,7 @@ class IcebergLiteTable:
             if not files:
                 raise ValueError(f"empty iceberg-lite table at {self.path}")
             any_entry, seq = files[0]
-            any_file = (any_entry["file_path"], seq, any_entry.get("schema_id", 0))
+            any_file = (any_entry["file_path"], seq, any_entry["schema_id"])
             return self._scan(spark, [any_file], target_schema).limit(0)
 
         need_meta = bool(pos_dels) or bool(eq_dels)
@@ -445,53 +471,25 @@ class IcebergLiteTable:
             out = out.join(F.broadcast(dels), ["__file", "__pos"], "left_anti")
         # equality deletes: key files that share a column set are unioned
         # (positions __k0.., each tagged with its sequence number __dseq)
-        # and applied in ONE anti-join per set
+        # and applied in ONE anti-join per set. Key columns resolve
+        # through FIELD IDS: the key file is written under its era's
+        # names, the scanned rows carry the target schema's names, and
+        # a rename in between must not orphan the delete (Iceberg
+        # `equality_ids` semantics).
+        by_id = {f["id"]: f["name"] for f in target_schema["fields"]}
         key_sets: dict[tuple[str, ...], DataFrame] = {}
         for e, dseq in eq_dels:
+            eq_ids = self._equality_ids(e)
+            dropped = [i for i in eq_ids if i not in by_id]
+            if dropped:
+                raise ValueError(
+                    f"equality-delete {e['file_path']} references "
+                    f"dropped field ids {dropped}; rewrite or expire "
+                    "the delete before dropping its key column"
+                )
+            names = [by_id[i] for i in eq_ids]
             keys = _read_parquet(spark, [os.path.join(self.path, e["file_path"])])
             cols = e["equality_columns"]
-            names = cols
-            # schema-tracked tables resolve key columns through FIELD
-            # IDS: the key file is written under its era's names, but
-            # the scanned rows carry the target schema's names — a
-            # rename between delete-write and read must not orphan the
-            # delete (Iceberg `equality_ids` semantics).
-            if target_schema is not None:
-                # legacy entries (written before this table tracked
-                # schemas) recorded names only; those names are by
-                # construction schema-v0 names, so retrofit their ids.
-                # A name that does NOT resolve in v0 means the entry
-                # was written outside that invariant (e.g. by an old
-                # engine version after a rename) — matching it by NAME
-                # could anti-join a different, later-renamed column
-                # (silent wrong deletes), so refuse instead.
-                eq_ids = e.get("equality_ids")
-                if not eq_ids:
-                    v0 = {
-                        f["name"]: f["id"]
-                        for f in self.schema_by_id(0)["fields"]
-                    }
-                    unresolved = [c for c in cols if c not in v0]
-                    if unresolved:
-                        raise ValueError(
-                            f"equality-delete {e['file_path']} has no "
-                            f"field ids and its columns {unresolved} do "
-                            "not resolve in schema v0; rewrite or expire "
-                            "the delete"
-                        )
-                    eq_ids = [v0[c] for c in cols]
-            else:
-                eq_ids = None
-            if eq_ids:
-                by_id = {f["id"]: f["name"] for f in target_schema["fields"]}
-                dropped = [i for i in eq_ids if i not in by_id]
-                if dropped:
-                    raise ValueError(
-                        f"equality-delete {e['file_path']} references "
-                        f"dropped field ids {dropped}; rewrite or expire "
-                        "the delete before dropping its key column"
-                    )
-                names = [by_id[i] for i in eq_ids]
             keys = keys.select(
                 *[F.col(c).alias(f"__k{i}") for i, c in enumerate(cols)],
                 F.lit(dseq).alias("__dseq"),
@@ -561,7 +559,7 @@ class IcebergLiteTable:
             seq = m.get("sequence_number", 0)
             for entry in manifest.get("entries", []):
                 fe = entry["data_file"]
-                files.append((fe["file_path"], seq, fe.get("schema_id", 0)))
+                files.append((fe["file_path"], seq, fe["schema_id"]))
         self.metrics = ScanMetrics(files_total=len(files), files_scanned=len(files))
         target_schema = self.current_schema()
         if not files:
@@ -570,7 +568,7 @@ class IcebergLiteTable:
                 raise ValueError(f"empty iceberg-lite table at {self.path}")
             fe = any_files[0]
             return self._scan(
-                spark, [(fe["file_path"], 0, fe.get("schema_id", 0))], target_schema
+                spark, [(fe["file_path"], 0, fe["schema_id"])], target_schema
             ).limit(0)
         return self._scan(spark, files, target_schema)
 
@@ -593,12 +591,17 @@ def _append_snapshot_files(
     operation: str,
     replace: bool = False,
     branch: str = "main",
+    schema: StructType | None = None,
 ) -> int:
     """Chain a new snapshot whose manifest holds `entries` of `content`
     kind onto the current table state; returns the new snapshot id.
     With replace=True the new manifest REPLACES all prior manifests
-    (compaction / rewrite_data_files) instead of accumulating."""
-    return _append_snapshot_manifests(path, [(entries, content)], operation, replace, branch)
+    (compaction / rewrite_data_files) instead of accumulating. The
+    commit that creates the table needs `schema`, the writer's Spark
+    schema, from which it writes schema v0."""
+    return _append_snapshot_manifests(
+        path, [(entries, content)], operation, replace, branch, schema
+    )
 
 
 @contextmanager
@@ -644,6 +647,7 @@ def _append_snapshot_manifests(
     operation: str,
     replace: bool = False,
     branch: str = "main",
+    schema: StructType | None = None,
 ) -> int:
     """Commit ONE snapshot carrying several manifests (e.g. a MERGE's
     equality-delete manifest + data manifest, which must share a
@@ -652,7 +656,7 @@ def _append_snapshot_manifests(
     the table commit lock (see _commit_lock)."""
     with _commit_lock(path):
         return _append_snapshot_manifests_locked(
-            path, manifest_groups, operation, replace, branch
+            path, manifest_groups, operation, replace, branch, schema
         )
 
 
@@ -662,10 +666,22 @@ def _append_snapshot_manifests_locked(
     operation: str,
     replace: bool = False,
     branch: str = "main",
+    schema: StructType | None = None,
 ) -> int:
     table = IcebergLiteTable(path)
-    has_meta = os.path.exists(table._meta_path())
-    refs = table.refs() if has_meta else {}
+    if os.path.exists(table._meta_path()):
+        old_meta = table.metadata()
+    elif schema is None:
+        raise ValueError(f"the first commit to {path} needs the table's schema")
+    else:
+        # the commit that creates the table writes schema v0
+        old_meta = {
+            "schemas": [_v0_schema(schema)],
+            "current-schema-id": 0,
+            "current_snapshot_id": None,
+            "refs": {},
+        }
+    refs = dict(old_meta["refs"])
     if branch != "main" and branch not in refs:
         raise ValueError(
             f"unknown branch {branch!r}; create_branch first (have {sorted(refs)})"
@@ -675,26 +691,24 @@ def _append_snapshot_manifests_locked(
     # Parent is the BRANCH head, not the table pointer; snapshot ids
     # stay globally unique across branches (max over all snapshots).
     prev_id = refs[branch]["snapshot_id"] if branch in refs else None
-    all_snaps = table.snapshots() if has_meta else []
+    all_snaps = table.snapshots()
     prev_manifests = []
     if prev_id is not None and not replace:
         snap = table._snapshot(prev_id)
         with open(os.path.join(path, snap["manifest_list"])) as f:
             prev_manifests = json.load(f)
     snapshot_id = max([s["snapshot_id"] for s in all_snaps], default=0) + 1
-    old_meta = table.metadata() if has_meta else {}
-    cur_schema_id = old_meta.get("current-schema-id", 0)
-    if old_meta.get("schemas"):
-        # schema tracking active: stamp every data entry with the
-        # schema it was written under so id-based read resolution can
-        # map its columns forever (Iceberg writes field ids into the
-        # parquet itself; here the manifest carries the schema id)
-        for entries, content in manifest_groups:
-            if content == "data":
-                for e in entries:
-                    fe = e.get("data_file")
-                    if fe is not None and "schema_id" not in fe:
-                        fe["schema_id"] = cur_schema_id
+    cur_schema_id = old_meta["current-schema-id"]
+    # stamp every data entry with the schema it was written under so
+    # id-based read resolution can map its columns forever (Iceberg
+    # writes field ids into the parquet itself; here the manifest
+    # carries the schema id)
+    for entries, content in manifest_groups:
+        if content == "data":
+            for e in entries:
+                fe = e.get("data_file")
+                if fe is not None and "schema_id" not in fe:
+                    fe["schema_id"] = cur_schema_id
     manifests = list(prev_manifests)
     for gi, (entries, content) in enumerate(manifest_groups):
         suffix = f"-{gi}" if len(manifest_groups) > 1 else ""
@@ -746,9 +760,7 @@ def _append_snapshot_manifests_locked(
         "uuid": f"lite-{os.path.basename(path)}",
         # the table pointer tracks MAIN; branch commits leave it alone
         "current_snapshot_id": (
-            snapshot_id
-            if branch == "main"
-            else (table.current_snapshot_id() if has_meta else None)
+            snapshot_id if branch == "main" else old_meta["current_snapshot_id"]
         ),
         "refs": new_refs,
     }
@@ -802,7 +814,7 @@ def write_position_deletes(
     # the data files with their (file, pos) keys, deletes not applied:
     # a key that is already deleted is harmless to delete again
     files = [
-        (e["file_path"], seq, e.get("schema_id", 0))
+        (e["file_path"], seq, e["schema_id"])
         for e, seq, c in table._files_with_meta()
         if c == "data"
     ]
@@ -824,6 +836,15 @@ def write_position_deletes(
     return _append_snapshot_files(path, [entry], "position_deletes", "delete")
 
 
+def _key_field_ids(schema: dict, columns: list[str], what: str) -> list[int]:
+    """Field ids of `columns` in `schema`; unknown names are refused."""
+    by_name = {f["name"]: f["id"] for f in schema["fields"]}
+    missing = [c for c in columns if c not in by_name]
+    if missing:
+        raise ValueError(f"{what} columns {missing} not in current schema")
+    return [by_name[c] for c in columns]
+
+
 def write_equality_deletes(
     spark: SparkSession, path: str, keys_df: DataFrame, columns: list[str]
 ) -> int:
@@ -831,13 +852,14 @@ def write_equality_deletes(
     are deleted from all data files with a smaller sequence number
     (later appends are untouched — Iceberg v2 semantics).
 
-    On schema-tracked tables the key columns are recorded as FIELD IDS
-    (Iceberg's `equality_ids`), so a later `rename_column` does not
-    orphan the delete: the scan re-resolves each id to whatever the
-    read-time schema calls that field. Legacy tables (no `schemas` in
-    metadata) keep the name-based record."""
-    _ensure_schema_tracking(path)
+    The key columns are named in the current schema and recorded as
+    FIELD IDS (Iceberg's `equality_ids`), so a later `rename_column`
+    does not orphan the delete: the scan re-resolves each id to
+    whatever the read-time schema calls that field. Columns are
+    checked before the key file is written, so a refused call leaves
+    no file behind."""
     table = IcebergLiteTable(path)
+    eq_ids = _key_field_ids(table.current_schema(), columns, "equality-delete")
     keys = keys_df.select(*columns).distinct()
     rel = f"data/delete-eq-{table.current_snapshot_id() + 1}-{uuid.uuid4().hex[:8]}"
     n, size = _write_delete_file(keys, path, rel)
@@ -847,20 +869,36 @@ def write_equality_deletes(
             "file_format": "PARQUET",
             "content": "equality_deletes",
             "equality_columns": columns,
+            "equality_ids": eq_ids,
             "record_count": n,
             "file_size_in_bytes": size,
         }
     }
-    schema = table.current_schema()
-    if schema is not None:
-        by_name = {f["name"]: f["id"] for f in schema["fields"]}
-        missing = [c for c in columns if c not in by_name]
-        if missing:
-            raise ValueError(
-                f"equality-delete columns {missing} not in current schema"
-            )
-        entry["delete_file"]["equality_ids"] = [by_name[c] for c in columns]
     return _append_snapshot_files(path, [entry], "equality_deletes", "delete")
+
+
+def _check_write(path: str, df: DataFrame) -> tuple[dict, int]:
+    """(schema, snapshot id) for a data write of `df` to `path`: the
+    schema the write commits under, and the id it expects, which only
+    names its files (the commit assigns the real one).
+
+    The schema is the table's current one, or v0 from `df.schema` when
+    the write creates the table. The frame's column names must be the
+    current schema's (in any order): a frame with stale names (from
+    before a rename) would commit files that no read can resolve.
+    write_snapshot and upsert_snapshot call this before they write a
+    file."""
+    table = IcebergLiteTable(path)
+    if not os.path.exists(table._meta_path()):
+        return _v0_schema(df.schema), 1
+    schema = table.current_schema()
+    expected = sorted(f["name"] for f in schema["fields"])
+    if sorted(df.columns) != expected:
+        raise ValueError(
+            f"write columns {sorted(df.columns)} do not match the "
+            f"current schema {expected}; evolve the schema first"
+        )
+    return schema, table.current_snapshot_id() + 1
 
 
 def upsert_snapshot(
@@ -880,22 +918,14 @@ def upsert_snapshot(
     merge-on-read semantics. Data files are never rewritten; `compact()`
     is the periodic cleanup.
 
-    Like write_equality_deletes, the key columns are ALSO recorded as
-    field ids on schema-tracked tables (tracking starts here if the
-    table has data): an id-less entry written under post-rename names
-    would later be retrofitted through the schema-v0 id table and
-    anti-join the wrong column — silent wrong deletes. The very first
-    upsert into an EMPTY legacy table stays id-less (no data file to
-    derive v0 from); its names become v0 by construction when tracking
-    begins, so the retrofit is exact. "Empty" means NO LIVE DATA FILES
-    — not "no snapshots": a table whose rows were all deleted and
-    compacted away still has snapshots but nothing to bootstrap v0
-    from, and must take the id-less path rather than crash (r8 ADVICE)."""
-    table = IcebergLiteTable(path)
-    if table.current_snapshot_id() is not None and table.data_files():
-        _ensure_schema_tracking(path)
-        table = IcebergLiteTable(path)  # re-read: tracking may have begun
-    snapshot_id = (table.current_snapshot_id() or 0) + 1
+    Like write_equality_deletes, the key columns are recorded as field
+    ids of the current schema, so the delete keeps hitting the same
+    fields after a rename. `df` must carry the current schema's column
+    names, as for write_snapshot; both checks run before any file is
+    written. An upsert into a path with no table creates it, with
+    schema v0 from `df.schema`."""
+    schema, snapshot_id = _check_write(path, df)
+    eq_ids = _key_field_ids(schema, key_columns, "upsert key")
     keys = df.select(*key_columns).distinct()
     rel = f"data/delete-eq-{snapshot_id}-{uuid.uuid4().hex[:8]}"
     n, size = _write_delete_file(keys, path, rel)
@@ -905,26 +935,17 @@ def upsert_snapshot(
             "file_format": "PARQUET",
             "content": "equality_deletes",
             "equality_columns": key_columns,
+            "equality_ids": eq_ids,
             "record_count": n,
             "file_size_in_bytes": size,
         }
     }
-    schema = table.current_schema()
-    if schema is not None:
-        by_name = {f["name"]: f["id"] for f in schema["fields"]}
-        missing = [c for c in key_columns if c not in by_name]
-        if missing:
-            raise ValueError(
-                f"upsert key columns {missing} not in current schema"
-            )
-        del_entry["delete_file"]["equality_ids"] = [
-            by_name[c] for c in key_columns
-        ]
     data_entries = _write_data_entries(df, path, snapshot_id, partition_by, stats_columns)
     return _append_snapshot_manifests(
         path,
         [([del_entry], "equality_deletes"), (data_entries, "data")],
         "overwrite",
+        schema=df.schema,
     )
 
 
@@ -1057,87 +1078,23 @@ def rollback_to_snapshot(path: str, snapshot_id: int) -> int:
 # before it existed, and a dropped column merely disappears from the
 # projection while its bytes stay in old files. Real Iceberg writes the
 # ids into the parquet field metadata; this layout keeps the id→name
-# history in table metadata (`schemas` list) and stamps each manifest
-# data entry with the schema id it was written under — same resolution
-# power, one JSON hop instead of a parquet footer convention.
+# history in table metadata (`schemas` list, v0 written by the commit
+# that creates the table) and stamps each manifest data entry with the
+# schema id it was written under — same resolution power, one JSON hop
+# instead of a parquet footer convention.
 # (Beyond reference: its iceberg.rs reads a single fixed schema,
 # /root/reference/src/physical/operators/iceberg.rs:27-110.)
 
-_PA_TO_SQL = {
-    "int64": "bigint",
-    "int32": "int",
-    "int16": "smallint",
-    "int8": "tinyint",
-    "double": "double",
-    "float": "float",
-    "string": "string",
-    "large_string": "string",
-    "bool": "boolean",
-    "date32[day]": "date",
-    "binary": "binary",
-    "large_binary": "binary",
-}
-
-
-def _pa_type_to_sql(t) -> str:
-    s = str(t)
-    if s.startswith("timestamp"):
-        return "timestamp"
-    if s.startswith("decimal"):
-        return s.replace("decimal128", "decimal").replace("decimal64", "decimal")
-    return _PA_TO_SQL.get(s, "string")
-
-
-def _bootstrap_schema_locked(path: str, meta: dict) -> None:
-    """First DDL on a legacy table: derive schema v0 (field ids 1..n)
-    from any live data file's parquet footer. Files written before
-    tracking began carry no schema_id and resolve as v0 — which is
-    exactly the schema they were written under."""
-    import pyarrow.parquet as pq
-
-    table = IcebergLiteTable(path)
-    files = table.data_files()
-    if not files:
-        raise ValueError(f"cannot evolve schema of empty table at {path}")
-    fp = os.path.join(path, files[0]["file_path"])
-    if os.path.isdir(fp):  # delete dirs never reach here (data only)
-        fp = next(
-            os.path.join(fp, fn) for fn in sorted(os.listdir(fp))
-            if fn.endswith(".parquet")
-        )
-    pa_schema = pq.ParquetFile(fp).schema_arrow
-    fields = [
-        {"id": i + 1, "name": f.name, "type": _pa_type_to_sql(f.type)}
-        for i, f in enumerate(pa_schema)
-    ]
-    meta["schemas"] = [{"schema_id": 0, "fields": fields}]
-    meta["current-schema-id"] = 0
-
-
-def _ensure_schema_tracking(path: str) -> None:
-    """Start id-based schema tracking on a legacy table (schema v0
-    derived from a live data file). Needed before writing metadata
-    that must survive renames — e.g. equality-delete field ids."""
-    with _commit_lock(path):
-        table = IcebergLiteTable(path)
-        meta = table.metadata()
-        if meta.get("schemas"):
-            return
-        _bootstrap_schema_locked(path, meta)
-        _atomic_json(table._meta_path(), meta)
-
 
 def _evolve(path: str, mutate) -> int:
-    """Shared DDL transaction: bootstrap if needed, copy the current
-    schema, apply `mutate(fields)`, append as a new schema version and
-    advance the pointer. Metadata-only — NO snapshot is created (as in
-    Iceberg, where schema updates are table-metadata commits; each
-    future snapshot records the schema id current at its commit)."""
+    """Shared DDL transaction: copy the current schema, apply
+    `mutate(fields)`, append as a new schema version and advance the
+    pointer. Metadata-only — NO snapshot is created (as in Iceberg,
+    where schema updates are table-metadata commits; each future
+    snapshot records the schema id current at its commit)."""
     with _commit_lock(path):
         table = IcebergLiteTable(path)
         meta = table.metadata()
-        if not meta.get("schemas"):
-            _bootstrap_schema_locked(path, meta)
         schemas = meta["schemas"]
         cur_id = meta["current-schema-id"]
         cur = next(s for s in schemas if s["schema_id"] == cur_id)
@@ -1193,39 +1150,16 @@ def drop_column(path: str, name: str) -> int:
     invariant; compact or expire the delete first). Returns the new
     schema id."""
     table = IcebergLiteTable(path)
-    schema = table.current_schema()
-    if schema is not None and table.current_snapshot_id() is not None:
-        fid = next(
-            (f["id"] for f in schema["fields"] if f["name"] == name), None
-        )
-        if fid is not None:
-            for e, _seq, content in table._files_with_meta():
-                if content != "equality_deletes":
-                    continue
-                eq_ids = e.get("equality_ids")
-                if not eq_ids:  # legacy entry: names are v0 names
-                    v0 = {
-                        f["name"]: f["id"]
-                        for f in table.schema_by_id(0)["fields"]
-                    }
-                    eq_ids = [
-                        v0[c] for c in e["equality_columns"] if c in v0
-                    ]
-                    if len(eq_ids) != len(e["equality_columns"]):
-                        # unresolvable id-less entry: the scan refuses
-                        # to apply it (see read path) — block the drop
-                        # too rather than guess which field it meant
-                        raise ValueError(
-                            f"equality-delete {e['file_path']} has no "
-                            "field ids and names outside schema v0; "
-                            "rewrite or expire it before dropping columns"
-                        )
-                if fid in eq_ids:
-                    raise ValueError(
-                        f"column {name!r} (field id {fid}) is referenced "
-                        f"by live equality delete {e['file_path']}; "
-                        "compact the table or expire the delete first"
-                    )
+    fid = next(
+        (f["id"] for f in table.current_schema()["fields"] if f["name"] == name), None
+    )
+    for e, _seq, content in table._files_with_meta():
+        if content == "equality_deletes" and fid in table._equality_ids(e):
+            raise ValueError(
+                f"column {name!r} (field id {fid}) is referenced "
+                f"by live equality delete {e['file_path']}; "
+                "compact the table or expire the delete first"
+            )
 
     def mutate(fields, _used_ids):
         kept = [f for f in fields if f["name"] != name]
@@ -1253,27 +1187,17 @@ def write_snapshot(
     reference only READS this layout — its test fixtures are hand-built;
     this writer is the ParquetWriter counterpart,
     /root/reference/src/physical/operators/parquet.rs:149-244.)
+
+    The first write creates the table with schema v0 from `df.schema`;
+    later writes must carry the current schema's column names.
     """
     os.makedirs(os.path.join(path, "metadata"), exist_ok=True)
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
-    table = IcebergLiteTable(path)
-    has_meta = os.path.exists(table._meta_path())
-    cur_schema = table.current_schema() if has_meta else None
-    if cur_schema is not None:
-        # guardrail once schema tracking is active: an append written
-        # with STALE names (pre-rename) would silently stamp the wrong
-        # schema id — refuse loudly instead
-        expected = sorted(f["name"] for f in cur_schema["fields"])
-        if sorted(df.columns) != expected:
-            raise ValueError(
-                f"append columns {sorted(df.columns)} do not match the "
-                f"current schema {expected}; evolve the schema first"
-            )
-    prev_id = table.current_snapshot_id() if has_meta else None
-    snapshot_id = (prev_id or 0) + 1
-
+    _schema, snapshot_id = _check_write(path, df)
     entries = _write_data_entries(df, path, snapshot_id, partition_by, stats_columns)
-    return _append_snapshot_files(path, entries, "data", "append", branch=branch)
+    return _append_snapshot_files(
+        path, entries, "data", "append", branch=branch, schema=df.schema
+    )
 
 
 def _json_scalar(v):

@@ -6,9 +6,11 @@
    keyed on k — an id-less entry would be retrofitted through the v0
    id table ("k" → field 1 → now called k2) and anti-join the WRONG
    column.
-2. (medium, hardening) id-less equality-delete entries on a
-   schema-tracked table whose names do NOT resolve in schema v0 are an
-   error on read and on drop_column, never a silent name-path match.
+2. (medium, hardening) id-less equality-delete entries are an error on
+   read and on drop_column, never a silent name-path match. Every
+   table now carries schema v0 from its first commit and every
+   equality delete records field ids, so an entry without them
+   predates schema-at-create and is refused.
 3. (low) cc_labels spill dirs: created lazily (shallow graphs touch no
    disk) and removed at convergence — repeated invocations leave no
    cc_labels_* trees behind.
@@ -104,42 +106,38 @@ def _strip_ids_from_last_delete(path: str) -> None:
 
 def test_idless_post_v0_names_refuse_read_and_drop(spark, renamed_readded):
     """An id-less entry keyed on a POST-v0 name (k2 only exists after
-    the rename) cannot be retrofitted; matching it by name could hit a
-    later-renamed column, so read and drop_column both refuse.
+    the rename): matching it by name could hit a later-renamed column,
+    so read and drop_column both refuse.
 
     (The sibling hazard — an id-less entry keyed on a re-added v0 NAME
-    — is indistinguishable from a genuine legacy entry on read, which
-    is exactly why upsert_snapshot now records ids at write time; see
-    test_upsert_records_equality_ids.)"""
+    — is refused the same way: no id-less entry is ever resolved.)"""
     path = renamed_readded
     up = spark.createDataFrame([(200, 1, 7)], "k2 long, v long, k long")
     upsert_snapshot(spark, path, up, key_columns=["k2"])
     _strip_ids_from_last_delete(path)
     t = IcebergLiteTable(path)
-    with pytest.raises(ValueError, match="do not resolve in schema v0"):
+    with pytest.raises(ValueError, match="predates schema-at-create"):
         t.read(spark).collect()
-    with pytest.raises(ValueError, match="rewrite or expire"):
+    with pytest.raises(ValueError, match="predates schema-at-create"):
         drop_column(path, "v")
 
 
-def test_upsert_on_legacy_then_rename_still_resolves(spark, tmp_path):
-    """The benign legacy path still works: upsert BEFORE any DDL is
-    id-less but v0-named; a later rename must not orphan it (retrofit
-    through v0 ids)."""
-    path = str(tmp_path / "legacy")
+def test_idless_upsert_delete_refuses_read_after_rename(spark, tmp_path):
+    """An id-less upsert delete keyed on v0 names (what an engine before
+    schema-at-create wrote) is not retrofitted through v0 ids: after a
+    rename, the read refuses and names the table."""
+    path = str(tmp_path / "idless")
     df = spark.range(4).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
     write_snapshot(df, path)
-    # tracking starts inside upsert_snapshot now, so ids are recorded;
-    # strip them to simulate a pre-fix writer
     up = spark.createDataFrame([(2, 99)], "k long, v long")
     upsert_snapshot(spark, path, up, key_columns=["k"])
     _strip_ids_from_last_delete(path)
     rename_column(path, "k", "kk")
-    rows = {(r.kk, r.v) for r in IcebergLiteTable(path).read(spark).collect()}
-    assert (2, 99) in rows and (2, 20) not in rows
-    assert (1, 10) in rows
+    with pytest.raises(ValueError, match="predates schema-at-create") as err:
+        IcebergLiteTable(path).read(spark)
+    assert path in str(err.value)
 
 
 # --------------------------------------------------------------------------

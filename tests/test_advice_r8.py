@@ -10,8 +10,9 @@
    written LAST — a crash between the members and centroids writes
    leaves a dir that fails the gate and is rebuilt, not half-read.
 3. (low) upsert_snapshot on a table that HAS snapshots but ZERO live
-   data files (all rows deleted, then compacted away) must proceed on
-   the id-less legacy path instead of crashing in the schema bootstrap.
+   data files (all rows deleted, then compacted away) must not crash:
+   schema v0 is written when the table is created, so the upsert needs
+   no live data file to resolve its key columns.
 """
 
 from __future__ import annotations
@@ -133,8 +134,9 @@ def test_upsert_on_table_with_snapshots_but_no_live_files(spark, tmp_path):
         _append_snapshot_files(path, [], "data", "replace", replace=True)
         t = IcebergLiteTable(path)
         assert not t.data_files()
-    # the r8 ADVICE crash: bootstrap raised 'cannot evolve schema of
-    # empty table'; the fix takes the id-less legacy path instead
+    # the r8 ADVICE crash: deriving v0 from a live data file raised
+    # 'cannot evolve schema of empty table'; v0 now exists from the
+    # table's first commit
     up = spark.createDataFrame([(3, 30)], "k long, v long")
     upsert_snapshot(spark, path, up, key_columns=["k"])
     got = IcebergLiteTable(path).read(spark).collect()

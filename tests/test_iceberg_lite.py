@@ -687,6 +687,7 @@ def test_read_falls_back_without_spark_footer(spark, tmp_path):
         [{"data_file": {"file_path": rel, "file_format": "PARQUET", "record_count": 6}}],
         "data",
         "append",
+        schema=spark.createDataFrame([], "id bigint, s string").schema,
     )
     dels = spark.createDataFrame([(1,), (4,)], "id bigint")
     write_equality_deletes(spark, path, dels, ["id"])
@@ -767,12 +768,13 @@ def test_same_basename_files_keep_their_sequence_numbers(spark, tmp_path):
 
     def add(sub: str, rows: list) -> None:
         staging = os.path.join(path, f"_stage_{sub}")
-        spark.createDataFrame(rows, "id bigint, src string").coalesce(1).write.parquet(staging)
+        df = spark.createDataFrame(rows, "id bigint, src string")
+        df.coalesce(1).write.parquet(staging)
         rel = f"data/{sub}/part.parquet"
         os.makedirs(os.path.join(path, "data", sub))
         os.replace(glob.glob(os.path.join(staging, "*.parquet"))[0], os.path.join(path, rel))
         entry = {"data_file": {"file_path": rel, "record_count": len(rows)}}
-        _append_snapshot_files(path, [entry], "data", "append")
+        _append_snapshot_files(path, [entry], "data", "append", schema=df.schema)
 
     add("a", [(1, "a"), (2, "a"), (3, "a")])
     write_equality_deletes(spark, path, spark.createDataFrame([(2,)], "id bigint"), ["id"])
