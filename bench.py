@@ -237,6 +237,7 @@ def main() -> None:
     # TPC-H total; these timings are recorded alongside)
     import gc
 
+    from iceberg_query_engine_spark.materialize import release
     from iceberg_query_engine_spark.queries import catalog
 
     all_q = catalog.all_queries()
@@ -247,17 +248,9 @@ def main() -> None:
             t0 = time.perf_counter()
             fn(spark, sf_dir).collect()
             best = min(best, time.perf_counter() - t0)
-            # release localCheckpoint RDDs / cached frames the op may
-            # have pinned BETWEEN REPEATS too, not just between ops:
-            # when the persist_if_large gate fires, the CacheManager
-            # plan-matches repeat 2 onto repeat 1's cache and best=min
-            # silently measures a warm cache (r9 ADVICE). The gated
-            # release is a no-op at sf0.1, where the gate is off
-            # (sources < 256 MB); clearCache is not, because it also
-            # drops persists that are not gated, such as the
-            # dedup_pipeline_resolve ledger, so repeat 2 rebuilds them.
-            tpch.release_gated_persists()
-            spark.catalog.clearCache()
+            # between repeats too: a cache left by repeat 1 would make
+            # best=min measure a warm repeat 2 (r9 ADVICE)
+            release()
         times[name] = round(best, 4)
         gc.collect()
 

@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.rank import ntile_by_range
-from .tpch import broadcast_if_small, persist_if_large, tables
+from ..materialize import broadcast_if_small, persist_if_large
+from .tpch import tables
 
 SESSION_GAP_MIN = 30
 

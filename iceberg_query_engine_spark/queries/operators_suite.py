@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import asof_join, range_join_bucketed
 from ..operators.rank import ntile_by_range, ranked_by_range
-from .tpch import broadcast_if_small, persist_if_large, tables
+from ..materialize import broadcast_if_small, persist_if_large
+from .tpch import tables
 
 
 def op_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:

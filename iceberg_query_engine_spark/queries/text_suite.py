@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.rank import ranked_by_range
-from .tpch import broadcast_if_small, persist_if_large, tables
+from ..materialize import broadcast_if_small, persist_if_large
+from .tpch import tables
 
 # Fixed per-language marker-token lists for the heuristic classifier.
 # (Deterministic scoring function — the point is the operator shape;

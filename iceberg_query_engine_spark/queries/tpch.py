@@ -35,6 +35,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Old name kept: perfbench/workloads.py calls it here, and perfbench/ stays as it is.
+from ..materialize import release as release_gated_persists  # noqa: F401
 from ..sources.registry import load_table
 
 # Determinism quantum: double expressions are floor-quantized to 1e-6
@@ -83,121 +85,6 @@ def tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
             _TABLE_CACHE[key] = load_table(spark, os.path.join(sf_dir, f"{n}.parquet"))
         out.append(_TABLE_CACHE[key])
     return out
-
-
-# Materialize-vs-recompute gate for MULTIPLY-REFERENCED derived frames.
-# Catalyst does not de-duplicate subtrees: a frame referenced N times
-# re-runs its whole lineage — source scan included — N times. Above
-# this source size, one lazy persist (computed inside the consuming
-# action, shared by every reference; bench/driver sessions clearCache()
-# between queries) replaces N-1 corpus scans. Below it, recomputation
-# is CHEAPER: the duplicated sub-second subtrees run fully parallel,
-# while the materialization barrier serializes the stage graph and
-# pays cache write/read (measured r9-opt at sf0.1: persist cost
-# 1.2-3x on ev_dau_wau_mau/op_ks_test/op_freq_itemsets — the same
-# lesson as the reverted corpus-wide respread). Parameterised via env;
-# the local default keeps the driver bench comparable and the
-# production value is argued in OPTIMIZATION_r09.md.
-MATERIALIZE_MIN_BYTES = 256 << 20
-
-# Broadcast-HINT gate (r9 verdict, What's wrong #1): F.broadcast() is
-# honored unconditionally by the planner, so a hard hint on a frame
-# whose cardinality grows with the corpus (per-user aggregates,
-# vocabularies, filtered dimensions) trades the planner's sort-merge
-# fallback for a build-side OOM at scale. Below this SOURCE size the
-# derived frame is provably tiny (it is at most an aggregate of the
-# source) and the hint merely restores the choice the planner would
-# make from fresh estimates (a persisted frame's RDD-backed stats hide
-# them); above it, no hint — the planner/AQE pick from real sizes.
-BROADCAST_HINT_MAX_SOURCE_BYTES = 1 << 30
-
-
-def _env_bytes(var: str, default: int) -> int:
-    """Env-overridable byte threshold; malformed values fall back to the
-    default instead of failing the query (r9 ADVICE, low)."""
-    try:
-        return int(os.environ.get(var, default))
-    except (TypeError, ValueError):
-        return default
-
-
-def _source_bytes(sf_dir: str, source_tables: tuple[str, ...]) -> int | None:
-    """Total on-disk bytes of the named source tables; None if any is
-    unknown (caller picks its safe side)."""
-    from ..sources.registry import table_bytes
-
-    total = 0
-    for t in source_tables:
-        b = table_bytes(sf_dir, t)
-        if b is None:
-            return None
-        total += b
-    return total
-
-
-# Frames persist_if_large has gated ON, so a long-lived session can
-# release them without a blanket clearCache(). The bench and oracle
-# harnesses clearCache() between queries (which also drops these);
-# any other back-to-back consumer should call release_gated_persists()
-# after each query's action completes (r9 verdict, What's wrong #2).
-_GATED_PERSISTS: list[DataFrame] = []
-
-
-def release_gated_persists() -> int:
-    """Unpersist every frame persist_if_large gated on since the last
-    call; returns how many were released. Safe to call at any point —
-    an in-flight action keeps its already-materialized blocks until it
-    finishes (Spark unpersist is non-blocking here)."""
-    n = 0
-    while _GATED_PERSISTS:
-        df = _GATED_PERSISTS.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
-    return n
-
-
-def persist_if_large(df: DataFrame, sf_dir: str, *source_tables: str) -> DataFrame:
-    """Lazily persist `df` when its source tables are big enough that
-    re-running its lineage per reference would dominate (see
-    MATERIALIZE_MIN_BYTES). Unknown sizes persist (the scale-safe
-    side — a missed persist costs corpus re-scans, a spurious one
-    costs a bounded cache write).
-
-    Ownership contract: gated persists are MEMORY_AND_DISK and live
-    until the session clears its cache. Harnesses running queries
-    back-to-back must clearCache() (bench.py, oracle_sweep.py do) or
-    call release_gated_persists() between queries, or caches
-    accumulate across the session."""
-    threshold = _env_bytes("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", MATERIALIZE_MIN_BYTES)
-    total = _source_bytes(sf_dir, source_tables)
-    if total is None or total >= threshold:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _GATED_PERSISTS.append(df)
-        return df
-    return df
-
-
-def broadcast_if_small(df: DataFrame, sf_dir: str, *source_tables: str) -> DataFrame:
-    """Broadcast hint gated on SOURCE size (see
-    BROADCAST_HINT_MAX_SOURCE_BYTES): below the gate the hint is safe
-    and keeps the sub-second BroadcastHashJoin the planner would pick
-    from fresh estimates; above it (or when sizes are unknown) the
-    frame is returned unhinted so the planner/AQE keep their sort-merge
-    fallback — a user-count- or vocabulary-sized frame at 100 TB is not
-    broadcastable and a hard hint OOMs the build side instead of
-    degrading gracefully."""
-    threshold = _env_bytes(
-        "SPARK_GRAFT_BROADCAST_HINT_MAX_BYTES", BROADCAST_HINT_MAX_SOURCE_BYTES
-    )
-    total = _source_bytes(sf_dir, source_tables)
-    if total is not None and total <= threshold:
-        return F.broadcast(df)
-    return df
 
 
 def _rev() -> F.Column:

@@ -192,13 +192,9 @@ def pick_bucket_count(data_dir: str, floor: int = 64) -> int:
     doubles to 128 so the one-file-per-bucket sorted write and the
     per-bucket scan tasks keep the same ~constant rows-per-task a
     cluster deployment targets, instead of growing with sf."""
-    path = os.path.join(data_dir, "lineitem.parquet")
-    total = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    elif os.path.exists(path):
-        total = os.path.getsize(path)
+    from ..sources.registry import table_bytes
+
+    total = table_bytes(data_dir, "lineitem") or 0  # unknown size: the floor
     buckets = floor
     while buckets * 256 * 1024 * 1024 < total:
         buckets *= 2

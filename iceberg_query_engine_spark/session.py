@@ -42,6 +42,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .sources.registry import parquet_bytes
+
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # Generated-class cache size: above the 1806 distinct classes two
@@ -117,20 +119,6 @@ def codegen_counts(spark: SparkSession) -> tuple[int, float]:
     return int(hist.getCount()), compile_ns / 1e6
 
 
-def corpus_bytes(data_dir: str) -> int:
-    """Total bytes under a data directory (parquet files only) — the
-    size signal `tune_for_corpus` keys its thresholds off."""
-    total = 0
-    for root, _dirs, files in os.walk(data_dir):
-        for f in files:
-            if f.endswith(".parquet") or f.endswith(".snappy.parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
-
-
 def tune_for_corpus(
     spark: SparkSession,
     data_dir: str,
@@ -181,9 +169,9 @@ def tune_for_corpus(
     # extra_dirs: additional storage roots that are part of the same
     # corpus (e.g. the bucketed warehouse copies of fact tables whose
     # flat parquet was reclaimed) — size thresholds must see them.
-    total = corpus_bytes(data_dir) + sum(
-        corpus_bytes(d) for d in (extra_dirs or [])
-    )
+    # An unknown size (no parquet under a root) counts as 0: stock
+    # confs, the small side.
+    total = sum(parquet_bytes(d) or 0 for d in [data_dir, *(extra_dirs or [])])
     conf: dict[str, str] = {}
     n_cpus = int(cpus or DEFAULT_CPUS)
     if total >= 1 << 28:

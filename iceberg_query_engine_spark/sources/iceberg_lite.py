@@ -885,9 +885,10 @@ def _check_write(path: str, df: DataFrame) -> tuple[dict, int]:
     The schema is the table's current one, or v0 from `df.schema` when
     the write creates the table. The frame's column names must be the
     current schema's (in any order): a frame with stale names (from
-    before a rename) would commit files that no read can resolve.
-    write_snapshot and upsert_snapshot call this before they write a
-    file."""
+    before a rename) would commit files that no read can resolve. Each
+    column's type must be its field's or of the same family
+    (_write_type_ok). write_snapshot and upsert_snapshot call this
+    before they write a file."""
     table = IcebergLiteTable(path)
     if not os.path.exists(table._meta_path()):
         return _v0_schema(df.schema), 1
@@ -898,7 +899,34 @@ def _check_write(path: str, df: DataFrame) -> tuple[dict, int]:
             f"write columns {sorted(df.columns)} do not match the "
             f"current schema {expected}; evolve the schema first"
         )
+    incoming = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    for f in schema["fields"]:
+        if not _write_type_ok(f["type"], incoming[f["name"]]):
+            raise ValueError(
+                f"write column {f['name']!r} is {incoming[f['name']]}, but "
+                f"the current schema has {f['type']}; evolve the schema first"
+            )
     return schema, table.current_snapshot_id() + 1
+
+
+# Type families a data write may mix within one field: the read's
+# union by name widens integral types to the widest and float to
+# double. Any other mismatch (a string into a bigint field) would
+# commit files that read back as a type the schema does not describe.
+_WRITE_TYPE_FAMILIES = (
+    frozenset({"tinyint", "byte", "smallint", "short", "int", "integer", "bigint", "long"}),
+    frozenset({"float", "real", "double"}),
+)
+
+
+def _write_type_ok(current: str, incoming: str) -> bool:
+    """Whether a file whose field has Spark type `incoming` (a
+    simpleString) may be written under a schema field typed `current`
+    (as the schema records it, possibly a user-written alias)."""
+    current = current.strip().lower()
+    return current == incoming or any(
+        current in fam and incoming in fam for fam in _WRITE_TYPE_FAMILIES
+    )
 
 
 def upsert_snapshot(

@@ -63,29 +63,34 @@ def table_rows(sf_dir: str, name: str) -> int | None:
         return None
 
 
+def parquet_bytes(path: str) -> int | None:
+    """On-disk bytes of the ``*.parquet`` files at `path`: the file
+    itself, or every one under the directory, recursively. Sidecars
+    (_SUCCESS, .crc) are not data and would nudge a gate near its
+    threshold (r9 ADVICE, low), so they never count. None when the path
+    is absent or unreadable or holds no parquet file: a 0 would read as
+    "tiny" and flip a size gate to its unsafe side. The one size walker:
+    every size gate and corpus-size rule reads it."""
+    try:
+        if os.path.isfile(path):
+            return os.path.getsize(path) if path.endswith(".parquet") else None
+        sizes = [
+            os.path.getsize(os.path.join(dp, f))
+            for dp, _dirs, files in os.walk(path)
+            for f in files
+            if f.endswith(".parquet")
+        ]
+        return sum(sizes) if sizes else None
+    except OSError:
+        return None
+
+
 def table_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk byte size of a canonical table's parquet files — no
-    Spark job, no data read. Scale gates read this to decide whether
-    re-computing a derived frame (scan included) is cheaper than
-    materializing it once (queries.tpch.persist_if_large); None when
-    the table is absent, unreadable or a directory with no *.parquet
-    file, so callers can pick their safe side (a 0 would read as "tiny"
-    and flip both size gates to their unsafe sides)."""
-    try:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isdir(path):
-            # *.parquet only: sidecars (_SUCCESS, .crc) are not data and
-            # would nudge the gate near its threshold (r9 ADVICE, low)
-            sizes = [
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _dirs, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            ]
-            return sum(sizes) if sizes else None
-        return os.path.getsize(path)
-    except Exception:
-        return None
+    Spark job, no data read (see parquet_bytes). The size gates in
+    ``materialize`` read this; None means unknown, and each caller
+    takes its safe side."""
+    return parquet_bytes(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def table_fingerprint(sf_dir: str, name: str) -> str | None:

@@ -18,7 +18,7 @@ import json
 import sys
 import time
 
-from iceberg_query_engine_spark.queries.tpch import release_gated_persists
+from iceberg_query_engine_spark.materialize import release
 
 
 def main() -> int:
@@ -64,11 +64,9 @@ def main() -> int:
             n_fail += 1
             print(f"FAIL {name}: {row.get('detail', '')}", file=sys.stderr)
         out[name] = row
-        # honor persist_if_large's ownership contract (r10): release
-        # gated persists between queries so a large-sf sweep doesn't
-        # accumulate MEMORY_AND_DISK caches across 293 entries
-        release_gated_persists()
-        spark.catalog.clearCache()
+        # free the query's persists and checkpoint blocks, so a sweep
+        # does not pile them up across 293 entries
+        release()
 
     artifact = {
         "round": rnd,

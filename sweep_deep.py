@@ -50,6 +50,7 @@ def main() -> int:
     import __spark_entry__ as e
     from pyspark.sql import SparkSession
 
+    from iceberg_query_engine_spark.materialize import release
     from iceberg_query_engine_spark.testing import duck_connect
 
     # the driver's environment, like oracle_sweep.py (ANSI default on)
@@ -84,6 +85,7 @@ def main() -> int:
         except Exception as exc:
             row = {"match": False, "error": repr(exc)[:300]}
         row["secs"] = round(time.perf_counter() - t0, 3)
+        release()
         n_fail += 0 if row.get("match") else 1
         out["queries"][name] = row
         print(f"{name}: {'OK' if row.get('match') else 'FAIL'} ({row['secs']}s)")

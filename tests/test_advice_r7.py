@@ -184,15 +184,21 @@ def test_knn_clusters_unpersists_graph(spark, sf_smoke):
         sim_knn_clusters,
     )
 
-    # the SQL cache manager tracks DataFrame.persist entries (and NOT
-    # localCheckpoint block caches, which cc_labels legitimately
-    # creates and the ContextCleaner reclaims) — exactly the leak the
-    # advice named. Start clean so the probe is unambiguous.
-    spark.catalog.clearCache()
+    # the SQL cache manager tracks DataFrame.persist entries — exactly
+    # the leak the advice named. It does NOT track localCheckpoint
+    # blocks, which cc_labels legitimately creates: those stay
+    # registered after clearCache() and a Python and JVM gc (measured),
+    # so only materialize.release() frees them. Start clean so both
+    # probes are unambiguous.
+    from iceberg_query_engine_spark.materialize import release
+
+    release()
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty()
     sim_knn_clusters(spark, sf_smoke).count()
     assert cm.isEmpty(), "sim_knn_clusters leaked a persisted graph"
+    release()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
 
 # -- dedup_pipeline ledger invariants (r8): replacement chains are the

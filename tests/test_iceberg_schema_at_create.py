@@ -128,3 +128,33 @@ def test_refused_deletes_leave_no_delete_file(spark, tmp_path):
         (1, 10),
         (2, 20),
     ]
+
+
+def test_type_changing_write_is_refused_and_table_still_reads(spark, tmp_path):
+    """A write whose column keeps its name but changes type family (a
+    string into a bigint field) is refused before any file is written,
+    for an append and an upsert alike; the table keeps reading as
+    bigint. Widening within a family (int into bigint, float into
+    double) stays accepted."""
+    path = str(tmp_path / "t")
+    write_snapshot(_kv(spark, [(1, 10), (2, 20)]), path)
+    files_before = set(os.listdir(os.path.join(path, "data")))
+    bad = spark.createDataFrame([(3, "x")], "k bigint, v string")
+    with pytest.raises(ValueError, match=r"'v' is string, but the current schema has bigint"):
+        write_snapshot(bad, path)
+    with pytest.raises(ValueError, match=r"'v' is string"):
+        upsert_snapshot(spark, path, bad, ["k"])
+    assert set(os.listdir(os.path.join(path, "data"))) == files_before
+    out = IcebergLiteTable(path).read(spark)
+    assert out.schema.simpleString() == "struct<k:bigint,v:bigint>"
+    assert sorted(tuple(r) for r in out.filter("v > 5").collect()) == [(1, 10), (2, 20)]
+
+    write_snapshot(spark.createDataFrame([(4, 40)], "k int, v smallint"), path)
+    fpath = str(tmp_path / "f")
+    write_snapshot(spark.createDataFrame([(1, 1.5)], "k bigint, x double"), fpath)
+    write_snapshot(spark.createDataFrame([(2, 2.5)], "k bigint, x float"), fpath)
+    with pytest.raises(ValueError, match=r"'x' is decimal\(10,2\)"):
+        write_snapshot(spark.createDataFrame([(3, 1)], "k bigint, x int")
+                       .selectExpr("k", "CAST(x AS decimal(10,2)) AS x"), fpath)
+    assert sorted(r.k for r in IcebergLiteTable(path).read(spark).collect()) == [1, 2, 4]
+    assert sorted(r.x for r in IcebergLiteTable(fpath).read(spark).collect()) == [1.5, 2.5]

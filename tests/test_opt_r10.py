@@ -5,8 +5,9 @@
   loses the planner's sort-merge fallback at 100 TB), and the three
   gated queries keep their BroadcastHashJoin at test scale.
 - persist_if_large unpersist contract (#6): a gated query leaves no
-  persisted RDDs once release_gated_persists() runs — the hook any
-  long-lived session calls between queries (bench.py does per repeat).
+  persisted RDDs once materialize.release() runs (still reachable as
+  tpch.release_gated_persists) — the hook any long-lived session calls
+  between queries (bench.py does per repeat).
 - dedup_simhash respread (#4): MEASURED A NET LOSS at every corpus
   size tried (sf0.1 and a 75k-doc corpus with oversized buckets) —
   the vote stage's work is PAIR_BUCKET_CAP-bounded, so the extra
@@ -21,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from iceberg_query_engine_spark import materialize
+from iceberg_query_engine_spark.materialize import broadcast_if_small, persist_if_large
 from iceberg_query_engine_spark.plans import introspect as pi
 from iceberg_query_engine_spark.queries import (
     dedup_suite,
@@ -29,13 +32,7 @@ from iceberg_query_engine_spark.queries import (
     similarity_suite,
     text_suite,
 )
-from iceberg_query_engine_spark.queries.tpch import (
-    _GATED_PERSISTS,
-    broadcast_if_small,
-    persist_if_large,
-    release_gated_persists,
-    tables,
-)
+from iceberg_query_engine_spark.queries.tpch import release_gated_persists, tables
 
 
 # ---------------------------------------------------------------- broadcast
@@ -44,7 +41,7 @@ def test_broadcast_hint_only_below_gate(spark, sf_smoke, monkeypatch):
     frame = lineitem.select("l_orderkey").distinct()
     hinted = broadcast_if_small(frame, sf_smoke, "lineitem")
     assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_HINT_MAX_BYTES", "1")
+    monkeypatch.setattr(materialize, "BROADCAST_HINT_MAX_SOURCE_BYTES", 1)
     unhinted = broadcast_if_small(frame, sf_smoke, "lineitem")
     analyzed = unhinted._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed
@@ -70,23 +67,31 @@ def test_gated_queries_keep_broadcast_join_at_test_scale(spark, sf_smoke):
 
 
 def test_malformed_env_falls_back(spark, sf_smoke, monkeypatch):
+    """The thresholds are constants: the environment variables that
+    once overrode them are not read, garbage or not."""
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", "not-a-number")
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_HINT_MAX_BYTES", "1")
     (lineitem,) = tables(spark, sf_smoke, "lineitem")
-    # must not raise; sf0.001 lineitem ≪ 256 MB default → gate off
+    # must not raise; sf0.001 lineitem ≪ 256 MB → gate off
     df = persist_if_large(lineitem.select("l_orderkey"), sf_smoke, "lineitem")
     assert df.storageLevel.useMemory is False
+    # ≪ 1 GB → the hint stays, whatever the env says
+    hinted = broadcast_if_small(df.distinct(), sf_smoke, "lineitem")
+    assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
 
 
 # ---------------------------------------------------------------- unpersist
 def test_release_gated_persists_drops_caches(spark, sf_smoke, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_MIN_BYTES", "1")
+    monkeypatch.setattr(materialize, "MATERIALIZE_MIN_BYTES", 1)
     (lineitem,) = tables(spark, sf_smoke, "lineitem")
     df = persist_if_large(lineitem.select("l_orderkey"), sf_smoke, "lineitem")
     assert df.storageLevel.useMemory  # gate fired
     df.count()  # materialize
+    # the old name, which perfbench calls, is the one release
+    assert release_gated_persists is materialize.release
     assert release_gated_persists() >= 1
-    assert not _GATED_PERSISTS
     assert df.storageLevel.useMemory is False  # no persisted RDD remains
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
 
 # ------------------------------------------------------ shared probe pass

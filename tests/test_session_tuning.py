@@ -12,7 +12,7 @@ from iceberg_query_engine_spark.queries import catalog
 
 
 def test_corpus_bytes_counts_parquet(sf_oracle):
-    n = S.corpus_bytes(sf_oracle)
+    n = S.parquet_bytes(sf_oracle)
     assert n > 100_000  # sf0.01 corpus is several MB of parquet
 
 
@@ -26,7 +26,7 @@ def test_small_corpus_untouched(spark, sf_oracle):
 
 
 def test_large_corpus_engages_all_levers(spark, sf_oracle, monkeypatch):
-    monkeypatch.setattr(S, "corpus_bytes", lambda d: 20 << 30)  # pretend 20 GB
+    monkeypatch.setattr(S, "parquet_bytes", lambda d: 20 << 30)  # pretend 20 GB
     applied = S.tune_for_corpus(spark, sf_oracle, cpus=32)
     try:
         assert applied["spark.sql.autoBroadcastJoinThreshold"] == str(64 * 1024 * 1024)
@@ -56,7 +56,7 @@ def test_sf10_corpus_floors_split_at_16m(spark, sf_oracle, monkeypatch):
     """sf10 (~2.5 GB corpus): the 3-splits-per-core target lands below
     the 16 MB floor — 1.9 GB lineitem / 16 MB ≈ 120 scan tasks instead
     of the stock ~15, so q1/q6 use all 32 cores."""
-    monkeypatch.setattr(S, "corpus_bytes", lambda d: int(2.5 * (1 << 30)))
+    monkeypatch.setattr(S, "parquet_bytes", lambda d: int(2.5 * (1 << 30)))
     applied = S.tune_for_corpus(spark, sf_oracle, cpus=32)
     try:
         assert applied["spark.sql.files.maxPartitionBytes"] == str(16 * 1024 * 1024)
