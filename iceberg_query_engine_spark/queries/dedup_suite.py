@@ -238,11 +238,11 @@ def _lsh_candidate_pairs(
     documents: DataFrame, band_size: int, cap: int, observation=None
 ) -> DataFrame:
     """MinHash-LSH candidate pairs — the corpus-scale candidate
-    generator shared by the containment and clusters paths.
+    generator shared by the minhash, containment and clusters paths.
 
-    Same plan shape as dedup_minhash_lsh (pinned there): ONE document
-    scan, ONE shuffle on band key, in-bucket pair expansion via nested
-    explode — no self-join, no cartesian, no source-bucket cliff.
+    Plan shape (pinned in tests/test_plans.py): ONE document scan, ONE
+    shuffle on band key, in-bucket pair expansion via nested explode —
+    no self-join, no cartesian, no source-bucket cliff.
     Smaller band_size = higher recall at lower similarity (P(candidate)
     = 1-(1-J^band_size)^n_bands), at the cost of denser buckets; `cap`
     bounds the quadratic in-bucket expansion either way.
@@ -260,7 +260,10 @@ def _lsh_candidate_pairs(
 
 
 def _band_rows(documents: DataFrame, band_size: int) -> DataFrame:
-    """(doc_id, toks, sz, band) rows — one per (doc, LSH band key).
+    """(doc_id, toks, sz, setkey, band) rows — one per (doc, LSH band
+    key). setkey is the hashed sorted token set (8 B): the sub-hub
+    window's partition key, also stored at rest by the indexed delta
+    (a formula change is a layout change of its `_v3` index).
 
     Band keys come from the STRING tokens (the salted-md5 minhash the
     oracles mirror); the carried verification payload `toks` is the
@@ -277,14 +280,18 @@ def _band_rows(documents: DataFrame, band_size: int) -> DataFrame:
         "doc_id",
         toksx.alias("toks"),
         F.size(toks).alias("sz"),
-        F.explode(_minhash_band_expr(toks, band_size)).alias("band"),
+        F.xxhash64(F.array_sort(toksx)).alias("setkey"),
+        F.explode(_minhash_band_expr(_minhash_sig_expr(toks), band_size)).alias(
+            "band"
+        ),
     )
 
 
 def _pairs_from_bands(bands: DataFrame, cap: int, observation) -> DataFrame:
-    """In-bucket pair expansion over a (doc_id, toks, sz, band) stream
-    — split out of _lsh_candidate_pairs so the incremental pipeline can
-    run it on a batch-affected SUBSET of the band stream.
+    """In-bucket pair expansion over a _band_rows stream (doc_id, toks,
+    sz, setkey, band) — split out of _lsh_candidate_pairs so the
+    incremental pipeline can run it on a batch-affected SUBSET of the
+    band stream.
 
     Buckets at or under `cap` expand to all C(bn,2) pairs. Over-cap
     buckets STAR-expand (r9, the skew-stress mitigation): every member
@@ -307,49 +314,11 @@ def _pairs_from_bands(bands: DataFrame, cap: int, observation) -> DataFrame:
     the sub-hub pairs verify at J=1.0 and stitch the subfamily into
     one component. Still O(bn) pairs per bucket (≤2 per member).
 
-    Plan shape: ONE exchange and ONE sort carry all three windows
-    (pinned in tests/test_plans.py). hash(band) satisfies both window
-    clusterings (band ⊆ (band, setkey)), the explicit (band, setkey)
-    sort prefix-satisfies the band-partitioned windows, and the hub is
-    min_by over the UNORDERED band window — identical to first_value
-    ordered by doc_id (doc_id is unique within a band), so no
-    (band, doc_id) sort is ever needed. The naive stack costs three
-    successive sorts of the same partition per pass — on the
-    degenerate mega-band (60% of docs in one bucket at 5M) each is a
-    single-threaded multi-million-row sort, measured ~2× off the
-    clusters wall at 5M docs. Memory-safe by construction: over-cap
-    buckets never reach collect_list. The star expansion is observable
+    The bucket stats come from _band_stats (one exchange, one sort;
+    see there). Memory-safe by construction: over-cap buckets never
+    reach collect_list. The star expansion is observable
     (`rows_star_capped`), same contract as _cap_buckets' drop metric."""
-    from pyspark.sql import Window
-
-    wb = Window.partitionBy("band")
-    # the sub-hub needs only its ID: within an identical-set subgroup
-    # the sub-hub's token SET equals every member's own, so star2 uses
-    # the MEMBER's toks/sz for the a-side (same Jaccard/containment by
-    # construction) and the window carries one LONG per row instead of
-    # a struct with a second token-array copy — the width that OOMed
-    # the 24M-row degenerate band partition at 10M docs. setkey is the
-    # hashed sorted set (a 64-bit collision would merge two subgroups —
-    # the same negligible-collision acceptance as the token hashing).
-    wso = Window.partitionBy("band", "setkey")
-    sized = (
-        bands.withColumn("setkey", F.xxhash64(F.array_sort("toks")))
-        .repartition("band")
-        .sortWithinPartitions("band", "setkey")
-        .withColumn("subhub_id", F.min("doc_id").over(wso))
-        .withColumn("bn", F.count(F.lit(1)).over(wb))
-        .withColumn(
-            "hub",
-            F.min_by(F.struct("doc_id", "toks", "sz"), "doc_id").over(wb),
-        )
-        .observe(
-            observation,
-            F.sum(F.when(F.col("bn") > cap, 1).otherwise(0)).alias(
-                "rows_star_capped"
-            ),
-            F.count(F.lit(1)).alias("rows_total"),
-        )
-    )
+    sized = _band_stats(bands, cap, observation, ("toks", "sz"))
     capped = sized.filter((F.col("bn") >= 2) & (F.col("bn") <= cap))
     buckets = capped.groupBy("band").agg(
         F.collect_list(F.struct("doc_id", "toks", "sz")).alias("docs")
@@ -378,13 +347,64 @@ def _pairs_from_bands(bands: DataFrame, cap: int, observation) -> DataFrame:
     return full.unionByName(star).unionByName(star2)
 
 
-def _lsh_band_sql(band_size: int, cap: int, where: str = "") -> str:
-    """DuckDB twin of _lsh_candidate_pairs: CTEs ending in `cand`
-    (a_id, a_toks, b_id, b_toks) — full expansion for ≤cap buckets,
-    min-doc_id-hub STAR expansion for over-cap buckets, mirroring
-    _pairs_from_bands exactly. `where`: optional SQL filter on the
-    documents scan (the pipeline restricts clustering to the train
-    split)."""
+def _band_stats(rows: DataFrame, cap: int, observation, hub_payload) -> DataFrame:
+    """The star windows over a (doc_id, band, setkey, ...) stream: per
+    row, its bucket's size `bn`, the bucket `hub` (min-doc_id member as
+    a struct of doc_id and the `hub_payload` columns) and the
+    identical-set `subhub_id`; `observation` counts the rows of
+    over-`cap` buckets. Shared by _pairs_from_bands and the indexed
+    delta's narrow id/setkey stream.
+
+    The sub-hub needs only its ID: within an identical-set subgroup the
+    sub-hub's token SET equals every member's own, so a star2 pair uses
+    the MEMBER's toks/sz for its a-side (same Jaccard/containment by
+    construction) and the window carries one LONG per row instead of a
+    second token-array copy — the width that OOMed the 24M-row
+    degenerate band partition at 10M docs. setkey is the hashed sorted
+    set (a 64-bit collision would merge two subgroups — the same
+    negligible-collision acceptance as the token hashing).
+
+    Plan shape: ONE exchange and ONE sort carry all three windows
+    (pinned in tests/test_plans.py). hash(band) satisfies both window
+    clusterings (band ⊆ (band, setkey)), the explicit (band, setkey)
+    sort prefix-satisfies the band-partitioned windows, and the hub is
+    min_by over the UNORDERED band window — identical to first_value
+    ordered by doc_id (doc_id is unique within a band), so no
+    (band, doc_id) sort is ever needed. The naive stack costs three
+    successive sorts of the same partition per pass — on the
+    degenerate mega-band (60% of docs in one bucket at 5M) each is a
+    single-threaded multi-million-row sort, measured ~2× off the
+    clusters wall at 5M docs."""
+    from pyspark.sql import Window
+
+    wb = Window.partitionBy("band")
+    wso = Window.partitionBy("band", "setkey")
+    return (
+        rows.repartition("band")
+        .sortWithinPartitions("band", "setkey")
+        .withColumn("subhub_id", F.min("doc_id").over(wso))
+        .withColumn("bn", F.count(F.lit(1)).over(wb))
+        .withColumn(
+            "hub",
+            F.min_by(F.struct("doc_id", *hub_payload), "doc_id").over(wb),
+        )
+        .observe(
+            observation,
+            F.sum(F.when(F.col("bn") > cap, 1).otherwise(0)).alias(
+                "rows_star_capped"
+            ),
+            F.count(F.lit(1)).alias("rows_total"),
+        )
+    )
+
+
+def _lsh_sig_band_ctes(
+    band_size: int, where: str = "", sig_cols: bool = False
+) -> str:
+    """DuckDB twin of _band_rows: CTEs `docs`, `sigs` (the salted-md5
+    signature h0..h7, mirroring _minhash_sig_expr) and `all_bands`
+    (doc_id, toks, band — plus h0..h7 when `sig_cols`). `where`: optional
+    SQL filter on the documents scan."""
     sig_exprs = ", ".join(
         "list_min(list_transform(toks, t -> substr(md5(t || '#{s}'), {p}, 8))) "
         "AS h{i}".format(s=i // 4, p=1 + 8 * (i % 4), i=i)
@@ -397,6 +417,7 @@ def _lsh_band_sql(band_size: int, cap: int, where: str = "") -> str:
         )
         for bi in range(N_HASHES // band_size)
     )
+    hs = "".join(f"h{i}, " for i in range(N_HASHES)) if sig_cols else ""
     return f"""
 docs AS (
   SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
@@ -404,8 +425,18 @@ docs AS (
 ), sigs AS (
   SELECT doc_id, toks, {sig_exprs} FROM docs
 ), all_bands AS (
-  SELECT doc_id, toks, unnest([{band_exprs}]) AS band FROM sigs
-), sized AS (
+  SELECT doc_id, toks, {hs}unnest([{band_exprs}]) AS band FROM sigs
+)"""
+
+
+def _lsh_band_sql(band_size: int, cap: int, where: str = "") -> str:
+    """DuckDB twin of _lsh_candidate_pairs: CTEs ending in `cand`
+    (a_id, a_toks, b_id, b_toks) — full expansion for ≤cap buckets,
+    min-doc_id-hub STAR expansion for over-cap buckets, mirroring
+    _pairs_from_bands exactly. `where`: optional SQL filter on the
+    documents scan (the pipeline restricts clustering to the train
+    split)."""
+    return f"""{_lsh_sig_band_ctes(band_size, where)}, sized AS (
   SELECT doc_id, toks, band,
     COUNT(*) OVER (PARTITION BY band) AS bn,
     MIN(doc_id) OVER (PARTITION BY band) AS hub_id,
@@ -533,18 +564,7 @@ def _cluster_labels(documents: DataFrame) -> DataFrame:
     core shared by dedup_clusters and dedup_representative (see
     dedup_clusters' docstring for the algorithm and scale notes)."""
     cand = _lsh_candidate_pairs(documents, CLUSTER_BAND_SIZE, CLUSTER_CAP)
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.col("a.sz") + F.col("b.sz") - inter
-    pairs = (
-        cand.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-        .distinct()
-        .filter(F.col("jaccard") >= 0.6)
-        .select("doc_a", "doc_b")
-    )
+    pairs = _verified_jaccard(cand, 0.6).select("doc_a", "doc_b")
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).toDF("src", "dst")
@@ -986,13 +1006,12 @@ GROUP BY t.source, c.n ORDER BY t.source
 
 
 # --------------------------------------------------------------------------
-def _minhash_band_expr(toks, band_size: int):
-    """Array of LSH band-key strings from the MinHash signature:
-    sig_i = min over tokens of a 32-bit slice of md5(token ⊕ salt);
-    band key bi = "bi|sig_{bi*band_size}|...". Values are identical to
-    computing each signature column separately (same md5, same
-    substring, same array_min), so every DuckDB oracle that mirrors
-    the salted-md5 construction is unchanged.
+def _minhash_sig_expr(toks):
+    """Array of the 8 MinHash signature strings: sig_i = min over
+    tokens of a 32-bit slice of md5(token ⊕ salt). The one salted-md5
+    builder: band keys (_minhash_band_expr) and the estimator's
+    signature (dedup_pr_eval) both read it, and every DuckDB oracle
+    mirrors it (_lsh_sig_band_ctes).
 
     Why this shape (the 500k-doc sweep's lesson): one md5 yields 32
     hex chars = four independent 8-char (32-bit) slices, so the 8
@@ -1007,44 +1026,6 @@ def _minhash_band_expr(toks, band_size: int):
     run cheap substring lambdas over the bound arrays. Mins compare
     fixed-width hex strings: lexicographic == numeric order.
     """
-
-    def salted_md5(salt: int):
-        return lambda t: F.md5(F.concat(t, F.lit(f"#{salt}")).cast("binary"))
-
-    md5s = F.array(
-        F.transform(toks, salted_md5(0)),
-        F.transform(toks, salted_md5(1)),
-    )
-    n_bands = N_HASHES // band_size
-
-    def bands_of(ms):
-        def sub_of(piece: int):
-            return lambda h: F.substring(h, 1 + 8 * piece, 8)
-
-        sig = []
-        for i in range(N_HASHES):
-            salt, piece = divmod(i, 4)
-            sig.append(
-                F.array_min(F.transform(F.element_at(ms, salt + 1), sub_of(piece)))
-            )
-        return F.array(
-            *[
-                F.concat_ws(
-                    "|",
-                    F.lit(str(bi)),
-                    *[sig[bi * band_size + j] for j in range(band_size)],
-                )
-                for bi in range(n_bands)
-            ]
-        )
-
-    return F.element_at(F.transform(F.array(md5s), bands_of), 1)
-
-
-def _minhash_sig_expr(toks):
-    """Array of the 8 MinHash signature strings — same salted-md5
-    construction (and let-scope sharing) as _minhash_band_expr, so the
-    values are identical to the band keys' components."""
 
     def salted_md5(salt: int):
         return lambda t: F.md5(F.concat(t, F.lit(f"#{salt}")).cast("binary"))
@@ -1069,6 +1050,31 @@ def _minhash_sig_expr(toks):
     return F.element_at(F.transform(F.array(md5s), sigs_of), 1)
 
 
+def _minhash_band_expr(sig, band_size: int):
+    """Array of LSH band-key strings from a MinHash signature array
+    (_minhash_sig_expr, or a column holding one): band key bi =
+    "bi|sig_{bi*band_size}|...". The signature is bound once in the
+    same let scope, so an inline signature expression is evaluated
+    once per row, not once per band."""
+
+    def bands_of(sg):
+        return F.array(
+            *[
+                F.concat_ws(
+                    "|",
+                    F.lit(str(bi)),
+                    *[
+                        F.element_at(sg, bi * band_size + j + 1)
+                        for j in range(band_size)
+                    ],
+                )
+                for bi in range(N_HASHES // band_size)
+            ]
+        )
+
+    return F.element_at(F.transform(F.array(sig), bands_of), 1)
+
+
 def dedup_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH quality gate: over the band-generated candidate pairs,
     (a) candidate PRECISION at the 0.7 exact-Jaccard threshold and
@@ -1077,9 +1083,11 @@ def dedup_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs before trusting its banding parameters at 100 TB
     (the text twin of sim_recall_eval on the embedding side).
 
-    Scale shape: identical to dedup_minhash_lsh (one scan, one band
-    shuffle, in-bucket pair expansion under the cap) plus an 8-element
-    signature array per doc; the eval summary is a 1-row aggregate.
+    Scale shape: the banding of _lsh_candidate_pairs (one scan, one
+    band shuffle, in-bucket pair expansion under the cap) without its
+    star branches, plus the 8-element signature array each doc carries;
+    the band keys are cut from that same array, so md5 runs once per
+    token. The eval summary is a 1-row aggregate.
     Over-cap buckets are DROPPED here (not star-expanded as in the
     dedup ops): this op calibrates the MinHash estimator over the
     banding's organic candidate distribution, and hub-star pairs are
@@ -1090,10 +1098,12 @@ def dedup_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents,) = tables(spark, sf_dir, "documents")
     toks = F.array_distinct(_tokens())
     bands = documents.select(
+        "doc_id", toks.alias("toks"), _minhash_sig_expr(toks).alias("sig")
+    ).select(
         "doc_id",
-        toks.alias("toks"),
-        _minhash_sig_expr(toks).alias("sig"),
-        F.explode(_minhash_band_expr(toks, BAND_SIZE)).alias("band"),
+        "toks",
+        "sig",
+        F.explode(_minhash_band_expr(F.col("sig"), BAND_SIZE)).alias("band"),
     )
     capped = bands.withColumn(
         "bn", F.count(F.lit(1)).over(Window.partitionBy("band"))
@@ -1137,29 +1147,11 @@ def dedup_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pr_eval_oracle() -> str:
-    sig_exprs = ", ".join(
-        "list_min(list_transform(toks, t -> substr(md5(t || '#{s}'), {p}, 8))) "
-        "AS h{i}".format(s=i // 4, p=1 + 8 * (i % 4), i=i)
-        for i in range(N_HASHES)
-    )
-    band_exprs = ", ".join(
-        "'{0}' || '|' || {1}".format(
-            bi, " || '|' || ".join(f"h{bi * BAND_SIZE + j}" for j in range(BAND_SIZE))
-        )
-        for bi in range(N_HASHES // BAND_SIZE)
-    )
     match_terms = " + ".join(
         f"(CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END)" for i in range(N_HASHES)
     )
-    hs = ", ".join(f"h{i}" for i in range(N_HASHES))
     return f"""
-WITH docs AS (
-  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents
-), sigs AS (
-  SELECT doc_id, toks, {sig_exprs} FROM docs
-), all_bands AS (
-  SELECT doc_id, toks, {hs}, unnest([{band_exprs}]) AS band FROM sigs
-), bands AS (
+WITH {_lsh_sig_band_ctes(BAND_SIZE, sig_cols=True).lstrip()}, bands AS (
   SELECT * FROM (
     SELECT *, COUNT(*) OVER (PARTITION BY band) AS bn FROM all_bands
   ) WHERE bn >= 2 AND bn <= {BUCKET_CAP}
@@ -1181,123 +1173,35 @@ FROM per
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH banding: signature → band keys → bucket join →
-    exact-Jaccard verification of candidates only (the 100 TB path)."""
+    exact-Jaccard verification of candidates only (the 100 TB path).
+    Candidates, bucket cap and hub star: _lsh_candidate_pairs."""
     (documents,) = tables(spark, sf_dir, "documents")
-    toks = F.array_distinct(_tokens())
-    # hashed-long verification payload, string-token band keys — the
-    # _band_rows representation (see there for the value argument)
-    toksx = F.transform(toks, lambda t: F.xxhash64(t))
-    bands = documents.select(
-        "doc_id",
-        toksx.alias("toks"),
-        F.explode(_minhash_band_expr(toks, BAND_SIZE)).alias("band"),
+    pairs = _lsh_candidate_pairs(
+        documents, BAND_SIZE, BUCKET_CAP, "lsh_band_cap_minhash"
     )
-    # Bucket-size cap: a band bucket holding B docs yields B(B-1)/2
-    # candidate pairs; degenerate mega-buckets (boilerplate-heavy
-    # corpora) blow candidate generation up quadratically. Buckets at
-    # or under the cap fully expand; over-cap buckets STAR-expand to
-    # the min-doc_id hub (r9 skew mitigation — O(B) pairs and the
-    # boilerplate family is still CAUGHT; see _pairs_from_bands for
-    # the trade). Deterministic either way, mirrored in the oracle.
-    #
-    # Plan shape (100 TB): ONE document scan (signatures are the
-    # expensive map stage — a self-join would compute them twice),
-    # ONE shuffle on `band`; the size count, the hub window, and the
-    # per-bucket collect_list share that partitioning (no second
-    # exchange), and candidate pairs are expanded inside each ≤CAP
-    # bucket with nested explode — never a join.
-    from pyspark.sql import Window
+    return _verified_jaccard(pairs, 0.7).orderBy("doc_a", "doc_b")
 
-    wb = Window.partitionBy("band")
-    wbo = (
-        Window.partitionBy("band")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    wso = Window.partitionBy("band", "setkey")
-    sized = (
-        bands.withColumn("setkey", F.xxhash64(F.array_sort("toks")))
-        .withColumn("bn", F.count(F.lit(1)).over(wb))
-        .withColumn("hub", F.first(F.struct("doc_id", "toks")).over(wbo))
-        .withColumn("subhub_id", F.min("doc_id").over(wso))
-        .observe(
-            "lsh_band_cap_minhash",
-            F.sum(F.when(F.col("bn") > BUCKET_CAP, 1).otherwise(0)).alias(
-                "rows_star_capped"
-            ),
-            F.count(F.lit(1)).alias("rows_total"),
-        )
-    )
-    capped = sized.filter((F.col("bn") >= 2) & (F.col("bn") <= BUCKET_CAP))
-    buckets = capped.groupBy("band").agg(
-        F.collect_list(F.struct("doc_id", "toks")).alias("docs")
-    )
-    pairs = buckets.select(
-        F.explode("docs").alias("a"), F.col("docs")
-    ).select("a", F.explode("docs").alias("b")).filter(
-        F.col("a.doc_id") < F.col("b.doc_id")
-    )
-    star = sized.filter(
-        (F.col("bn") > BUCKET_CAP) & (F.col("doc_id") != F.col("hub.doc_id"))
-    ).select(F.col("hub").alias("a"), F.struct("doc_id", "toks").alias("b"))
-    star2 = sized.filter(
-        (F.col("bn") > BUCKET_CAP)
-        & (F.col("doc_id") != F.col("subhub_id"))
-        & (F.col("subhub_id") != F.col("hub.doc_id"))
-    ).select(
-        F.struct(F.col("subhub_id").alias("doc_id"), "toks").alias("a"),
-        F.struct("doc_id", "toks").alias("b"),
-    )
-    pairs = pairs.unionByName(star).unionByName(star2)
+
+def _verified_jaccard(cand: DataFrame, threshold: float) -> DataFrame:
+    """Distinct (doc_a, doc_b, jaccard) over candidate a/b structs,
+    kept at exact Jaccard ≥ `threshold`. |A ∪ B| = |A| + |B| − |A ∩ B|
+    from the carried sizes: one array traversal per pair, not two."""
     inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
-    cand = pairs.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.round(inter.cast("double") / union, 6).alias("jaccard"),
-    ).distinct()
-    return cand.filter(F.col("jaccard") >= 0.7).orderBy("doc_a", "doc_b")
+    union = F.col("a.sz") + F.col("b.sz") - inter
+    return (
+        cand.select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.round(inter.cast("double") / union, 6).alias("jaccard"),
+        )
+        .distinct()
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def _minhash_oracle() -> str:
-    sig_exprs = ", ".join(
-        "list_min(list_transform(toks, t -> substr(md5(t || '#{s}'), {p}, 8))) "
-        "AS h{i}".format(s=i // 4, p=1 + 8 * (i % 4), i=i)
-        for i in range(N_HASHES)
-    )
-    band_exprs = ", ".join(
-        "'{0}' || '|' || {1}".format(
-            bi, " || '|' || ".join(f"h{bi * BAND_SIZE + j}" for j in range(BAND_SIZE))
-        )
-        for bi in range(N_HASHES // BAND_SIZE)
-    )
     return f"""
-WITH docs AS (
-  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents
-), sigs AS (
-  SELECT doc_id, toks, {sig_exprs} FROM docs
-), all_bands AS (
-  SELECT doc_id, toks, unnest([{band_exprs}]) AS band FROM sigs
-), sized AS (
-  SELECT doc_id, toks, band,
-    COUNT(*) OVER (PARTITION BY band) AS bn,
-    MIN(doc_id) OVER (PARTITION BY band) AS hub_id,
-    first_value(toks) OVER (PARTITION BY band ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS hub_toks,
-    MIN(doc_id) OVER (PARTITION BY band, list_sort(toks)) AS sub_hub_id
-  FROM all_bands
-), bands AS (
-  SELECT doc_id, toks, band FROM sized WHERE bn <= {BUCKET_CAP}
-), cand AS (
-  SELECT a.doc_id AS a_id, a.toks AS a_toks, b.doc_id AS b_id, b.toks AS b_toks
-  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-  UNION ALL
-  SELECT hub_id, hub_toks, doc_id, toks FROM sized
-  WHERE bn > {BUCKET_CAP} AND doc_id <> hub_id
-  UNION ALL
-  SELECT sub_hub_id, toks, doc_id, toks FROM sized
-  WHERE bn > {BUCKET_CAP} AND doc_id <> sub_hub_id AND sub_hub_id <> hub_id
-)
+WITH {_lsh_band_sql(BAND_SIZE, BUCKET_CAP).lstrip()}
 SELECT DISTINCT a_id AS doc_a, b_id AS doc_b,
   round(CAST(length(list_intersect(a_toks, b_toks)) AS DOUBLE)
         / length(list_distinct(a_toks || b_toks)), 6) AS jaccard
@@ -1974,18 +1878,7 @@ def _pipeline_delta(spark: SparkSession, sf_dir: str, split: float) -> DataFrame
     )
     bands = bands_all.join(F.broadcast(batch_bands), "band", "semi")
     cand = _pairs_from_bands(bands, CLUSTER_CAP, "pipeline_delta_band_cap")
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.col("a.sz") + F.col("b.sz") - inter
-    vpairs = (
-        cand.filter(F.col("b.doc_id") >= t)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-        .distinct()
-        .filter(F.col("jaccard") >= 0.6)
-    )
+    vpairs = _verified_jaccard(cand.filter(F.col("b.doc_id") >= t), 0.6)
     near = (
         vpairs.select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("partner"))
         .groupBy("doc_id")
@@ -2141,10 +2034,7 @@ def _pipeline_delta_index_dir(
         # id-only stream — existing members' token ARRAYS are fetched
         # only for docs that can appear in a batch-sided pair
         _band_rows(existing_train, CLUSTER_BAND_SIZE).select(
-            "doc_id",
-            "band",
-            "sz",
-            F.xxhash64(F.array_sort("toks")).alias("setkey"),
+            "doc_id", "band", "sz", "setkey"
         ).withColumn(
             "bb", F.pmod(F.xxhash64("band"), F.lit(nb))
         ).repartition("bb").write.mode("overwrite").partitionBy("bb").parquet(
@@ -2363,33 +2253,11 @@ def _delta_stages_from_stores(
     # Bucket stats stay EXACTLY the rebuild's: bn/hub/sub-hub are
     # computed over the full affected membership, so cap semantics and
     # hub election are bit-identical to dedup_pipeline's.
-    from pyspark.sql import Window
-
-    batch_rows = batch_band_rows.withColumn(
-        "setkey", F.xxhash64(F.array_sort("toks"))
-    )
     members = stored.unionByName(
-        batch_rows.select("doc_id", "band", "sz", "setkey")
+        batch_band_rows.select("doc_id", "band", "sz", "setkey")
     )
-    wb = Window.partitionBy("band")
-    wso = Window.partitionBy("band", "setkey")
-    # one exchange + one sort for all three windows (the
-    # _pairs_from_bands shape, see there)
-    sized = (
-        members.repartition("band")
-        .sortWithinPartitions("band", "setkey")
-        .withColumn("subhub_id", F.min("doc_id").over(wso))
-        .withColumn("bn", F.count(F.lit(1)).over(wb))
-        .withColumn(
-            "hub", F.min_by(F.struct("doc_id", "sz"), "doc_id").over(wb)
-        )
-        .observe(
-            "pipeline_delta_idx_band_cap",
-            F.sum(
-                F.when(F.col("bn") > CLUSTER_CAP, 1).otherwise(0)
-            ).alias("rows_star_capped"),
-            F.count(F.lit(1)).alias("rows_total"),
-        )
+    sized = _band_stats(
+        members, CLUSTER_CAP, "pipeline_delta_idx_band_cap", ("sz",)
     )
 
     toks = F.array_distinct(_tokens())
@@ -2479,18 +2347,7 @@ def _delta_stages_from_stores(
         F.struct("doc_id", "toks", "sz").alias("b"),
     )
     cand = full.unionByName(star).unionByName(star2)
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.col("a.sz") + F.col("b.sz") - inter
-    vpairs = (
-        cand.filter(F.col("b.doc_id") >= lo)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-        .distinct()
-        .filter(F.col("jaccard") >= 0.6)
-    )
+    vpairs = _verified_jaccard(cand.filter(F.col("b.doc_id") >= lo), 0.6)
     near = (
         vpairs.select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("partner"))
         .groupBy("doc_id")

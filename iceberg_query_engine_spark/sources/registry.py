@@ -38,49 +38,51 @@ TABLES = (
 )
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The ``*.parquet`` data files at `path`, sorted: the file itself,
+    or every one under the directory, recursively (a partitioned table
+    keeps its files in ``k=v/`` subdirectories). Sidecars (_SUCCESS,
+    .crc) are not data. Empty when the path is absent or holds no
+    parquet file. The one lister every footer and size read goes
+    through."""
+    if os.path.isfile(path):
+        return [path] if path.endswith(".parquet") else []
+    return sorted(
+        os.path.join(dp, f)
+        for dp, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
 def table_rows(sf_dir: str, name: str) -> int | None:
     """Exact row count of a canonical table from parquet FOOTER metadata
     — no Spark job, no data scan (the count is a required field of
     every parquet footer). Operators that size a partitioning grid by
     row count (e.g. the blocked kNN join) read this instead of running
-    a count() job; None when the table is absent or unreadable so
-    callers can fall back to an in-plan count."""
+    a count() job; None when the table is absent, unreadable or holds
+    no parquet file, so callers can fall back to an in-plan count."""
     try:
         import pyarrow.parquet as pq
 
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isdir(path):
-            parts = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if not parts:
-                return None
-            return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-        return pq.ParquetFile(path).metadata.num_rows
+        files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
+        if not files:
+            return None
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         return None
 
 
 def parquet_bytes(path: str) -> int | None:
-    """On-disk bytes of the ``*.parquet`` files at `path`: the file
-    itself, or every one under the directory, recursively. Sidecars
-    (_SUCCESS, .crc) are not data and would nudge a gate near its
-    threshold (r9 ADVICE, low), so they never count. None when the path
-    is absent or unreadable or holds no parquet file: a 0 would read as
-    "tiny" and flip a size gate to its unsafe side. The one size walker:
+    """On-disk bytes of the ``*.parquet`` files at `path` (see
+    _parquet_files). Sidecars never count: they would nudge a gate
+    near its threshold (r9 ADVICE, low). None when the path is absent
+    or unreadable or holds no parquet file: a 0 would read as "tiny"
+    and flip a size gate to its unsafe side. The one size walker:
     every size gate and corpus-size rule reads it."""
     try:
-        if os.path.isfile(path):
-            return os.path.getsize(path) if path.endswith(".parquet") else None
-        sizes = [
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _dirs, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        ]
-        return sum(sizes) if sizes else None
+        files = _parquet_files(path)
+        return sum(os.path.getsize(f) for f in files) if files else None
     except OSError:
         return None
 
@@ -95,27 +97,26 @@ def table_bytes(sf_dir: str, name: str) -> int | None:
 
 def table_fingerprint(sf_dir: str, name: str) -> str | None:
     """Content fingerprint of a canonical table's parquet files: sha256
-    over the sorted (filename, size, mtime_ns) triples — no data read.
-    Derived caches (e.g. the stored kNN delta index) key on this so a
-    REGENERATED dataset at the same path/row-count invalidates them
-    instead of silently serving stale state (r8 ADVICE). None when the
-    table is absent so callers can fall back to an uncached build."""
+    over the sorted (path relative to the table root, size, mtime_ns)
+    triples — no data read. For a flat table the relative path is the
+    file name. Derived caches (e.g. the stored kNN delta index) key on
+    this so a REGENERATED dataset at the same path/row-count
+    invalidates them instead of silently serving stale state (r8
+    ADVICE). None when the table is absent or holds no parquet file,
+    so callers can fall back to an uncached build."""
     try:
         import hashlib
 
         path = os.path.join(sf_dir, f"{name}.parquet")
-        files = (
-            [os.path.join(path, f) for f in sorted(os.listdir(path))
-             if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
+        files = _parquet_files(path)
+        if not files:
+            return None
+        root = path if os.path.isdir(path) else os.path.dirname(path)
         h = hashlib.sha256()
         for f in files:
             st = os.stat(f)
-            h.update(
-                f"{os.path.basename(f)}|{st.st_size}|{st.st_mtime_ns}\n".encode()
-            )
+            rel = os.path.relpath(f, root)
+            h.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}\n".encode())
         return h.hexdigest()
     except Exception:
         return None
@@ -130,12 +131,11 @@ def _normalize_ns_timestamps(df: DataFrame, path: str) -> DataFrame:
     try:
         import pyarrow.parquet as pq
 
-        target = path
-        if os.path.isdir(path):
-            inner = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            if not inner:
-                return df
-            target = os.path.join(path, inner[0])
+        # an explicitly named file is data whatever its suffix
+        files = [path] if os.path.isfile(path) else _parquet_files(path)
+        if not files:
+            return df
+        target = files[0]
         schema = pq.read_schema(target)
     except Exception:
         return df
@@ -201,11 +201,7 @@ def _respread_if_unsplittable(spark: SparkSession, df: DataFrame, path: str) -> 
     try:
         import pyarrow.parquet as pq
 
-        files = (
-            [os.path.join(path, f) for f in sorted(os.listdir(path)) if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
+        files = [path] if os.path.isfile(path) else _parquet_files(path)
         if not files:
             return df
         worst = 0  # largest bytes-per-row-group over a sample of files

@@ -204,10 +204,7 @@ def stream_dedup_pipeline(
             os.path.join(overlay, "hashes")
         )
         _band_rows(btrain, CLUSTER_BAND_SIZE).select(
-            "doc_id",
-            "band",
-            "sz",
-            F.xxhash64(F.array_sort("toks")).alias("setkey"),
+            "doc_id", "band", "sz", "setkey"
         ).write.mode("append").parquet(os.path.join(overlay, "bands"))
         (
             _shingled_docs(bdf.filter(F.col("source") == "src0"))

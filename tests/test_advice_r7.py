@@ -11,9 +11,8 @@
    table now carries schema v0 from its first commit and every
    equality delete records field ids, so an entry without them
    predates schema-at-create and is refused.
-3. (low) cc_labels spill dirs: created lazily (shallow graphs touch no
-   disk) and removed at convergence — repeated invocations leave no
-   cc_labels_* trees behind.
+3. (low) cc_labels spill dirs — tested in tests/test_knn_join.py with
+   the other cc_labels tests.
 4. (low) sim_knn_clusters unpersists the kNN graph after the component
    kernel has consumed it.
 """
@@ -141,44 +140,6 @@ def test_idless_upsert_delete_refuses_read_after_rename(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-def _cc_dirs() -> set[str]:
-    import tempfile
-
-    root = tempfile.gettempdir()
-    return {d for d in os.listdir(root) if d.startswith("cc_labels_")}
-
-
-def test_cc_labels_shallow_graph_creates_no_spill_dir(spark):
-    from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (3, 4), (4, 3)], "src long, dst long"
-    )
-    before = _cc_dirs()
-    assert cc_labels(edges, local_edge_gate=0).count() == 4
-    assert _cc_dirs() == before
-
-
-def test_cc_labels_deep_graph_cleans_up_spill_dir(spark):
-    """A path graph deep enough to cross the parquet-spill threshold
-    must leave no cc_labels_* tree behind — and still converge right."""
-    from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
-
-    n = 3000  # ~log2 diameter rounds with pointer jumping > 12 spill rounds
-    chain = [(i, i + 1) for i in range(n - 1)]
-    edges = spark.createDataFrame(
-        chain + [(b, a) for a, b in chain], "src long, dst long"
-    )
-    before = _cc_dirs()
-    # force the DISTRIBUTED path: the spill lifecycle under test never
-    # engages on the local union-find the toy-size gate would pick
-    labels = cc_labels(edges, local_edge_gate=0)
-    # single component labeled by its minimum, readable AFTER cleanup
-    assert labels.filter(F.col("label") != 0).count() == 0
-    assert labels.count() == n
-    assert _cc_dirs() == before
-
-
 def test_knn_clusters_unpersists_graph(spark, sf_smoke):
     from iceberg_query_engine_spark.queries.similarity_suite import (
         sim_knn_clusters,

@@ -114,6 +114,51 @@ def test_cc_labels_local_gate_bit_parity(spark):
     assert local == dist and len(local) > 0
 
 
+# -- cc_labels spill dirs: created lazily (shallow graphs touch no disk)
+# and removed at convergence, so repeated calls leave no cc_labels_* trees
+
+
+def _cc_dirs() -> set[str]:
+    import os
+    import tempfile
+
+    root = tempfile.gettempdir()
+    return {d for d in os.listdir(root) if d.startswith("cc_labels_")}
+
+
+def test_cc_labels_shallow_graph_creates_no_spill_dir(spark):
+    from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (3, 4), (4, 3)], "src long, dst long"
+    )
+    before = _cc_dirs()
+    assert cc_labels(edges, local_edge_gate=0).count() == 4
+    assert _cc_dirs() == before
+
+
+def test_cc_labels_deep_graph_cleans_up_spill_dir(spark):
+    """A path graph deep enough to cross the parquet-spill threshold
+    must leave no cc_labels_* tree behind — and still converge right."""
+    from pyspark.sql import functions as F
+
+    from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
+
+    n = 3000  # ~log2 diameter rounds with pointer jumping > 12 spill rounds
+    chain = [(i, i + 1) for i in range(n - 1)]
+    edges = spark.createDataFrame(
+        chain + [(b, a) for a, b in chain], "src long, dst long"
+    )
+    before = _cc_dirs()
+    # force the DISTRIBUTED path: the spill lifecycle under test never
+    # engages on the local union-find the toy-size gate would pick
+    labels = cc_labels(edges, local_edge_gate=0)
+    # single component labeled by its minimum, readable AFTER cleanup
+    assert labels.filter(F.col("label") != 0).count() == 0
+    assert labels.count() == n
+    assert _cc_dirs() == before
+
+
 # -- cross-corpus (A→B) join: asymmetric-grid invariance + disjointness
 
 

@@ -88,6 +88,10 @@ def test_minhash_lsh_single_scan_three_shuffles(spark, sf):
     # windows' clustering, and the sort order prefix-satisfies them —
     # no per-window re-sort of the mega-band partition.
     assert pi.shuffle_count(df) <= 5
+    # 3 branch sorts (one per union branch, the same subtree) + the
+    # final orderBy; an ordered hub window would add a sort per branch
+    sorts = len(re.findall(r"\(\d+\) Sort\b", plan))
+    assert sorts <= 4, f"expected ≤4 static sorts, saw {sorts}"
     df.collect()
     executed = pi.executed_plan(df)
     assert "ReusedExchange" in executed, (

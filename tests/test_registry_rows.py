@@ -8,7 +8,10 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from iceberg_query_engine_spark.sources.registry import table_rows
+from iceberg_query_engine_spark.sources.registry import (
+    table_fingerprint,
+    table_rows,
+)
 
 
 def test_table_rows_matches_scan(spark, sf_smoke):
@@ -30,6 +33,64 @@ def test_table_rows_sums_directory_parts(spark, tmp_path):
 
 def test_table_rows_absent_table_is_none(tmp_path):
     assert table_rows(str(tmp_path), "embeddings") is None
+
+
+def _write_partitioned(root: str) -> None:
+    """A hive-partitioned table as pyarrow writes it: no data file at
+    the top level, one file per ``k=v/`` subdirectory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_to_dataset(
+        pa.table({"k": [1, 1, 2, 3], "v": [10, 11, 20, 30]}),
+        root,
+        partition_cols=["k"],
+    )
+
+
+def test_partitioned_table_rows_and_fingerprint(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "documents.parquet")
+    _write_partitioned(root)
+    assert table_rows(str(tmp_path), "documents") == 4
+    before = table_fingerprint(str(tmp_path), "documents")
+    assert before is not None
+    # rewriting one nested file changes its size: the fingerprint moves
+    part = os.path.join(root, "k=2")
+    (name,) = os.listdir(part)
+    pq.write_table(pa.table({"v": [20, 21, 22]}), os.path.join(part, name))
+    assert table_rows(str(tmp_path), "documents") == 6
+    assert table_fingerprint(str(tmp_path), "documents") != before
+
+
+def test_flat_fingerprint_hashes_file_names(tmp_path):
+    """For a flat table the relative path IS the file name, so stored
+    indexes keyed on the fingerprint stay valid."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "documents.parquet"
+    root.mkdir()
+    for i in range(2):
+        pq.write_table(pa.table({"v": [i]}), str(root / f"part-{i}.parquet"))
+    (root / "_SUCCESS").write_text("")
+    h = hashlib.sha256()
+    for f in sorted(os.listdir(root)):
+        if f.endswith(".parquet"):
+            st = os.stat(root / f)
+            h.update(f"{f}|{st.st_size}|{st.st_mtime_ns}\n".encode())
+    assert table_fingerprint(str(tmp_path), "documents") == h.hexdigest()
+
+
+def test_empty_table_dir_has_no_fingerprint(tmp_path):
+    (tmp_path / "documents.parquet").mkdir()
+    assert table_fingerprint(str(tmp_path), "documents") is None
+    assert table_fingerprint(str(tmp_path), "absent") is None
+    assert table_rows(str(tmp_path), "documents") is None
 
 
 def test_knn_join_sizes_grid_without_count_job(spark, sf_smoke, monkeypatch):
