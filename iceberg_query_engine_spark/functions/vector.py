@@ -1,18 +1,34 @@
 """Vectorized embedding math: Arrow-batched numpy kernels.
 
 Spark's higher-order functions (zip_with/aggregate) evaluate lambdas
-interpreted, per element — fine for small arrays, ~100µs per 64-dim
-cosine. For similarity search over millions of pairs that's the
-bottleneck, so the hot path is a pandas UDF: Arrow hands the batch to
-numpy, the dot products run as one BLAS-backed matmul-like operation
-(~100× faster), exactly the "vectorized Pandas UDF" escape hatch the
-reference's COSINE_SIMILARITY surface maps to at scale
-(/root/reference/src/planner/logical_expr.rs:327-328).
+interpreted, per element — ~100µs per 64-dim cosine. The kernels here
+take a whole Arrow batch as one numpy matrix and score it against the
+small side (queries, centroids, a codebook, a grid cell's right block)
+held in the factory's closure, so each corpus vector crosses the Arrow
+channel once: the "vectorized Pandas UDF" form of the reference's
+COSINE_SIMILARITY surface (src/planner/logical_expr.rs:327-328).
 
-Numerical note: numpy reduces with pairwise summation while the
-interpreted fold is sequential; results agree to ~1e-14 relative,
-so oracle comparisons round cosines to 6 decimals (already the suite
-convention).
+The contract. Every kernel except `cosine_similarity` scores under one
+contract, which makes its results bit-identical to the sequential-fold
+oracles (DuckDB's `list_aggregate(.., 'sum')`, Spark's `F.aggregate`)
+and independent of Arrow batch size, partitioning and grid shape:
+
+- Dots and squared norms are a strict left-to-right per-dimension
+  fold: `_seq_dots` row by row, `_cos_gram` for a block. A BLAS matmul
+  is not: its blocked summation order varies with the batch's row
+  count, which moved borderline cosines across the round(·,6) boundary
+  and flipped downstream aggregates between runs (caught by the
+  sim_kmeans oracle).
+- Every score is rounded to 6 decimals before any compare or select.
+- Selection orders by (score DESC, id ASC). Closure matrices are sorted
+  by ascending id (`_by_id`), so argmax/argmin's first hit is the
+  lowest id.
+
+Shipped closures call the module-level helpers below, so cloudpickle
+ships them by reference and each Python worker imports this module.
+It must therefore import without a SparkContext: `cosine_similarity`
+declares `DoubleType()`, not the DDL string "double", whose parse needs
+a live context.
 """
 
 from __future__ import annotations
@@ -20,13 +36,106 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
+
+_CHUNK_BUDGET = 768 << 10  # bytes of one Gram chunk's accumulator + temp
 
 
-@pandas_udf("double")
+def _mat(series: pd.Series) -> np.ndarray:
+    """Decode an Arrow `array<double>` column into a row-major matrix."""
+    return np.vstack([np.asarray(x, dtype=np.float64) for x in series])
+
+
+def _by_id(vecs: np.ndarray, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """A closure matrix and its ids, stably sorted by ascending id."""
+    m = np.ascontiguousarray(vecs, dtype=np.float64)
+    ids = np.asarray(ids, dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    return m[order], ids[order]
+
+
+def _seq_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise dots a[r]·b[r], folded dimension by dimension."""
+    acc = np.zeros(a.shape[0])
+    for i in range(a.shape[1]):
+        acc += a[:, i] * b[:, i]
+    return acc
+
+
+def _cos_gram(a, an, b, bn, chunk_budget: int = _CHUNK_BUDGET):
+    """Yield `(start, block)` row chunks of the rounded cosine Gram
+    matrix, `block[r, c] = round(a[start+r]·b[c] / (an[start+r]·bn[c]), 6)`,
+    with every dot folded dimension by dimension.
+
+    Transposed copies make each dimension's outer product stream over
+    contiguous vectors, and a chunk of `chunk_budget` bytes keeps the
+    accumulator and its temp L2-resident across the dimension loop.
+    The naive shape (one strided block) is bandwidth-bound at ~0.3
+    GFLOP/s/core; this one measured 4.7× faster with the identical
+    summation order, and peak memory stays ~chunk_budget whatever the
+    block sizes."""
+    aT = np.ascontiguousarray(a.T)
+    bT = np.ascontiguousarray(b.T)
+    na, nb = a.shape[0], b.shape[0]
+    chunk = max(1, int(chunk_budget // max(nb * 8 * 2, 1)))
+    tmp = np.empty((min(chunk, na), nb))
+    for s in range(0, na, chunk):
+        e = min(s + chunk, na)
+        dots = np.zeros((e - s, nb))
+        t = tmp[: e - s]
+        for i in range(aT.shape[0]):
+            np.multiply(aT[i, s:e][:, None], bT[i][None, :], out=t)
+            dots += t
+        yield s, np.round(dots / (an[s:e, None] * bn[None, :]), 6)
+
+
+def _cos_matrix(a, an, b, bn) -> np.ndarray:
+    """The whole `_cos_gram` matrix, for blocks whose width is small."""
+    out = np.empty((a.shape[0], b.shape[0]))
+    for s, block in _cos_gram(a, an, b, bn):
+        out[s : s + len(block)] = block
+    return out
+
+
+def _two_level_topk(scored, qids: np.ndarray, k: int, score_col: str):
+    """The local half and the per-partition merge of a two-level top-k.
+    `scored` yields `(j, score, n_id)` per batch and query index j; each
+    keeps its top-k, and one frame `(q_id, n_id, score_col)` with at
+    most k rows per query is yielded once the batches are exhausted."""
+    cand = [([], []) for _ in qids]
+    for j, score, ids in scored:
+        sel = np.lexsort((ids, -score))[:k]
+        cand[j][0].append(score[sel])
+        cand[j][1].append(ids[sel])
+    out_q, out_id, out_s = [], [], []
+    for j, (cs, ci) in enumerate(cand):
+        if not ci:
+            continue
+        cs, ci = np.concatenate(cs), np.concatenate(ci)
+        sel = np.lexsort((ci, -cs))[:k]
+        out_q.append(np.full(len(sel), qids[j]))
+        out_id.append(ci[sel])
+        out_s.append(cs[sel])
+    if out_q:
+        yield pd.DataFrame(
+            {
+                "q_id": np.concatenate(out_q),
+                "n_id": np.concatenate(out_id),
+                score_col: np.concatenate(out_s),
+            }
+        )
+
+
+@pandas_udf(DoubleType())
 def cosine_similarity(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched cosine similarity between two array<numeric> columns."""
-    ma = np.vstack([np.asarray(x, dtype=np.float64) for x in a])
-    mb = np.vstack([np.asarray(x, dtype=np.float64) for x in b])
+    """Batched cosine similarity between two array<numeric> columns.
+
+    The one kernel outside the module's contract: `einsum` sums in
+    numpy's own (SIMD) order, bitwise different from the strict fold on
+    ~86% of random 64-d pairs. Its callers round to 6 decimals, after
+    which 0 of 2M random pairs differ. This per-pair path keeps the
+    faster body: ~1.4 ms per 10k pairs against ~15-27 ms for the fold."""
+    ma, mb = _mat(a), _mat(b)
     dots = np.einsum("ij,ij->i", ma, mb)
     na = np.sqrt(np.einsum("ij,ij->i", ma, ma))
     nb = np.sqrt(np.einsum("ij,ij->i", mb, mb))
@@ -46,58 +155,20 @@ def nearest_centroid_udf(centroid_vecs: np.ndarray, centroid_ids: np.ndarray):
     pairwise cosine UDF — pushed n×K (vector, centroid) pairs through
     Arrow: ~160 GB of duplicated vectors at 5M docs × K=32, measured
     221 s vs ~20 s for this kernel at the same scale (r5 sf100 sweep).
-
-    Determinism: the dot/norm sums accumulate dimension-by-dimension in
-    strict left-to-right order — bit-identical to a sequential fold
-    (DuckDB's `list_aggregate(.., 'sum')`, Spark's `F.aggregate`) and
-    independent of Arrow batch size. A BLAS matmul is NOT: its blocked
-    summation order varies with the batch's row count, which moved
-    borderline cosines across the round(·,6) boundary and flipped
-    downstream aggregates between runs (caught by the sim_kmeans
-    oracle). The per-dimension loop is 64 vectorized (n×K) FMAs — same
-    asymptotics as the matmul, no channel duplication.
-
-    Tie semantics match the DuckDB oracle: rows are rounded to 6
-    decimals first; np.argmax returns the FIRST maximum and the
-    centroid matrix is ordered by ascending id → lowest id wins ties.
     """
-    c = np.ascontiguousarray(centroid_vecs, dtype=np.float64)
-    ids = np.asarray(centroid_ids, dtype=np.int64)
-    order = np.argsort(ids, kind="stable")
-    c, ids = c[order], ids[order]
-    k, dim = c.shape
-    cn2 = np.zeros(k)
-    for i in range(dim):  # sequential fold, same order as the oracle
-        cn2 += c[:, i] * c[:, i]
-    cn = np.sqrt(cn2)
+    c, ids = _by_id(centroid_vecs, centroid_ids)
+    cn = np.sqrt(_seq_dots(c, c))
 
     @pandas_udf("struct<bucket: bigint, c_cos: double>")
     def nearest(v: pd.Series) -> pd.DataFrame:
-        m = np.vstack([np.asarray(x, dtype=np.float64) for x in v])
-        n = m.shape[0]
-        dots = np.zeros((n, k))
-        vn2 = np.zeros(n)
-        for i in range(dim):  # strict left-to-right accumulation
-            col = m[:, i]
-            dots += col[:, None] * c[None, :, i]
-            vn2 += col * col
-        cos = np.round(dots / (np.sqrt(vn2)[:, None] * cn[None, :]), 6)
+        m = _mat(v)
+        cos = _cos_matrix(m, np.sqrt(_seq_dots(m, m)), c, cn)
         idx = np.argmax(cos, axis=1)  # first max = lowest id on ties
         return pd.DataFrame(
             {"bucket": ids[idx], "c_cos": cos[np.arange(len(idx)), idx]}
         )
 
     return nearest
-
-
-def _seq_sq_norms(m: np.ndarray) -> np.ndarray:
-    """Row squared-norms accumulated dimension-by-dimension — the same
-    strict left-to-right fold order as the DuckDB / F.aggregate oracle
-    (see nearest_centroid_udf's determinism note)."""
-    n2 = np.zeros(m.shape[0])
-    for i in range(m.shape[1]):
-        n2 += m[:, i] * m[:, i]
-    return n2
 
 
 def multi_query_topk_fn(
@@ -124,12 +195,7 @@ def multi_query_topk_fn(
 
     Partial top-k selection is exact: every global top-k row is its
     partition's top-≤k row for that query, so selecting k per (partition,
-    query) then re-ranking loses nothing. Ordering (cosine DESC, n_id
-    ASC) is applied identically in both levels via np.lexsort; cosines
-    are rounded to 6 decimals BEFORE selection with the same strict
-    per-dimension accumulation as nearest_centroid_udf, so values are
-    bit-identical to the sequential-fold oracle and independent of both
-    Arrow batch size and partitioning.
+    query) then re-ranking loses nothing.
 
     `probe_buckets` (optional) masks candidates per query to a set of
     LSH buckets: rows arrive with a third `bucket` column and query j
@@ -137,78 +203,36 @@ def multi_query_topk_fn(
     SRP candidate rule evaluated inside the kernel instead of a
     bucket-equality join that duplicates vectors per matching probe.
     """
-    q = np.ascontiguousarray(query_vecs, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    order = np.argsort(qids, kind="stable")
-    q, qids = q[order], qids[order]
-    nq, dim = q.shape
-    qn = np.sqrt(_seq_sq_norms(q))
-    probes = None
+    q, qids = _by_id(query_vecs, query_ids)
+    qn = np.sqrt(_seq_dots(q, q))
     probe_arrs = None
     if probe_buckets is not None:
-        probes = [probe_buckets[int(i)] for i in qids]
-        probe_arrs = [np.fromiter(s, np.int64, len(s)) for s in probes]
+        probe_arrs = [np.fromiter(probe_buckets[int(i)], np.int64) for i in qids]
 
-    def topk(batches):
-        cand_cos = [[] for _ in range(nq)]
-        cand_id = [[] for _ in range(nq)]
+    def scored(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.vstack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
+            m = _mat(pdf["v"])
             ids = pdf["n_id"].to_numpy(dtype=np.int64)
-            n = m.shape[0]
-            # norm fold inlined (not _seq_sq_norms): any module-level
-            # reference makes cloudpickle ship this function BY MODULE,
-            # and importing this module in a worker re-runs the
-            # module-level @pandas_udf decorators, which need an active
-            # SparkContext the worker doesn't have.
-            vn2 = np.zeros(n)
-            for i in range(dim):
-                vn2 += m[:, i] * m[:, i]
-            vn = np.sqrt(vn2)
-            if probes is None:
-                dots = np.zeros((n, nq))
-                for i in range(dim):  # strict left-to-right accumulation
-                    dots += m[:, i][:, None] * q[None, :, i]
-                cos_all = np.round(dots / (vn[:, None] * qn[None, :]), 6)
-            else:
-                buckets = pdf["bucket"].to_numpy(dtype=np.int64)
-            for j in range(nq):
-                if probes is None:
-                    cj, ij = cos_all[:, j], ids
-                else:
-                    # mask BEFORE the fold: only candidate rows (bucket
-                    # in the query's probe set) pay the dot-product cost
-                    mask = np.isin(buckets, probe_arrs[j])
-                    if not mask.any():
-                        continue
-                    mm, ij = m[mask], ids[mask]
-                    dj = np.zeros(mm.shape[0])
-                    for i in range(dim):  # same strict fold, subset rows
-                        dj += mm[:, i] * q[j, i]
-                    cj = np.round(dj / (vn[mask] * qn[j]), 6)
-                sel = np.lexsort((ij, -cj))[:k]  # cosine DESC, n_id ASC
-                cand_cos[j].append(cj[sel])
-                cand_id[j].append(ij[sel])
-        out_q, out_id, out_cos = [], [], []
-        for j in range(nq):
-            if not cand_id[j]:
+            vn = np.sqrt(_seq_dots(m, m))
+            if probe_arrs is None:
+                cos = _cos_matrix(m, vn, q, qn)
+                for j in range(len(qids)):
+                    yield j, cos[:, j], ids
                 continue
-            cc = np.concatenate(cand_cos[j])
-            ci = np.concatenate(cand_id[j])
-            sel = np.lexsort((ci, -cc))[:k]
-            out_q.append(np.full(len(sel), qids[j]))
-            out_id.append(ci[sel])
-            out_cos.append(cc[sel])
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "n_id": np.concatenate(out_id),
-                    "cosine": np.concatenate(out_cos),
-                }
-            )
+            buckets = pdf["bucket"].to_numpy(dtype=np.int64)
+            for j, probe in enumerate(probe_arrs):
+                # mask BEFORE the fold: only candidate rows (bucket in
+                # the query's probe set) pay the dot-product cost
+                mask = np.isin(buckets, probe)
+                if mask.any():
+                    qj = slice(j, j + 1)
+                    cos = _cos_matrix(m[mask], vn[mask], q[qj], qn[qj])
+                    yield j, cos[:, 0], ids[mask]
+
+    def topk(batches):
+        yield from _two_level_topk(scored(batches), qids, k, "cosine")
 
     return topk
 
@@ -218,41 +242,26 @@ def multi_query_range_fn(query_vecs: np.ndarray, query_ids: np.ndarray, threshol
     cosine) pair with cosine ≥ threshold — RADIUS search, the dual of
     multi_query_topk_fn's top-k. Same one-Arrow-pass shape (each corpus
     vector crosses the channel once, scored against the closure-held
-    query matrix) and the same strict left-to-right per-dimension fold
-    + round-to-6-BEFORE-compare, so the inclusion decision is
-    bit-identical to the sequential-fold oracle and independent of
-    Arrow batch size. Output is match-sized (selectivity-bounded), not
+    query matrix). Output is match-sized (selectivity-bounded), not
     corpus-sized — the filter runs inside the kernel.
     """
-    q = np.ascontiguousarray(query_vecs, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    order = np.argsort(qids, kind="stable")
-    q, qids = q[order], qids[order]
-    nq, dim = q.shape
-    qn = np.sqrt(_seq_sq_norms(q))
+    q, qids = _by_id(query_vecs, query_ids)
+    qn = np.sqrt(_seq_dots(q, q))
 
     def rng(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.vstack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
+            m = _mat(pdf["v"])
             ids = pdf["n_id"].to_numpy(dtype=np.int64)
-            n = m.shape[0]
-            vn2 = np.zeros(n)  # inlined fold — see multi_query_topk_fn note
-            for i in range(dim):
-                vn2 += m[:, i] * m[:, i]
-            vn = np.sqrt(vn2)
-            dots = np.zeros((n, nq))
-            for i in range(dim):  # strict left-to-right accumulation
-                dots += m[:, i][:, None] * q[None, :, i]
-            cos_all = np.round(dots / (vn[:, None] * qn[None, :]), 6)
-            rows, cols = np.nonzero(cos_all >= threshold)
+            cos = _cos_matrix(m, np.sqrt(_seq_dots(m, m)), q, qn)
+            rows, cols = np.nonzero(cos >= threshold)
             if len(rows):
                 yield pd.DataFrame(
                     {
                         "q_id": qids[cols],
                         "n_id": ids[rows],
-                        "cosine": cos_all[rows, cols],
+                        "cosine": cos[rows, cols],
                     }
                 )
 
@@ -291,33 +300,22 @@ def pq_adc_topk_fn(
     uint8 code table once and re-scan it per query batch; fusing keeps
     the driver query single-pass while exercising identical math.
 
-    Determinism (oracle parity): sub-distances and LUT entries
-    accumulate dimension-by-dimension in strict left-to-right order
-    (sequential-fold parity with DuckDB's list_aggregate), distances
-    are rounded to 6 decimals BEFORE argmin with codewords ordered by
-    ascending id (first-min = lowest id on ties), and ADC sums
-    accumulate subspace-by-subspace with the final score rounded to 6
-    before (score DESC, n_id ASC) selection — independent of Arrow
-    batch size and partitioning.
+    Under the module's contract, sub-distances and LUT entries fold
+    per dimension, distances are rounded before the argmin, and ADC
+    sums accumulate subspace by subspace before their final rounding.
 
     `normalize=True` L2-normalizes codewords, queries, AND each corpus
-    vector (inside the kernel, same sequential norm fold) before
-    quantization — then the ADC score approximates COSINE, making the
-    PQ index comparable against an exact-cosine ground truth (the
-    recall gate). Division and sqrt are IEEE-correctly-rounded, so
-    normalized values match the oracle's x / sqrt(sum) exactly.
+    vector before quantization — then the ADC score approximates
+    COSINE, making the PQ index comparable against an exact-cosine
+    ground truth (the recall gate). Division and sqrt are
+    IEEE-correctly-rounded, so normalized values match the oracle's
+    x / sqrt(sum) exactly.
     """
-    C = np.ascontiguousarray(codeword_vecs, dtype=np.float64)
-    cids = np.asarray(codeword_ids, dtype=np.int64)
-    order = np.argsort(cids, kind="stable")
-    C = C[order]
-    q = np.ascontiguousarray(query_vecs, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    qorder = np.argsort(qids, kind="stable")
-    q, qids = q[qorder], qids[qorder]
+    C, _ = _by_id(codeword_vecs, codeword_ids)
+    q, qids = _by_id(query_vecs, query_ids)
     if normalize:
-        C = C / np.sqrt(_seq_sq_norms(C))[:, None]
-        q = q / np.sqrt(_seq_sq_norms(q))[:, None]
+        C = C / np.sqrt(_seq_dots(C, C))[:, None]
+        q = q / np.sqrt(_seq_dots(q, q))[:, None]
     ncw, dim = C.shape
     nq = q.shape[0]
     sub = dim // n_sub
@@ -329,26 +327,19 @@ def pq_adc_topk_fn(
             d = mi * sub + i
             lut[mi] += q[:, d][:, None] * C[None, :, d]
 
-    def topk(batches):
-        cand_adc = [[] for _ in range(nq)]
-        cand_id = [[] for _ in range(nq)]
+    def scored(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.vstack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
+            m = _mat(pdf["v"])
             ids = pdf["n_id"].to_numpy(dtype=np.int64)
             n = m.shape[0]
             if normalize:
-                # inline seq fold (see multi_query_topk_fn on why no
-                # module-level helper reference inside the closure)
-                vn2 = np.zeros(n)
-                for i in range(dim):
-                    vn2 += m[:, i] * m[:, i]
-                m = m / np.sqrt(vn2)[:, None]
+                m = m / np.sqrt(_seq_dots(m, m))[:, None]
             adc = np.zeros((n, nq))
             for mi in range(n_sub):
                 dist = np.zeros((n, ncw))
-                for i in range(sub):  # strict left-to-right fold
+                for i in range(sub):
                     d = mi * sub + i
                     diff = m[:, d][:, None] - C[None, :, d]
                     dist += diff * diff
@@ -356,27 +347,10 @@ def pq_adc_topk_fn(
                 adc += lut[mi][:, code].T
             adc = np.round(adc, 6)
             for j in range(nq):
-                sel = np.lexsort((ids, -adc[:, j]))[:k]
-                cand_adc[j].append(adc[sel, j])
-                cand_id[j].append(ids[sel])
-        out_q, out_id, out_adc = [], [], []
-        for j in range(nq):
-            if not cand_id[j]:
-                continue
-            ca = np.concatenate(cand_adc[j])
-            ci = np.concatenate(cand_id[j])
-            sel = np.lexsort((ci, -ca))[:k]
-            out_q.append(np.full(len(sel), qids[j]))
-            out_id.append(ci[sel])
-            out_adc.append(ca[sel])
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "n_id": np.concatenate(out_id),
-                    "adc": np.concatenate(out_adc),
-                }
-            )
+                yield j, adc[:, j], ids
+
+    def topk(batches):
+        yield from _two_level_topk(scored(batches), qids, k, "adc")
 
     return topk
 
@@ -393,11 +367,11 @@ def semantic_window_fn(window: int, tau: float):
     shape, which duplicated every 64-double vector `window`+1 times
     across the Arrow channel (~41 GB at 5M docs x W=8) and needed a
     groupBy to re-collapse pairs. Here each vector crosses Arrow ONCE;
-    the W comparisons are W vectorized shifted-dot passes inside numpy
-    (strict per-dimension fold, sequential-fold oracle parity), and the
-    kernel emits at most one row per dropped doc — no pair stream, no
-    re-aggregation shuffle. Rolling state (last W rows) carries across
-    Arrow batches, so results are independent of batch size.
+    the W comparisons are W vectorized shifted-dot passes inside numpy,
+    and the kernel emits at most one row per dropped doc — no pair
+    stream, no re-aggregation shuffle. Rolling state (last W rows)
+    carries across Arrow batches, so results are independent of batch
+    size.
     """
 
     def run(batches):
@@ -407,7 +381,7 @@ def semantic_window_fn(window: int, tau: float):
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             cl = pdf["cluster"].to_numpy(dtype=np.int64)
-            m = np.vstack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
+            m = _mat(pdf["v"])
             c = 0
             if carry is not None:
                 pids, pcl, pm = carry
@@ -415,21 +389,14 @@ def semantic_window_fn(window: int, tau: float):
                 ids = np.concatenate([pids, ids])
                 cl = np.concatenate([pcl, cl])
                 m = np.vstack([pm, m])
-            n, dim = m.shape
-            # strict left-to-right norm fold (oracle parity; see
-            # multi_query_topk_fn on why no module-level helper here)
-            n2 = np.zeros(n)
-            for i in range(dim):
-                n2 += m[:, i] * m[:, i]
-            nrm = np.sqrt(n2)
+            n = m.shape[0]
+            nrm = np.sqrt(_seq_dots(m, m))
             best_cos = np.full(n, -np.inf)
             best_nid = np.full(n, np.iinfo(np.int64).min, dtype=np.int64)
             for off in range(1, window + 1):
                 if off >= n:
                     break
-                dots = np.zeros(n - off)
-                for i in range(dim):  # strict fold, vectorized rows
-                    dots += m[off:, i] * m[:-off, i]
+                dots = _seq_dots(m[off:], m[:-off])
                 cos = np.round(dots / (nrm[off:] * nrm[:-off]), 6)
                 ok = (cl[off:] == cl[:-off]) & (cos >= tau)
                 neg = -ids[:-off]
@@ -456,7 +423,7 @@ def semantic_window_fn(window: int, tau: float):
     return run
 
 
-def knn_join_fn(k: int, _chunk_budget: int = 768 << 10):
+def knn_join_fn(k: int, _chunk_budget: int = _CHUNK_BUDGET):
     """Factory: a cogroup-applyInPandas function computing the exact
     per-left-row cosine top-k against one right-side block — the inner
     kernel of the blocked k-NN JOIN (both sides large, neither
@@ -467,53 +434,22 @@ def knn_join_fn(k: int, _chunk_budget: int = 768 << 10):
 
     Group input: left ``(l_id bigint, lv array<double>)``, right
     ``(n_id bigint, v array<double>)``. Output ``(l_id, n_id,
-    cosine)`` — at most k rows per left row per group.
-
-    Determinism/oracle parity: strict left-to-right per-dimension
-    accumulation for dots and norms, cosines rounded to 6 decimals
-    BEFORE selection, ordering (cosine DESC, n_id ASC) — identical to
-    multi_query_topk_fn, so results are bit-identical to the DuckDB
-    list-fold oracle and independent of grid shape and batching.
-    Self-pairs (l_id == n_id) are excluded inside the kernel. The dot
-    matrix is evaluated in left-row chunks so peak memory stays
-    ~32 MB regardless of block sizes."""
+    cosine)`` — at most k rows per left row per group. Self-pairs
+    (l_id == n_id) are excluded inside the kernel. The Gram block is
+    consumed in `_cos_gram`'s left-row chunks, so peak memory stays
+    ~`_chunk_budget` regardless of block sizes."""
 
     def run(left_pdf, right_pdf):
         if not len(left_pdf) or not len(right_pdf):
             return pd.DataFrame({"l_id": [], "n_id": [], "cosine": []})
-        lm = np.vstack([np.asarray(x, dtype=np.float64) for x in left_pdf["lv"]])
-        rm = np.vstack([np.asarray(x, dtype=np.float64) for x in right_pdf["v"]])
+        lm, rm = _mat(left_pdf["lv"]), _mat(right_pdf["v"])
         lids = left_pdf["l_id"].to_numpy(dtype=np.int64)
         rids = right_pdf["n_id"].to_numpy(dtype=np.int64)
-        nl, dim = lm.shape
         nr = rm.shape[0]
-        # strict per-dimension folds (inlined: see multi_query_topk_fn
-        # on why module-level refs are off-limits in shipped closures)
-        ln2 = np.zeros(nl)
-        rn2 = np.zeros(nr)
-        for i in range(dim):
-            ln2 += lm[:, i] * lm[:, i]
-            rn2 += rm[:, i] * rm[:, i]
-        ln, rn = np.sqrt(ln2), np.sqrt(rn2)
-        # transposed copies make each dimension's outer product stream
-        # over CONTIGUOUS vectors, and the small chunk keeps the
-        # accumulator + temp L2-resident across the 64-dim loop — the
-        # naive (chunk=32 MB, strided columns) loop is bandwidth-bound
-        # at ~0.3 GFLOP/s/core; this shape measured 4.7× faster with
-        # the identical strict left-to-right summation order.
-        lmT = np.ascontiguousarray(lm.T)
-        rmT = np.ascontiguousarray(rm.T)
-        chunk = max(1, int(_chunk_budget // max(nr * 8 * 2, 1)))
+        ln, rn = np.sqrt(_seq_dots(lm, lm)), np.sqrt(_seq_dots(rm, rm))
         out_l, out_n, out_c = [], [], []
-        tmp = np.empty((min(chunk, nl), nr))
-        for s in range(0, nl, chunk):
-            e = min(s + chunk, nl)
-            dots = np.zeros((e - s, nr))
-            t = tmp[: e - s]
-            for i in range(dim):  # strict left-to-right accumulation
-                np.multiply(lmT[i, s:e][:, None], rmT[i][None, :], out=t)
-                dots += t
-            cos = np.round(dots / (ln[s:e, None] * rn[None, :]), 6)
+        for s, cos in _cos_gram(lm, ln, rm, rn, _chunk_budget):
+            e = s + len(cos)
             cos[lids[s:e, None] == rids[None, :]] = -np.inf  # no self-match
             # top-k selection: a full per-row lexsort is O(nr log nr)
             # per left row and dominated the 50k-point profile. Instead
@@ -554,32 +490,14 @@ def top_probe_centroids_udf(centroid_vecs: np.ndarray, centroid_ids: np.ndarray,
     ordering contract as nearest_centroid_udf, whose element [0] this
     generalizes). The K×dim centroid matrix rides in the closure; one
     Arrow pass, the multi-probe assignment of IVF retrieval."""
-    c = np.ascontiguousarray(centroid_vecs, dtype=np.float64)
-    ids = np.asarray(centroid_ids, dtype=np.int64)
-    order = np.argsort(ids, kind="stable")
-    c, ids = c[order], ids[order]
-    k, dim = c.shape
-    cn2 = np.zeros(k)
-    for i in range(dim):  # sequential fold, same order as the oracle
-        cn2 += c[:, i] * c[:, i]
-    cn = np.sqrt(cn2)
-    take = min(p, k)
+    c, ids = _by_id(centroid_vecs, centroid_ids)
+    cn = np.sqrt(_seq_dots(c, c))
+    take = min(p, len(ids))
 
     @pandas_udf("array<bigint>")
     def probes(v: pd.Series) -> pd.Series:
-        m = np.vstack([np.asarray(x, dtype=np.float64) for x in v])
-        n = m.shape[0]
-        dots = np.zeros((n, k))
-        vn2 = np.zeros(n)
-        for i in range(dim):  # strict left-to-right accumulation
-            col = m[:, i]
-            dots += col[:, None] * c[None, :, i]
-            vn2 += col * col
-        cos = np.round(dots / (np.sqrt(vn2)[:, None] * cn[None, :]), 6)
-        out = []
-        for j in range(n):
-            sel = np.lexsort((ids, -cos[j]))[:take]
-            out.append(ids[sel])
-        return pd.Series(out)
+        m = _mat(v)
+        cos = _cos_matrix(m, np.sqrt(_seq_dots(m, m)), c, cn)
+        return pd.Series([ids[np.lexsort((ids, -row))[:take]] for row in cos])
 
     return probes

@@ -22,9 +22,20 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vector import (
+    cosine_similarity,
+    knn_join_fn,
+    multi_query_range_fn,
+    multi_query_topk_fn,
+    nearest_centroid_udf,
+    pq_adc_topk_fn,
+    top_probe_centroids_udf,
+)
 from .tpch import tables
 
 TOP_K = 5
@@ -33,14 +44,6 @@ N_QUERIES = 3  # vec_id < 3 are the query vectors
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
-
-
-def _cosine(a, b):
-    """Arrow-batched numpy cosine (functions/vector.py) — the
-    interpreted zip_with/aggregate fold is ~100× slower per pair."""
-    from ..functions.vector import cosine_similarity
-
-    return cosine_similarity(a, b)
 
 
 # --------------------------------------------------------------------------
@@ -69,10 +72,6 @@ def _brute_topk(
     shuffled the full n×Q score stream into the top-k window.
     k / n_queries parameterized so the recall gate can evaluate larger
     retrieval sets without a second implementation."""
-    import numpy as np
-
-    from ..functions.vector import multi_query_topk_fn
-
     (embeddings,) = tables(spark, sf_dir, "embeddings")
     e = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     qrows = e.filter(F.col("vec_id") < n_queries).collect()  # tiny: Q×dim
@@ -159,10 +158,6 @@ def _nearest_assign(centroids: DataFrame):
     through Arrow: 221 s at 5M docs (r5 sf100 sweep) vs ~20 s for this
     kernel. Nondeterministic marks the call so no optimizer rule can
     substitute (and re-evaluate) the UDF into downstream predicates."""
-    import numpy as np
-
-    from ..functions.vector import nearest_centroid_udf
-
     rows = centroids.collect()
     kernel = nearest_centroid_udf(
         np.array([r.cv for r in rows]), np.array([r.c_id for r in rows])
@@ -317,7 +312,7 @@ def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster",
             "n_members",
             "mean_cos",
-            F.round(_cosine(nv, F.col("cv")), 6).alias("drift"),
+            F.round(cosine_similarity(nv, F.col("cv")), 6).alias("drift"),
         )
         .orderBy("cluster")
     )
@@ -381,7 +376,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("n_id"),
-            F.round(_cosine(F.col("qv"), F.col("v")), 6).alias("cosine"),
+            F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cosine"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
@@ -544,10 +539,6 @@ def sim_ivf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter over a full scan. At 100 TB this is the build-once/
     query-many serving shape — index build cost amortizes across
     every query batch."""
-    import numpy as np
-
-    from ..functions.vector import multi_query_topk_fn
-
     (embeddings,) = tables(spark, sf_dir, "embeddings")
     e = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     centroids = _seed_centroids(e)
@@ -600,9 +591,6 @@ def _lsh_topk(
     vector crosses Arrow once with its bucket id, and the kernel masks
     per query before the partial top-k. Same candidate set and
     tie-break as the bucket-equality join it replaces."""
-    import numpy as np
-
-    from ..functions.vector import multi_query_topk_fn
     from ..sources.registry import table_bytes
 
     (embeddings,) = tables(spark, sf_dir, "embeddings")
@@ -840,7 +828,7 @@ def sim_pair_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     s = e.filter(F.col("vec_id") < 80)
     a, b = s.alias("a"), s.alias("b")
-    cos = _cosine(F.col("a.v"), F.col("b.v"))
+    cos = cosine_similarity(F.col("a.v"), F.col("b.v"))
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(F.floor(F.round(cos, 6) * 10).cast("bigint").alias("bucket"))
@@ -882,10 +870,6 @@ def _pq_topk(
     """Shared PQ/ADC retrieval (see sim_ivf_pq_topk). k / n_queries /
     normalize parameterized so the recall gate can evaluate a larger,
     cosine-comparable retrieval set without a second implementation."""
-    import numpy as np
-
-    from ..functions.vector import pq_adc_topk_fn
-
     (embeddings,) = tables(spark, sf_dir, "embeddings")
     e = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     corpus = e.filter(F.col("vec_id") >= n_queries)
@@ -999,10 +983,6 @@ def sim_truncated_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a near-isotropic synthetic vector keeps 1/4 of the variance;
     MRL-trained real models front-load it — which is what the gate
     measures."""
-    import numpy as np
-
-    from ..functions.vector import multi_query_topk_fn
-
     kmax = max(RECALL_KS)
     exact = _brute_topk(spark, sf_dir, kmax, RECALL_N_QUERIES).select(
         "q_id", "n_id", F.col("rk").alias("rk_e")
@@ -1227,10 +1207,6 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the final presentation sort. The threshold compares the
     6-dp-rounded cosine on both sides, so inclusion is engine-portable.
     """
-    import numpy as np
-
-    from ..functions.vector import multi_query_range_fn
-
     (embeddings,) = tables(spark, sf_dir, "embeddings")
     e = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     qrows = e.filter(F.col("vec_id") < N_QUERIES).collect()  # tiny: Q×dim
@@ -1282,10 +1258,6 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k merge) on the filtered stream; the filter is JVM-side,
     codegen, before the Python boundary.
     """
-    import numpy as np
-
-    from ..functions.vector import multi_query_topk_fn
-
     (embeddings,) = tables(spark, sf_dir, "embeddings")
     e = embeddings.select(
         "vec_id", "label", _as_double(F.col("embedding")).alias("v")
@@ -1358,31 +1330,26 @@ def _knn_join(
     (embeddings,) = tables(spark, sf_dir, "embeddings")
     e = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     if grid is None:
-        # The kernel's work is O(cell_left × cell_right) PAIRS, so the
-        # grid must be sized by ROWS, not bytes (a bytes gate at 64 MB
-        # puts ~1e10 pairs in one task). Target ≤ ~5k rows per block
-        # side → ≤ 2.5e7 pairs ≈ 3e9 flops ≈ seconds per cell, and B²
-        # cells saturate the cluster. The count comes from the parquet
-        # FOOTER (registry.table_rows — zero Spark jobs); the count()
-        # fallback only fires for non-parquet inputs. Capped: exact
-        # all-pairs k-NN is quadratic by nature — past ~64 blocks/side
-        # the total work (not the grid) is the problem and sim_ivf_* /
-        # sim_lsh_topk are the sub-quadratic paths. Toy scale
-        # collapses to a 1×1 grid, same gate philosophy as
-        # operators/rank.py.
+        # the row count comes from the parquet FOOTER (zero Spark
+        # jobs); the count() fallback only fires for non-parquet inputs
         from ..sources.registry import table_rows
 
-        n_rows = table_rows(sf_dir, "embeddings") or e.count()
-        blocks = int(max(1, min(-(-n_rows // 5000), 64)))
-        nl = nr = blocks
+        nl = nr = _grid_blocks(table_rows(sf_dir, "embeddings") or e.count())
     else:
         nl, nr = grid
     return _knn_join_frames(e, e, nl, nr, k=k, ordered=ordered)
 
 
 def _grid_blocks(n_rows: int) -> int:
-    """Blocks per grid side for ~5k rows/block (capped at 64 — past
-    that, total quadratic work is the problem, not the grid)."""
+    """Blocks per grid side for ~5k rows/block. The kernel's work is
+    O(cell_left × cell_right) PAIRS, so the grid is sized by ROWS, not
+    bytes (a bytes gate at 64 MB puts ~1e10 pairs in one task): ≤ ~5k
+    rows per side → ≤ 2.5e7 pairs ≈ 3e9 flops ≈ seconds per cell, and
+    B² cells saturate the cluster. Capped at 64: exact all-pairs k-NN
+    is quadratic by nature, so past that the total work (not the grid)
+    is the problem and sim_ivf_* / sim_lsh_topk are the sub-quadratic
+    paths. Toy scale collapses to a 1×1 grid, the same gate philosophy
+    as operators/rank.py."""
     return int(max(1, min(-(-n_rows // 5000), 64)))
 
 
@@ -1401,8 +1368,6 @@ def _knn_join_frames(
     cogroup task running the chunked exact kernel; a window merges the
     nr partial top-k sets per left row. Id spaces sharing a value are
     treated as the same vector (the kernel excludes l_id == n_id)."""
-    from ..functions.vector import knn_join_fn
-
     # both sides' (lb, rb) MUST have identical types: cogroup aligns
     # groups by the key's physical representation, and a (bigint, int)
     # left against an (int, bigint) right silently produces disjoint
@@ -1523,12 +1488,22 @@ def _knn_graph_ivf(
     gate) share ONE probe/assignment pass across constituents instead
     of re-running the centroid build + corpus Arrow pass per op (r10,
     guide §2.4); standalone calls keep their own single-pass build."""
-    import pandas as pd
-
-    from ..functions.vector import knn_join_fn
-
     if assigned is None:
         assigned, _cent = _sqrt_assignment(spark, sf_dir)
+    return (
+        _cell_knn(assigned.select("cluster", "vec_id", "v"), k)
+        .select("l_id", "n_id", "cosine", "rk")
+        .orderBy("l_id", "rk")
+    )
+
+
+def _cell_knn(members: DataFrame, k: int) -> DataFrame:
+    """Exact within-cell k-NN graph edges `(l_id, n_id, cosine, rk)` of
+    `members` (cluster, vec_id, v): ONE cluster-keyed shuffle groups
+    each cell into one applyInPandas task running knn_join_fn's kernel
+    with the cell as both sides (self-pairs excluded inside), then
+    rank numbers each left row's edges. A vector lives in one cell, so
+    the kernel's ≤ k rows per left row are already its top-k."""
     run = knn_join_fn(k)
 
     def per_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -1536,17 +1511,11 @@ def _knn_graph_ivf(
         right = pd.DataFrame({"n_id": pdf["vec_id"], "v": pdf["v"]})
         return run(left, right)
 
-    edges = (
-        assigned.select("cluster", "vec_id", "v")
-        .groupBy("cluster")
-        .applyInPandas(per_cell, "l_id bigint, n_id bigint, cosine double")
+    edges = members.groupBy("cluster").applyInPandas(
+        per_cell, "l_id bigint, n_id bigint, cosine double"
     )
     w = Window.partitionBy("l_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        edges.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .select("l_id", "n_id", "cosine", "rk")
-        .orderBy("l_id", "rk")
-    )
+    return edges.withColumn("rk", F.row_number().over(w).cast("bigint"))
 
 
 DELTA_SPLIT = 0.9  # first 90% of vec_ids = existing corpus, rest = new batch
@@ -1678,9 +1647,6 @@ def _knn_graph_delta_indexed(
     split: float,
     index_dir: str | None = None,
 ) -> DataFrame:
-    import pandas as pd
-
-    from ..functions.vector import knn_join_fn
     from ..sources.registry import table_rows
 
     (embeddings,) = tables(spark, sf_dir, "embeddings")
@@ -1701,19 +1667,8 @@ def _knn_graph_delta_indexed(
         F.col("cluster").isin(cells)
     )
     members = stored.select("vec_id", "v", "cluster").unionByName(batch)
-    run = knn_join_fn(KNN_JOIN_K)
-
-    def per_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        left = pd.DataFrame({"l_id": pdf["vec_id"], "lv": pdf["v"]})
-        right = pd.DataFrame({"n_id": pdf["vec_id"], "v": pdf["v"]})
-        return run(left, right)
-
-    edges = members.groupBy("cluster").applyInPandas(
-        per_cell, "l_id bigint, n_id bigint, cosine double"
-    )
-    w = Window.partitionBy("l_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
     return (
-        edges.withColumn("rk", F.row_number().over(w).cast("bigint"))
+        _cell_knn(members, KNN_JOIN_K)
         .select(
             "l_id", "n_id", "cosine", "rk", (F.col("l_id") >= t).alias("is_new")
         )
@@ -1724,9 +1679,6 @@ def _knn_graph_delta_indexed(
 def _knn_graph_delta(
     spark: SparkSession, sf_dir: str, split: float
 ) -> DataFrame:
-    import pandas as pd
-
-    from ..functions.vector import knn_join_fn
     from ..sources.registry import table_rows
 
     (embeddings,) = tables(spark, sf_dir, "embeddings")
@@ -1756,20 +1708,8 @@ def _knn_graph_delta(
     )
     member_ids = assigned_slim.join(F.broadcast(affected), "cluster")
     members = e.join(member_ids, "vec_id")
-    run = knn_join_fn(KNN_JOIN_K)
-
-    def per_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        left = pd.DataFrame({"l_id": pdf["vec_id"], "lv": pdf["v"]})
-        right = pd.DataFrame({"n_id": pdf["vec_id"], "v": pdf["v"]})
-        return run(left, right)
-
-    edges = (
-        members.groupBy("cluster")
-        .applyInPandas(per_cell, "l_id bigint, n_id bigint, cosine double")
-    )
-    w = Window.partitionBy("l_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
     return (
-        edges.withColumn("rk", F.row_number().over(w).cast("bigint"))
+        _cell_knn(members, KNN_JOIN_K)
         .select("l_id", "n_id", "cosine", "rk", (F.col("l_id") >= t).alias("is_new"))
         .orderBy("l_id", "rk")
     )
@@ -2052,10 +1992,6 @@ def _probed_frame(spark: SparkSession, sf_dir: str, n_probes: int) -> DataFrame:
     c_id ASC, so probes[0] IS the nearest-centroid assignment
     (top_probe_centroids_udf generalizes nearest_centroid_udf's
     element [0] — same rounding, same tie rule)."""
-    import numpy as np
-
-    from ..functions.vector import top_probe_centroids_udf
-
     (embeddings,) = tables(spark, sf_dir, "embeddings")
     e = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     centroids = _sqrt_centroids(e)
@@ -2075,8 +2011,6 @@ def _knn_graph_multiprobe(
     left_filter=None,
     probed: DataFrame | None = None,
 ) -> DataFrame:
-    from ..functions.vector import knn_join_fn
-
     if probed is None:
         probed = _probed_frame(spark, sf_dir, max(m, p))
     # left_filter restricts the QUERY side only (the index side stays

@@ -8,16 +8,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-
-@pytest.fixture(scope="module", autouse=True)
-def _kernel(spark):
-    from iceberg_query_engine_spark.functions import vector
-
-    globals()["vector"] = vector
+from iceberg_query_engine_spark.functions import vector
 
 
 def _split_at(df: pd.DataFrame, cuts: list[int]):
@@ -208,6 +202,23 @@ def test_knn_join_kernel_equals_bruteforce_reference(case):
     for i in range(dim):
         dots += lm[:, i][:, None] * rm[None, :, i]
     cos = np.round(dots / (np.sqrt(ln2)[:, None] * np.sqrt(rn2)[None, :]), 6)
+    # the kernels' shared fold primitives, in both operand orientations
+    # and at the drawn chunk budget, are bit-identical to this reference.
+    # 2^-30 "norms" scale the dots exactly and lift them past 1e15, so
+    # the 6-dp rounding cannot hide a change of summation order.
+    assert vector._seq_dots(lm, lm).tobytes() == ln2.tobytes()
+    assert vector._seq_dots(rm, rm).tobytes() == rn2.tobytes()
+    ul, ur = np.full(len(lids), 2.0**-30), np.full(len(rids), 2.0**-30)
+    raw = np.round(dots / (ul[:, None] * ur[None, :]), 6)
+    for a, an, b, bn, ref in (
+        (lm, np.sqrt(ln2), rm, np.sqrt(rn2), cos),
+        (rm, np.sqrt(rn2), lm, np.sqrt(ln2), cos.T),
+        (lm, ul, rm, ur, raw),
+        (rm, ur, lm, ul, raw.T),
+    ):
+        blocks = list(vector._cos_gram(a, an, b, bn, budget))
+        assert [s for s, _ in blocks] == list(range(0, len(a), len(blocks[0][1])))
+        assert np.vstack([blk for _, blk in blocks]).tobytes() == ref.tobytes()
     cos[lids[:, None] == rids[None, :]] = -np.inf
     expect = {}
     for j, lid in enumerate(lids):

@@ -10,19 +10,19 @@ multi-probe bucket mask.
 from __future__ import annotations
 
 import math
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pandas as pd
 import pytest
 
-
-@pytest.fixture(scope="module", autouse=True)
-def _kernel(spark):
-    # vector.py's module-level @pandas_udf decorators need an active
-    # SparkContext at import time, so import under the session fixture
-    from iceberg_query_engine_spark.functions import vector
-
-    globals()["multi_query_topk_fn"] = vector.multi_query_topk_fn
-
+from iceberg_query_engine_spark.functions import vector
+from iceberg_query_engine_spark.functions.vector import (
+    multi_query_range_fn,
+    multi_query_topk_fn,
+)
 
 RNG = np.random.default_rng(7)
 
@@ -208,8 +208,6 @@ def _pq_reference(df: pd.DataFrame, C, cids, q, qids, k, n_sub):
 
 
 def test_pq_adc_matches_reference_any_batching():
-    from iceberg_query_engine_spark.functions import vector
-
     corpus = _corpus(120, dim=16)
     C = np.vstack(corpus["v"].values[::17])  # 8 codewords
     cids = corpus["n_id"].to_numpy()[::17]
@@ -230,8 +228,6 @@ def test_pq_adc_matches_reference_any_batching():
 
 
 def test_pq_adc_tie_breaks_to_lowest_id():
-    from iceberg_query_engine_spark.functions import vector
-
     # two identical corpus vectors -> identical ADC; lower n_id ranks first
     base = RNG.normal(size=8)
     corpus = pd.DataFrame({"n_id": np.array([201, 200]), "v": [base, base]})
@@ -247,8 +243,6 @@ def test_pq_adc_tie_breaks_to_lowest_id():
 def test_pq_codeword_id_order_irrelevant():
     """Codebook rows arriving in any id order quantize identically
     (the factory sorts by id; argmin-first then maps to lowest id)."""
-    from iceberg_query_engine_spark.functions import vector
-
     corpus = _corpus(60, dim=8)
     C = np.vstack(corpus["v"].values[:6])
     cids = np.arange(6, dtype=np.int64)
@@ -303,8 +297,6 @@ def _sem_reference(df: pd.DataFrame, window, tau):
 
 
 def test_semantic_window_matches_reference_any_batching():
-    from iceberg_query_engine_spark.functions import vector
-
     n = 90
     df = pd.DataFrame(
         {
@@ -330,8 +322,6 @@ def test_semantic_window_matches_reference_any_batching():
 def test_semantic_window_cluster_boundary_isolation():
     """Rows of different clusters inside the same window range never
     pair — including across an Arrow batch boundary."""
-    from iceberg_query_engine_spark.functions import vector
-
     base = RNG.normal(size=4)
     df = pd.DataFrame(
         {
@@ -373,8 +363,6 @@ def _reference_range(df: pd.DataFrame, q: np.ndarray, qids, tau):
 
 
 def test_range_search_matches_reference_any_batching():
-    from iceberg_query_engine_spark.functions.vector import multi_query_range_fn
-
     corpus = _corpus(300)
     q = RNG.normal(size=(4, 8))
     qids = np.array([0, 1, 2, 3])
@@ -392,8 +380,6 @@ def test_range_search_matches_reference_any_batching():
 
 
 def test_range_search_cosines_bit_identical_across_batch_sizes():
-    from iceberg_query_engine_spark.functions.vector import multi_query_range_fn
-
     corpus = _corpus(128)
     q = RNG.normal(size=(2, 8))
     qids = np.array([10, 11])
@@ -405,9 +391,23 @@ def test_range_search_cosines_bit_identical_across_batch_sizes():
 
 
 def test_range_search_empty_below_threshold():
-    from iceberg_query_engine_spark.functions.vector import multi_query_range_fn
-
     corpus = _corpus(50)
     q = RNG.normal(size=(1, 8))
     fn = multi_query_range_fn(q, np.array([0]), 1.1)  # cosine can't exceed 1
     assert len(_run(fn, [corpus])) == 0
+
+
+def test_vector_module_imports_without_a_session():
+    """Python workers unpickle the shipped kernels by importing this
+    module, with no SparkContext: the import must not need one."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    proc = subprocess.run(
+        [sys.executable, "-c", "import iceberg_query_engine_spark.functions.vector"],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
