@@ -53,12 +53,11 @@ def main() -> None:
     round_times: list = []
     orig_cc = ds.cc_labels
 
-    def instrumented(edges, cc_spill_dir=None, on_round=None, local_edge_gate=None):
+    def instrumented(edges, cc_spill_dir=None, on_round=None):
         return orig_cc(
             edges,
             cc_spill_dir,
             on_round=lambda r, s: round_times.append(round(s, 2)),
-            local_edge_gate=local_edge_gate,
         )
 
     ds.cc_labels = instrumented

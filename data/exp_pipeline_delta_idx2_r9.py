@@ -90,10 +90,9 @@ def build_flat_index(spark, ds, F, sf_dir: str, t: int, path: str) -> None:
 
 
 def run_arm(spark, ds, F, sf_dir: str, split: float, n_docs: int, flat: bool) -> dict:
-    from iceberg_query_engine_spark.sources.registry import table_fingerprint
-
     t = int(split * n_docs)
     real_buckets = ds._pipe_idx_buckets
+    real_index_dir = ds._pipeline_delta_index_dir
     arm: dict = {}
     try:
         if flat:
@@ -103,8 +102,7 @@ def run_arm(spark, ds, F, sf_dir: str, split: float, n_docs: int, flat: bool) ->
             t0 = time.time()
             build_flat_index(spark, ds, F, sf_dir, t, path)
             arm["index_build_secs"] = round(time.time() - t0, 2)
-            fpr = (table_fingerprint(sf_dir, "documents") or "nofp")[:12]
-            ds._PIPE_DELTA_INDEX_CACHE[f"{sf_dir}|{t}|{fpr}|"] = path
+            ds._pipeline_delta_index_dir = lambda *_a, **_k: path
             ds._pipe_idx_buckets = lambda _t: 1  # gate off; no pb/bb refs
         else:
             t0 = time.time()
@@ -134,9 +132,9 @@ def run_arm(spark, ds, F, sf_dir: str, split: float, n_docs: int, flat: bool) ->
         arm["batch_secs"] = round(time.time() - t0, 2)
     finally:
         ds._pipe_idx_buckets = real_buckets
+        ds._pipeline_delta_index_dir = real_index_dir
         spark.catalog.clearCache()
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-        ds._PIPE_DELTA_INDEX_CACHE.clear()
     return arm
 
 

@@ -87,7 +87,6 @@ def main() -> None:
             import shutil
 
             shutil.rmtree(os.path.dirname(idx), ignore_errors=True)
-            ds._PIPE_DELTA_INDEX_CACHE.clear()
     print(json.dumps(out, indent=1))
 
 

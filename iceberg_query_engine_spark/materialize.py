@@ -1,5 +1,6 @@
 """Size gates and materialisation: whether a derived frame is persisted
-or broadcast, and the one release that frees what a query pinned.
+or broadcast, the one release that frees what a query pinned, and the
+one home for derived data stored at rest.
 
 The gates compare source sizes (``sources.registry.table_bytes``) with
 two constants; an unknown size takes the gate's safe side.
@@ -13,9 +14,27 @@ frame built on a checkpoint will be acted on again: such a frame fails
 on its next action once its blocks are gone. ``Engine.sql`` does not
 call it: SQL text reaches none of these sites, and a user may still
 hold frames from ``Engine.dataframe``.
+
+At-rest contract. Every build-once derivation kept across sessions (the
+Iceberg-lite fixture tables, the partitioned events copy, the IVF, kNN
+delta and scrub-pipeline indexes) goes through ``at_rest``, which lays
+it out as ``<root>/spark_graft_store/<kind>/<slug>/<fp12>``: ``kind``
+names the derivation and its format (a format change bumps it),
+``slug`` the source directory plus an optional tag, and ``fp12`` the
+sources' content fingerprints. A derivation is complete iff its
+``_INDEX_SUCCESS`` sentinel exists; the sentinel is written after the
+build returns, so a build that raises is never served. A miss empties
+its own ``<slug>`` directory (stale builds of regenerated sources, and
+any partial build) and touches nothing outside it.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterable
 
 from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -103,3 +122,46 @@ def release() -> int:
     for rdd in rdds:
         rdd.unpersist(True)
     return len(rdds)
+
+
+SENTINEL = "_INDEX_SUCCESS"
+
+
+def slug(sf_dir: str) -> str:
+    """`sf_dir` as one path component: its absolute path, with '/' → '_'."""
+    return os.path.abspath(sf_dir).strip("/").replace("/", "_")
+
+
+def at_rest(
+    kind: str,
+    sf_dir: str,
+    sources: Iterable[str],
+    build: Callable[[str], None],
+    *,
+    tag: str = "",
+    root: str | None = None,
+) -> str:
+    """Path of the stored derivation ``kind`` of `sf_dir`'s `sources`,
+    building it first if it is not complete (see the module docstring).
+    `build(path)` writes the derivation under `path`, which does not
+    exist when it is called; `root` (default: the system tempdir) is a
+    deployment path, e.g. storage every executor can reach."""
+    fps = [registry.table_fingerprint(sf_dir, s) or "nofp" for s in sources]
+    fp12 = hashlib.sha256("|".join(fps).encode()).hexdigest()[:12]
+    owner = os.path.join(
+        root or tempfile.gettempdir(),
+        "spark_graft_store",
+        kind,
+        f"{slug(sf_dir)}_{tag}" if tag else slug(sf_dir),
+    )
+    path = os.path.join(owner, fp12)
+    if os.path.exists(os.path.join(path, SENTINEL)):
+        return path
+    if os.path.isdir(owner):
+        for d in os.listdir(owner):
+            shutil.rmtree(os.path.join(owner, d), ignore_errors=True)
+    os.makedirs(owner, exist_ok=True)
+    build(path)
+    with open(os.path.join(path, SENTINEL), "w") as fh:
+        fh.write("ok\n")
+    return path

@@ -23,6 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import at_rest
 from .tpch import tables
 
 N_HASHES = 8  # minhash permutations
@@ -583,7 +584,6 @@ def cc_labels(
     edges: DataFrame,
     cc_spill_dir: str | None = None,
     on_round=None,
-    local_edge_gate: int | None = None,
 ) -> DataFrame:
     """Connected-component labels (node, label = min reachable id)
     over a SYMMETRIC (src, dst) edge list — hash-min label propagation
@@ -591,12 +591,12 @@ def cc_labels(
     kNN-graph clustering (similarity_suite.sim_knn_clusters). See
     dedup_clusters' docstring for the algorithm and scale notes.
 
-    Toy-scale gate: at or below `local_edge_gate` edges (default
-    CC_LOCAL_EDGE_GATE) the edge list is collected (bounded: ≤ ~3 MB)
-    and labeled by a driver-local union-find — identical output, none
-    of the per-round job overhead that dominates small graphs. Above
-    the gate the distributed rounds run unchanged; both paths are
-    bit-parity-tested (tests/test_knn_join.py).
+    Toy-scale gate: at or below CC_LOCAL_EDGE_GATE edges the edge list
+    is collected (bounded: ≤ ~3 MB) and labeled by a driver-local
+    union-find — identical output, none of the per-round job overhead
+    that dominates small graphs. Above the gate the distributed rounds
+    run unchanged; both paths are bit-parity-tested
+    (tests/test_knn_join.py).
 
     cc_spill_dir: parent for the deep-graph parquet round state —
     created LAZILY (shallow graphs that converge before round 12 touch
@@ -614,9 +614,8 @@ def cc_labels(
 
     edges = edges.repartition("src").localCheckpoint()
 
-    gate = CC_LOCAL_EDGE_GATE if local_edge_gate is None else local_edge_gate
     # count on the materialized blocks: one trivial job, no recompute
-    if edges.count() <= gate:
+    if edges.count() <= CC_LOCAL_EDGE_GATE:
         return _cc_labels_local(edges)
 
     labels = (
@@ -1937,8 +1936,6 @@ def _delta_ledger(
     ).orderBy("doc_id")
 
 
-_PIPE_DELTA_INDEX_CACHE: dict[str, str] = {}
-
 PIPE_IDX_MAX_BUCKETS = 1024
 
 
@@ -1950,7 +1947,7 @@ def _pipe_idx_buckets(t: int) -> int:
     test-sized corpora don't pay thousands of tiny files. Derived from
     t alone, so the build and every later probe agree without storing
     layout metadata (a formula change is a layout change — bump the
-    version tag in _pipeline_delta_index_dir's dir name with it)."""
+    version tag in _pipeline_delta_index_dir's store kind with it)."""
     return max(16, min(PIPE_IDX_MAX_BUCKETS, t // 5000))
 
 
@@ -1988,34 +1985,10 @@ def _pipeline_delta_index_dir(
     DIRECTORY listing (static PartitionFilters — the
     sim_knn_graph_delta_indexed posture applied to the scrub's stores).
 
-    Same cache discipline as the kNN delta index (r8 ADVICE, applied
-    from birth here): keyed on a content fingerprint of the documents
-    table, superseded fingerprints reclaimed, completion gated on an
-    `_INDEX_SUCCESS` sentinel written last, and an index_dir override
-    for multi-node deployments (default tempdir is local-mode-only)."""
-    import shutil
-    import tempfile
+    index_dir: parent directory for the stored index (the `root` of
+    materialize.at_rest); the default tempdir is local-mode-only."""
 
-    from ..sources.registry import table_fingerprint
-
-    fpr = (table_fingerprint(sf_dir, "documents") or "nofp")[:12]
-    key = f"{sf_dir}|{t}|{fpr}|{index_dir or ''}"
-    slug = f"pipe_{sf_dir.strip('/').replace('/', '_')}_{t}"
-    base = os.path.join(index_dir or tempfile.gettempdir(), "pipeline_delta_index")
-    # _v3: key-bucket-partitioned layout + setkey at rest; the
-    # stale-dir reclaim below removes superseded fingerprints AND
-    # superseded layouts alike
-    path = os.path.join(base, f"{slug}_{fpr}_v3")
-    sentinel = os.path.join(path, "_INDEX_SUCCESS")
-    cached = _PIPE_DELTA_INDEX_CACHE.get(key)
-    if cached and os.path.exists(os.path.join(cached, "_INDEX_SUCCESS")):
-        return cached
-    if not os.path.exists(sentinel):
-        if os.path.isdir(base):
-            for d in os.listdir(base):
-                if d.startswith(slug + "_") and d != os.path.basename(path):
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         (documents,) = tables(spark, sf_dir, "documents")
         existing_train = documents.filter(
             (F.col("doc_id") < t) & (F.col("source") != "src0")
@@ -2026,7 +1999,7 @@ def _pipeline_delta_index_dir(
         # task writes a handful of directories, not B files apiece
         existing_train.select("doc_id", fp.alias("fp")).withColumn(
             "pb", F.pmod(F.xxhash64("fp"), F.lit(nb))
-        ).repartition("pb").write.mode("overwrite").partitionBy("pb").parquet(
+        ).repartition("pb").write.partitionBy("pb").parquet(
             os.path.join(path, "hashes")
         )
         # setkey at rest (the hashed sorted token set, 8 B) lets the
@@ -2037,7 +2010,7 @@ def _pipeline_delta_index_dir(
             "doc_id", "band", "sz", "setkey"
         ).withColumn(
             "bb", F.pmod(F.xxhash64("band"), F.lit(nb))
-        ).repartition("bb").write.mode("overwrite").partitionBy("bb").parquet(
+        ).repartition("bb").write.partitionBy("bb").parquet(
             os.path.join(path, "bands")
         )
         (
@@ -2048,13 +2021,18 @@ def _pipeline_delta_index_dir(
             )
             .select(F.explode("shingles").alias("shx"))
             .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "eval_shingles"))
+            .write.parquet(os.path.join(path, "eval_shingles"))
         )
-        with open(sentinel, "w") as fh:
-            fh.write("ok\n")
-    _PIPE_DELTA_INDEX_CACHE[key] = path
-    return path
+
+    # _v3: key-bucket-partitioned layout + setkey at rest
+    return at_rest(
+        "pipeline_delta_index_v3",
+        sf_dir,
+        ("documents",),
+        build,
+        tag=str(t),
+        root=index_dir,
+    )
 
 
 def dedup_pipeline_delta_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:

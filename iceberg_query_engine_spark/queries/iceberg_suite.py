@@ -1,9 +1,9 @@
 """Driver-visible queries for the iceberg-lite table format.
 
-Each query materializes a two-snapshot partitioned table under /tmp
-from the `orders` source, then exercises snapshot time travel and
-pruned reads; the oracle replays the equivalent filters on the raw
-parquet. (Format parity: reference IcebergScanExec,
+Each query reads a fixture table built from the `orders` source and
+stored at rest (``materialize.at_rest``), then exercises snapshot time
+travel, pruned reads and table maintenance; the oracle replays the
+equivalent filters on the raw parquet. (Format parity: reference IcebergScanExec,
 /root/reference/src/physical/operators/iceberg.rs.)
 """
 
@@ -16,6 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import at_rest, slug
 from ..sources.iceberg_lite import (
     IcebergLiteTable,
     PartitionFilter,
@@ -26,42 +27,56 @@ from ..sources.iceberg_lite import (
 )
 from .tpch import tables
 
-_CACHE: dict[str, str] = {}
-_DEL_CACHE: dict[str, str] = {}
+# The fixtures' table-format tag, part of every fixture's store kind: a
+# format change bumps it, so tables written under an older format (e.g.
+# before schema-at-create, which reads refuse) are never served.
+_FORMAT = "iceberg_lite_schema0"
 
-# a new root, not "iceberg_lite": tables cached under the old one may
-# predate schema-at-create, which reads refuse
-_CACHE_ROOT = "iceberg_lite_schema0"
+_FixtureBuild = Callable[[SparkSession, DataFrame, str], None]
+_FixturePath = Callable[[SparkSession, str], str]
 
 
-def _cache_path(sf_dir: str, name: str) -> str:
-    """Where the fixture table `name` built from `sf_dir` is cached."""
-    return os.path.join(
-        tempfile.gettempdir(), _CACHE_ROOT, sf_dir.strip("/").replace("/", "_"), name
+def _fixture(name: str) -> Callable[[_FixtureBuild], _FixturePath]:
+    """Turn `build(spark, orders, path)` into `(spark, sf_dir) -> path`
+    of fixture `name`, built once from `orders` and stored at rest."""
+
+    def wrap(build: _FixtureBuild) -> _FixturePath:
+        def get(spark: SparkSession, sf_dir: str) -> str:
+            def run(path: str) -> None:
+                (orders,) = tables(spark, sf_dir, "orders")
+                build(spark, orders, path)
+
+            return at_rest(f"{_FORMAT}_{name}", sf_dir, ("orders",), run)
+
+        get.__doc__ = build.__doc__
+        return get
+
+    return wrap
+
+
+def _scratch(sf_dir: str, name: str) -> str:
+    """An empty, unstored table path for the ops that mutate their
+    fixture and so rebuild it on every call."""
+    import shutil
+
+    path = os.path.join(
+        tempfile.gettempdir(), "spark_graft_scratch", _FORMAT, slug(sf_dir), name
     )
-
-
-def _table(spark: SparkSession, sf_dir: str) -> str:
-    key = sf_dir
-    if key in _CACHE and os.path.exists(_CACHE[key]):
-        return _CACHE[key]
-    path = _cache_path(sf_dir, "orders")
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
-        (orders,) = tables(spark, sf_dir, "orders")
-        write_snapshot(
-            orders.filter(F.col("o_orderkey") < 500),
-            path,
-            partition_by="o_orderstatus",
-            stats_columns=["o_orderkey", "o_totalprice"],
-        )
-        write_snapshot(
-            orders.filter(F.col("o_orderkey").between(500, 999)),
-            path,
-            partition_by="o_orderstatus",
-            stats_columns=["o_orderkey", "o_totalprice"],
-        )
-    _CACHE[key] = path
+    shutil.rmtree(path, ignore_errors=True)
     return path
+
+
+@_fixture("orders")
+def _table(spark: SparkSession, orders: DataFrame, path: str) -> None:
+    """Two appends partitioned by o_orderstatus: orders < 500, then
+    500..999, with column stats on o_orderkey and o_totalprice."""
+    for cond in (F.col("o_orderkey") < 500, F.col("o_orderkey").between(500, 999)):
+        write_snapshot(
+            orders.filter(cond),
+            path,
+            partition_by="o_orderstatus",
+            stats_columns=["o_orderkey", "o_totalprice"],
+        )
 
 
 def iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,27 +126,20 @@ ORDER BY o_orderstatus
 """
 
 
-def _delete_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture("orders_del")
+def _delete_table(spark: SparkSession, orders: DataFrame, path: str) -> None:
     """orders<500 snapshot → positional delete (o_orderkey % 7 = 0) →
     equality delete (o_orderstatus = 'P') → append 500..999. The final
     state is fully SQL-expressible, so the oracle replays it exactly."""
-    key = sf_dir
-    if key in _DEL_CACHE and os.path.exists(_DEL_CACHE[key]):
-        return _DEL_CACHE[key]
-    path = _cache_path(sf_dir, "orders_del")
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
-        (orders,) = tables(spark, sf_dir, "orders")
-        write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
-        write_position_deletes(spark, path, "o_orderkey % 7 = 0")
-        write_equality_deletes(
-            spark,
-            path,
-            spark.createDataFrame([("P",)], ["o_orderstatus"]),
-            ["o_orderstatus"],
-        )
-        write_snapshot(orders.filter(F.col("o_orderkey").between(500, 999)), path)
-    _DEL_CACHE[key] = path
-    return path
+    write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
+    write_position_deletes(spark, path, "o_orderkey % 7 = 0")
+    write_equality_deletes(
+        spark,
+        path,
+        spark.createDataFrame([("P",)], ["o_orderstatus"]),
+        ["o_orderstatus"],
+    )
+    write_snapshot(orders.filter(F.col("o_orderkey").between(500, 999)), path)
 
 
 def iceberg_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -161,26 +169,16 @@ ORDER BY o_orderstatus
 """
 
 
-_UPSERT_CACHE: dict[str, str] = {}
-
-
-def _upsert_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture("orders_upsert")
+def _upsert_table(spark: SparkSession, orders: DataFrame, path: str) -> None:
     """orders<500 base snapshot → MERGE-style upsert of every key
     < 600 with o_orderkey % 10 = 0 at o_totalprice + 1000: keys < 500
     are updates (replace), 500..599 are inserts."""
-    key = sf_dir
-    if key in _UPSERT_CACHE and os.path.exists(_UPSERT_CACHE[key]):
-        return _UPSERT_CACHE[key]
-    path = _cache_path(sf_dir, "orders_upsert")
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
-        (orders,) = tables(spark, sf_dir, "orders")
-        write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
-        batch = orders.filter(
-            (F.col("o_orderkey") < 600) & (F.col("o_orderkey") % 10 == 0)
-        ).withColumn("o_totalprice", F.col("o_totalprice") + 1000)
-        upsert_snapshot(spark, path, batch, ["o_orderkey"])
-    _UPSERT_CACHE[key] = path
-    return path
+    write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
+    batch = orders.filter(
+        (F.col("o_orderkey") < 600) & (F.col("o_orderkey") % 10 == 0)
+    ).withColumn("o_totalprice", F.col("o_totalprice") + 1000)
+    upsert_snapshot(spark, path, batch, ["o_orderkey"])
 
 
 def iceberg_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,10 +241,8 @@ ORDER BY o_orderstatus
 """
 
 
-_IVM_CACHE: dict[str, str] = {}
-
-
-def _ivm_agg_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture("orders_ivm")
+def _ivm_tables(spark: SparkSession, orders: DataFrame, path: str) -> None:
     """Incremental view maintenance: an aggregate table (rows/total per
     o_orderstatus) kept current by reading ONLY the new snapshot's rows.
 
@@ -258,47 +254,35 @@ def _ivm_agg_table(spark: SparkSession, sf_dir: str) -> str:
     At 100 TB this is the difference between re-aggregating the table
     and touching just the day's partition: maintenance cost tracks new
     data. Totals are stored UNROUNDED and rounded only at read, so
-    repeated maintenance never accumulates rounding drift."""
-    key = sf_dir
-    if key in _IVM_CACHE and os.path.exists(_IVM_CACHE[key]):
-        return _IVM_CACHE[key]
-    src_path = _cache_path(sf_dir, "orders_ivm_src")
-    agg_path = _cache_path(sf_dir, "orders_ivm_agg")
-    if not os.path.exists(os.path.join(agg_path, "metadata", "v0.metadata.json")):
-        (orders,) = tables(spark, sf_dir, "orders")
-        s1 = write_snapshot(orders.filter(F.col("o_orderkey") < 500), src_path)
-        write_snapshot(orders.filter(F.col("o_orderkey").between(500, 999)), src_path)
-        src = IcebergLiteTable(src_path)
+    repeated maintenance never accumulates rounding drift. The source
+    (src/) and the aggregate (agg/) are one store, built together."""
+    src_path, agg_path = os.path.join(path, "src"), os.path.join(path, "agg")
+    s1 = write_snapshot(orders.filter(F.col("o_orderkey") < 500), src_path)
+    write_snapshot(orders.filter(F.col("o_orderkey").between(500, 999)), src_path)
+    src = IcebergLiteTable(src_path)
 
-        def agg(df: DataFrame) -> DataFrame:
-            return df.groupBy("o_orderstatus").agg(
-                F.count(F.lit(1)).alias("n"), F.sum("o_totalprice").alias("total")
-            )
+    def agg(df: DataFrame) -> DataFrame:
+        return df.groupBy("o_orderstatus").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("o_totalprice").alias("total")
+        )
 
-        write_snapshot(agg(src.read(spark, snapshot_id=s1)), agg_path)
-        delta = agg(src.read_incremental(spark, from_snapshot_id=s1)).select(
-            "o_orderstatus", F.col("n").alias("dn"), F.col("total").alias("dtotal")
-        )
-        cur = IcebergLiteTable(agg_path).read(spark)
-        batch = (
-            delta.join(cur, "o_orderstatus", "left")
-            .select(
-                "o_orderstatus",
-                (F.coalesce(F.col("n"), F.lit(0)) + F.col("dn")).alias("n"),
-                (F.coalesce(F.col("total"), F.lit(0.0)) + F.col("dtotal")).alias(
-                    "total"
-                ),
-            )
-        )
-        upsert_snapshot(spark, agg_path, batch, ["o_orderstatus"])
-    _IVM_CACHE[key] = agg_path
-    return agg_path
+    write_snapshot(agg(src.read(spark, snapshot_id=s1)), agg_path)
+    delta = agg(src.read_incremental(spark, from_snapshot_id=s1)).select(
+        "o_orderstatus", F.col("n").alias("dn"), F.col("total").alias("dtotal")
+    )
+    cur = IcebergLiteTable(agg_path).read(spark)
+    batch = delta.join(cur, "o_orderstatus", "left").select(
+        "o_orderstatus",
+        (F.coalesce(F.col("n"), F.lit(0)) + F.col("dn")).alias("n"),
+        (F.coalesce(F.col("total"), F.lit(0.0)) + F.col("dtotal")).alias("total"),
+    )
+    upsert_snapshot(spark, agg_path, batch, ["o_orderstatus"])
 
 
 def iceberg_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the incrementally-maintained aggregate table; must equal a
     full recompute over keys < 1000 (the oracle)."""
-    t = IcebergLiteTable(_ivm_agg_table(spark, sf_dir))
+    t = IcebergLiteTable(os.path.join(_ivm_tables(spark, sf_dir), "agg"))
     return (
         t.read(spark)
         .select("o_orderstatus", "n", F.round(F.col("total"), 2).alias("total"))
@@ -382,13 +366,10 @@ def iceberg_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     expired, one remains, and zero stranded paths survive in data/
     (every physical file is referenced by a live snapshot). The final
     readable state is untouched — the oracle replays it on raw orders."""
-    import shutil
-
     from ..sources.iceberg_lite import compact, expire_snapshots
 
-    path = _cache_path(sf_dir, "orders_expire")
     # expiry MUTATES table state: rebuild fresh each call (idempotence)
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch(sf_dir, "orders_expire")
     (orders,) = tables(spark, sf_dir, "orders")
     write_snapshot(orders.filter(F.col("o_orderkey") < 400), path)
     write_snapshot(orders.filter(F.col("o_orderkey").between(400, 799)), path)
@@ -439,10 +420,7 @@ def iceberg_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the close-out upsert's equality-delete keys are only the
     CHANGED keys — merge cost tracks the change batch, not dimension
     size."""
-    import shutil
-
-    path = _cache_path(sf_dir, "cust_scd2")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch(sf_dir, "cust_scd2")
     (customer,) = tables(spark, sf_dir, "customer")
     dim = customer.filter(F.col("c_custkey") < 200).select(
         "c_custkey",
@@ -486,10 +464,8 @@ FROM customer WHERE c_custkey < 200 ORDER BY c_custkey
 """
 
 
-_WAP_CACHE: dict[str, str] = {}
-
-
-def _wap_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture("orders_wap")
+def _wap_table(spark: SparkSession, orders: DataFrame, path: str) -> None:
     """Write-audit-publish fixture: main gets orders < 800; a GOOD
     batch (800–999) lands on branch `audit`, passes the audit and is
     fast-forwarded into main; a BAD batch (1000–1099, prices negated)
@@ -497,64 +473,31 @@ def _wap_table(spark: SparkSession, sf_dir: str) -> str:
     dropped — main must never see it."""
     from ..sources.iceberg_lite import create_branch, create_tag, drop_ref, fast_forward
 
-    def _complete(p: str) -> bool:
-        """The 7-step build is done iff the final ref state holds — a
-        crash mid-build must trigger a rebuild, not poison the cache
-        (the metadata file alone appears after step 1)."""
-        if not os.path.exists(os.path.join(p, "metadata", "v0.metadata.json")):
-            return False
-        try:
-            t = IcebergLiteTable(p)
-            refs = t.refs()
-            return (
-                "v1" in refs
-                and "audit" in refs
-                and "audit_bad" not in refs
-                and refs["main"]["snapshot_id"] == refs["audit"]["snapshot_id"]
-            )
-        except Exception:
-            return False
-
-    key = sf_dir
-    if key in _WAP_CACHE and os.path.exists(_WAP_CACHE[key]):
-        return _WAP_CACHE[key]
-    path = _cache_path(sf_dir, "orders_wap")
-    if not _complete(path):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        (orders,) = tables(spark, sf_dir, "orders")
-        write_snapshot(orders.filter(F.col("o_orderkey") < 800), path)
-        create_tag(path, "v1")
-        t = IcebergLiteTable(path)
-        # --- good batch: write to branch, audit, publish ---
-        create_branch(path, "audit")
-        write_snapshot(
-            orders.filter(F.col("o_orderkey").between(800, 999)),
-            path,
-            branch="audit",
-        )
-        bad = (
-            t.read(spark, ref="audit").filter(F.col("o_totalprice") <= 0).count()
-        )
-        assert bad == 0, "good batch must pass its own audit"
-        fast_forward(path, "main", "audit")
-        # --- bad batch: write to branch, audit fails, drop branch ---
-        create_branch(path, "audit_bad")
-        write_snapshot(
-            orders.filter(F.col("o_orderkey").between(1000, 1099)).withColumn(
-                "o_totalprice", -F.col("o_totalprice")
-            ),
-            path,
-            branch="audit_bad",
-        )
-        n_bad = (
-            t.read(spark, ref="audit_bad").filter(F.col("o_totalprice") <= 0).count()
-        )
-        assert n_bad > 0, "bad batch must fail its audit"
-        drop_ref(path, "audit_bad")
-    _WAP_CACHE[key] = path
-    return path
+    write_snapshot(orders.filter(F.col("o_orderkey") < 800), path)
+    create_tag(path, "v1")
+    t = IcebergLiteTable(path)
+    # --- good batch: write to branch, audit, publish ---
+    create_branch(path, "audit")
+    write_snapshot(
+        orders.filter(F.col("o_orderkey").between(800, 999)),
+        path,
+        branch="audit",
+    )
+    bad = t.read(spark, ref="audit").filter(F.col("o_totalprice") <= 0).count()
+    assert bad == 0, "good batch must pass its own audit"
+    fast_forward(path, "main", "audit")
+    # --- bad batch: write to branch, audit fails, drop branch ---
+    create_branch(path, "audit_bad")
+    write_snapshot(
+        orders.filter(F.col("o_orderkey").between(1000, 1099)).withColumn(
+            "o_totalprice", -F.col("o_totalprice")
+        ),
+        path,
+        branch="audit_bad",
+    )
+    n_bad = t.read(spark, ref="audit_bad").filter(F.col("o_totalprice") <= 0).count()
+    assert n_bad > 0, "bad batch must fail its audit"
+    drop_ref(path, "audit_bad")
 
 
 def iceberg_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -658,38 +601,24 @@ ORDER BY snapshot_id
 """
 
 
-_ORPHAN_CACHE: dict[str, str] = {}
-
-
-def _orphan_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture("orders_orphan")
+def _orphan_table(spark: SparkSession, orders: DataFrame, path: str) -> None:
     """Two committed snapshots (orders <500, 500..999) plus planted
     uncommitted data files (orders 1000..1199) — the debris a crashed
     writer leaves: parquet under data/ that no manifest references."""
     import glob
     import shutil
 
-    key = sf_dir
-    if key in _ORPHAN_CACHE and os.path.exists(_ORPHAN_CACHE[key]):
-        return _ORPHAN_CACHE[key]
-    path = _cache_path(sf_dir, "orders_orphan")
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
-        (orders,) = tables(spark, sf_dir, "orders")
-        write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
-        write_snapshot(orders.filter(F.col("o_orderkey").between(500, 999)), path)
-    if not os.path.exists(os.path.join(path, "data", "orphan-0.parquet")):
-        # plant the crashed write: data files bypassing the commit
-        # (separate guard: a crash between the snapshot writes and the
-        # plant must not leave a cached orphan-free fixture behind)
-        (orders,) = tables(spark, sf_dir, "orders")
-        tmp = os.path.join(path, "_orphan_build")
-        orders.filter(F.col("o_orderkey").between(1000, 1199)).coalesce(
-            2
-        ).write.mode("overwrite").parquet(tmp)
-        for i, src in enumerate(sorted(glob.glob(os.path.join(tmp, "*.parquet")))):
-            os.replace(src, os.path.join(path, "data", f"orphan-{i}.parquet"))
-        shutil.rmtree(tmp, ignore_errors=True)
-    _ORPHAN_CACHE[key] = path
-    return path
+    write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
+    write_snapshot(orders.filter(F.col("o_orderkey").between(500, 999)), path)
+    # plant the crashed write: data files bypassing the commit
+    tmp = os.path.join(path, "_orphan_build")
+    orders.filter(F.col("o_orderkey").between(1000, 1199)).coalesce(
+        2
+    ).write.mode("overwrite").parquet(tmp)
+    for i, src in enumerate(sorted(glob.glob(os.path.join(tmp, "*.parquet")))):
+        os.replace(src, os.path.join(path, "data", f"orphan-{i}.parquet"))
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def iceberg_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,40 +660,28 @@ ORDER BY kind
 """
 
 
-_EVO_CACHE: dict[str, str] = {}
-
-
-def _evo_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture("orders_evo")
+def _evo_table(spark: SparkSession, orders: DataFrame, path: str) -> None:
     """Schema-evolution fixture: snapshot 1 under (o_orderkey,
     o_totalprice); then RENAME o_totalprice→price and ADD channel
     (both metadata-only); snapshot 2 appends under the evolved names.
     Deterministic, so the oracle replays both eras from raw orders."""
     from ..sources.iceberg_lite import add_column, rename_column
 
-    key = sf_dir
-    if key in _EVO_CACHE and os.path.exists(_EVO_CACHE[key]):
-        return _EVO_CACHE[key]
-    path = _cache_path(sf_dir, "orders_evo")
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
-        (orders,) = tables(spark, sf_dir, "orders")
-        write_snapshot(
-            orders.filter(F.col("o_orderkey") < 500).select(
-                "o_orderkey", "o_totalprice"
-            ),
-            path,
-        )
-        rename_column(path, "o_totalprice", "price")
-        add_column(path, "channel", "string")
-        write_snapshot(
-            orders.filter(F.col("o_orderkey").between(500, 999)).select(
-                "o_orderkey",
-                F.col("o_totalprice").alias("price"),
-                F.col("o_orderstatus").alias("channel"),
-            ),
-            path,
-        )
-    _EVO_CACHE[key] = path
-    return path
+    write_snapshot(
+        orders.filter(F.col("o_orderkey") < 500).select("o_orderkey", "o_totalprice"),
+        path,
+    )
+    rename_column(path, "o_totalprice", "price")
+    add_column(path, "channel", "string")
+    write_snapshot(
+        orders.filter(F.col("o_orderkey").between(500, 999)).select(
+            "o_orderkey",
+            F.col("o_totalprice").alias("price"),
+            F.col("o_orderstatus").alias("channel"),
+        ),
+        path,
+    )
 
 
 def iceberg_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -796,27 +713,17 @@ ORDER BY channel ASC NULLS FIRST
 """
 
 
-_PEVO_CACHE: dict[str, str] = {}
-
-
-def _pevo_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture("orders_pevo")
+def _pevo_table(spark: SparkSession, orders: DataFrame, path: str) -> None:
     """Partition-evolution fixture: snapshot 1 UNPARTITIONED
     (orders < 500), snapshot 2 partitioned by o_orderstatus
     (500..999) — two specs live in one table, as Iceberg allows."""
-    key = sf_dir
-    if key in _PEVO_CACHE and os.path.exists(_PEVO_CACHE[key]):
-        return _PEVO_CACHE[key]
-    path = _cache_path(sf_dir, "orders_pevo")
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
-        (orders,) = tables(spark, sf_dir, "orders")
-        write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
-        write_snapshot(
-            orders.filter(F.col("o_orderkey").between(500, 999)),
-            path,
-            partition_by="o_orderstatus",
-        )
-    _PEVO_CACHE[key] = path
-    return path
+    write_snapshot(orders.filter(F.col("o_orderkey") < 500), path)
+    write_snapshot(
+        orders.filter(F.col("o_orderkey").between(500, 999)),
+        path,
+        partition_by="o_orderstatus",
+    )
 
 
 def iceberg_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,10 +758,8 @@ ORDER BY o_orderstatus
 """
 
 
-_RB_CACHE: dict[str, str] = {}
-
-
-def _rb_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture("orders_rb")
+def _rb_table(spark: SparkSession, orders: DataFrame, path: str) -> None:
     """Rollback fixture, built in one shot to a FIXED final state:
     snapshots 1..3 append orders [<300, 300..599, 600..899]; the third
     (the 'poisoned batch') is rolled back; snapshot 4 appends
@@ -862,19 +767,11 @@ def _rb_table(spark: SparkSession, sf_dir: str) -> str:
     replays both the final chain and the rollback point."""
     from ..sources.iceberg_lite import rollback_to_snapshot
 
-    key = sf_dir
-    if key in _RB_CACHE and os.path.exists(_RB_CACHE[key]):
-        return _RB_CACHE[key]
-    path = _cache_path(sf_dir, "orders_rb")
-    if not os.path.exists(os.path.join(path, "metadata", "v0.metadata.json")):
-        (orders,) = tables(spark, sf_dir, "orders")
-        write_snapshot(orders.filter(F.col("o_orderkey") < 300), path)
-        write_snapshot(orders.filter(F.col("o_orderkey").between(300, 599)), path)
-        write_snapshot(orders.filter(F.col("o_orderkey").between(600, 899)), path)
-        rollback_to_snapshot(path, 2)
-        write_snapshot(orders.filter(F.col("o_orderkey").between(900, 1199)), path)
-    _RB_CACHE[key] = path
-    return path
+    write_snapshot(orders.filter(F.col("o_orderkey") < 300), path)
+    write_snapshot(orders.filter(F.col("o_orderkey").between(300, 599)), path)
+    write_snapshot(orders.filter(F.col("o_orderkey").between(600, 899)), path)
+    rollback_to_snapshot(path, 2)
+    write_snapshot(orders.filter(F.col("o_orderkey").between(900, 1199)), path)
 
 
 def iceberg_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import asof_join, range_join_bucketed
 from ..operators.rank import ntile_by_range, ranked_by_range
-from ..materialize import broadcast_if_small, persist_if_large
+from ..materialize import at_rest, broadcast_if_small, persist_if_large
 from .tpch import tables
 
 
@@ -417,30 +417,17 @@ FROM lineitem
 """
 
 
-_PART_CACHE: dict[str, str] = {}
-
-
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """events written Hive-partitioned by event_type (directory per
     value) — the write-side layout that turns a predicate on the
-    partition column into directory-level pruning at read."""
-    import os
-    import tempfile
+    partition column into directory-level pruning at read. Stored at
+    rest, built once per events fingerprint."""
 
-    key = sf_dir
-    if key in _PART_CACHE and os.path.exists(_PART_CACHE[key]):
-        return _PART_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "spark_partitioned",
-        sf_dir.strip("/").replace("/", "_"),
-        "events",
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         (events,) = tables(spark, sf_dir, "events")
-        events.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    _PART_CACHE[key] = path
-    return path
+        events.write.partitionBy("event_type").parquet(path)
+
+    return at_rest("partitioned_events", sf_dir, ("events",), build)
 
 
 def op_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,6 +36,7 @@ from ..functions.vector import (
     pq_adc_topk_fn,
     top_probe_centroids_udf,
 )
+from ..materialize import at_rest
 from .tpch import tables
 
 TOP_K = 5
@@ -493,9 +494,6 @@ def _lsh_bucket(v, hof: bool = False):
     return out
 
 
-_IVF_INDEX_CACHE: dict[str, str] = {}
-
-
 def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build-once IVF index at rest: the assigned corpus written
     partitionBy(bucket) — one directory per centroid bucket. The
@@ -503,28 +501,17 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     buckets' files (1/K of the corpus per query), which is the entire
     point of IVF as a storage layout rather than a per-query
     computation."""
-    import os
-    import tempfile
 
-    key = sf_dir
-    if key in _IVF_INDEX_CACHE and os.path.exists(_IVF_INDEX_CACHE[key]):
-        return _IVF_INDEX_CACHE[key]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "ivf_index",
-        sf_dir.strip("/").replace("/", "_"),
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         assigned, _ = seeded_assignment(spark, sf_dir)
         (
             assigned.filter(F.col("vec_id") >= N_QUERIES)
             .select("vec_id", "v", F.col("cluster").alias("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
+            .write.partitionBy("bucket")
             .parquet(path)
         )
-    _IVF_INDEX_CACHE[key] = path
-    return path
+
+    return at_rest("ivf_index", sf_dir, ("embeddings",), build)
 
 
 def sim_ivf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1553,9 +1540,6 @@ def sim_knn_graph_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _knn_graph_delta(spark, sf_dir, DELTA_SPLIT)
 
 
-_KNN_DELTA_INDEX_CACHE: dict[str, str] = {}
-
-
 def _knn_delta_index_dir(
     spark: SparkSession, sf_dir: str, t: int, index_dir: str | None = None
 ) -> str:
@@ -1566,62 +1550,28 @@ def _knn_delta_index_dir(
     cluster-keyed). Built on first use, amortized across every
     subsequent batch.
 
-    index_dir: parent directory for the stored index — the same
-    multi-node posture knob as cc_labels' cc_spill_dir: on a cluster
-    point it at storage every executor can reach; the default system
-    tempdir is correct only for local mode (r8 verdict, What's wrong
-    #3). The index path is keyed on a CONTENT FINGERPRINT of the
-    embeddings table (parquet file sizes+mtimes — registry.
-    table_fingerprint), so regenerating the dataset at the same path
-    and row count invalidates the stored index instead of silently
-    serving stale neighbors (r8 ADVICE, medium). Stale fingerprints'
-    dirs for the same (table, t) key are deleted on rebuild — the
-    cache never accumulates. Completion is gated on an index-level
-    `_INDEX_SUCCESS` sentinel written LAST (after members AND
-    centroids): a crash between the two table writes leaves a dir
-    that fails the gate and is rebuilt, not half-read (r8 ADVICE,
-    low)."""
-    import shutil
-    import tempfile
+    index_dir: parent directory for the stored index (the `root` of
+    materialize.at_rest) — the same multi-node posture knob as
+    cc_labels' cc_spill_dir: on a cluster point it at storage every
+    executor can reach; the default system tempdir is correct only for
+    local mode."""
 
-    from ..sources.registry import table_fingerprint
-
-    fp = (table_fingerprint(sf_dir, "embeddings") or "nofp")[:12]
-    key = f"{sf_dir}|{t}|{fp}|{index_dir or ''}"
-    slug = f"{sf_dir.strip('/').replace('/', '_')}_{t}"
-    base = os.path.join(index_dir or tempfile.gettempdir(), "knn_delta_index")
-    path = os.path.join(base, f"{slug}_{fp}")
-    sentinel = os.path.join(path, "_INDEX_SUCCESS")
-    cached = _KNN_DELTA_INDEX_CACHE.get(key)
-    if cached and os.path.exists(os.path.join(cached, "_INDEX_SUCCESS")):
-        return cached
-    if not os.path.exists(sentinel):
-        # reclaim superseded fingerprints of the same (table, t) key
-        if os.path.isdir(base):
-            for d in os.listdir(base):
-                if d.startswith(slug + "_") and d != os.path.basename(path):
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-        shutil.rmtree(path, ignore_errors=True)  # partial build debris
+    def build(path: str) -> None:
         (embeddings,) = tables(spark, sf_dir, "embeddings")
-        e = embeddings.select(
-            "vec_id", _as_double(F.col("embedding")).alias("v")
-        )
+        e = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
         existing = e.filter(F.col("vec_id") < t)
         centroids = _sqrt_centroids(existing)
         assigned = _nearest_assign(centroids)(existing)
         (
             assigned.select("vec_id", "v", "cluster")
-            .write.mode("overwrite")
-            .partitionBy("cluster")
+            .write.partitionBy("cluster")
             .parquet(os.path.join(path, "members"))
         )
-        centroids.write.mode("overwrite").parquet(
-            os.path.join(path, "centroids")
-        )
-        with open(sentinel, "w") as fh:
-            fh.write("ok\n")
-    _KNN_DELTA_INDEX_CACHE[key] = path
-    return path
+        centroids.write.parquet(os.path.join(path, "centroids"))
+
+    return at_rest(
+        "knn_delta_index", sf_dir, ("embeddings",), build, tag=str(t), root=index_dir
+    )
 
 
 def sim_knn_graph_delta_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:

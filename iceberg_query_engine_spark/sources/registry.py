@@ -99,11 +99,12 @@ def table_fingerprint(sf_dir: str, name: str) -> str | None:
     """Content fingerprint of a canonical table's parquet files: sha256
     over the sorted (path relative to the table root, size, mtime_ns)
     triples — no data read. For a flat table the relative path is the
-    file name. Derived caches (e.g. the stored kNN delta index) key on
+    file name. Stored derivations (``materialize.at_rest``) key on
     this so a REGENERATED dataset at the same path/row-count
-    invalidates them instead of silently serving stale state (r8
-    ADVICE). None when the table is absent or holds no parquet file,
-    so callers can fall back to an uncached build."""
+    invalidates them instead of silently serving stale state. None
+    when the table is absent or holds no parquet file; ``at_rest``
+    then keys that source as ``nofp``, so its store is still built
+    once and reused, but no longer tracks the table's content."""
     try:
         import hashlib
 

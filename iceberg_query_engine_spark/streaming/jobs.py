@@ -18,8 +18,10 @@ micro-batches, exactly the backfill pattern used on a real cluster.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,18 +97,30 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_to_completion(df: DataFrame, name: str) -> None:
-    """Drive a streaming aggregation over all available data, then stop."""
+def _run_to_completion(
+    df: DataFrame,
+    name: str,
+    mode: str = "complete",
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+) -> None:
+    """Drive a stream over all available data, then stop. The sink is
+    the in-memory table `name` in output mode `mode`, or `foreach_batch`
+    when given. The checkpoint is private to this run and removed once
+    the query has terminated, whether or not it failed."""
     ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    w = df.writeStream.option("checkpointLocation", ckpt).trigger(availableNow=True)
+    if foreach_batch is None:
+        w = w.format("memory").queryName(name).outputMode(mode)
+    else:
+        w = w.foreachBatch(foreach_batch)
+    q = None
+    try:
+        q = w.start()
+        q.awaitTermination()
+    finally:
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,16 +288,7 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
     )
     name = "mem_stream_join"
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_to_completion(joined, name, mode="append")
     return (
         spark.table(name)
         .groupBy(F.col("p_user").alias("user_id"))
@@ -333,16 +338,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("value"), 4).alias("total_value"),
     )
     name = "mem_stream_static_enrich"
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_to_completion(agg, name)
     return spark.table(name).orderBy("segment")
 
 
@@ -392,16 +388,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_event_stream(spark, sf_dir)
     deduped = events.withWatermark("ts", "2 hours").dropDuplicates(["user_id", "event_type"])
     name = "mem_stream_dedup"
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_to_completion(deduped, name, mode="append")
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -471,16 +458,7 @@ def stream_foreach_batch_to_parquet(
             .parquet(out_dir)
         )
 
-    ckpt = os.path.join(
-        tempfile.gettempdir(), "sg_ckpt", f"feb-{uuid.uuid4().hex}"
-    )
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_to_completion(events, "feb", foreach_batch=sink)
     return n_batches["n"]
 
 
@@ -533,15 +511,7 @@ def stream_upsert_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(), "sg_stream_ice", uuid.uuid4().hex, "user_totals"
     )
     events = read_event_stream(spark, sf_dir)
-    sink = upsert_user_totals_sink(path)
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"ui-{uuid.uuid4().hex}")
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_to_completion(events, "ui", foreach_batch=upsert_user_totals_sink(path))
     t = IcebergLiteTable(path)
     return (
         t.read(spark)

@@ -14,9 +14,6 @@ keys; the bounded replay here keeps NoTimeout.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -24,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .jobs import read_event_stream
+from .jobs import _run_to_completion, read_event_stream
 
 OUT_SCHEMA = "user_id LONG, n_events LONG, total_value DOUBLE"
 STATE_SCHEMA = "n LONG, tv DOUBLE"
@@ -56,16 +53,7 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "mem_stream_stateful"
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_to_completion(counted, name, mode="update")
     # update mode emits one row per user per micro-batch; the final
     # state per user is the row with the highest event count (counts
     # are monotone; total_value is NOT — a negative event value would
@@ -164,16 +152,7 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "mem_stream_tws"
-    ckpt = os.path.join(tempfile.gettempdir(), "sg_ckpt", f"{name}-{uuid.uuid4().hex}")
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_to_completion(counted, name, mode="update")
     return (
         spark.table(name)
         .groupBy("user_id")

@@ -38,16 +38,10 @@ def mini_sf(spark, tmp_path, sf_smoke):
     return d
 
 
-def _index_paths(base: str) -> list[str]:
-    root = os.path.join(base, "knn_delta_index")
-    return sorted(os.listdir(root)) if os.path.isdir(root) else []
-
-
 def test_delta_index_custom_dir_used_and_reused(spark, tmp_path, mini_sf):
     from iceberg_query_engine_spark.queries import similarity_suite as sim
 
     idx_parent = str(tmp_path / "idx")
-    sim._KNN_DELTA_INDEX_CACHE.clear()
     p1 = sim._knn_delta_index_dir(spark, mini_sf, 40, index_dir=idx_parent)
     assert p1.startswith(idx_parent)
     assert os.path.exists(os.path.join(p1, "_INDEX_SUCCESS"))
@@ -67,7 +61,6 @@ def test_delta_index_invalidated_by_content_fingerprint(spark, tmp_path, mini_sf
     from iceberg_query_engine_spark.queries import similarity_suite as sim
 
     idx_parent = str(tmp_path / "idx")
-    sim._KNN_DELTA_INDEX_CACHE.clear()
     p1 = sim._knn_delta_index_dir(spark, mini_sf, 40, index_dir=idx_parent)
     # simulate dataset regeneration at the same path + row count: bump
     # the parquet files' mtimes (content fingerprint = name|size|mtime)
@@ -83,21 +76,19 @@ def test_delta_index_invalidated_by_content_fingerprint(spark, tmp_path, mini_sf
     p2 = sim._knn_delta_index_dir(spark, mini_sf, 40, index_dir=idx_parent)
     assert p2 != p1, "regenerated data must not serve the stale index"
     # the superseded fingerprint's dir was reclaimed — no accumulation
-    assert _index_paths(idx_parent) == [os.path.basename(p2)]
+    assert os.listdir(os.path.dirname(p2)) == [os.path.basename(p2)]
 
 
 def test_delta_index_partial_build_rebuilt(spark, tmp_path, mini_sf):
     from iceberg_query_engine_spark.queries import similarity_suite as sim
 
     idx_parent = str(tmp_path / "idx")
-    sim._KNN_DELTA_INDEX_CACHE.clear()
     p1 = sim._knn_delta_index_dir(spark, mini_sf, 40, index_dir=idx_parent)
     # simulate a crash between the members and centroids writes: the
     # members table exists (with its own _SUCCESS) but the index-level
     # sentinel is gone and centroids is partial/missing
     os.remove(os.path.join(p1, "_INDEX_SUCCESS"))
     shutil.rmtree(os.path.join(p1, "centroids"))
-    sim._KNN_DELTA_INDEX_CACHE.clear()
     p2 = sim._knn_delta_index_dir(spark, mini_sf, 40, index_dir=idx_parent)
     assert p2 == p1
     assert os.path.exists(os.path.join(p2, "_INDEX_SUCCESS"))

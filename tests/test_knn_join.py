@@ -60,7 +60,7 @@ def test_auto_grid_multiblock_alignment(spark, tmp_path):
     assert auto == _knn_join(spark, d, grid=(1, 1)).collect()
 
 
-def test_cc_labels_deep_diameter_graph_converges(spark):
+def test_cc_labels_deep_diameter_graph_converges(spark, monkeypatch):
     """Regression: per-round Dataset checkpoints on pyspark 4.1.2 fail
     to sever the recomputation chain, so CC rounds grew ~3× per round
     and wedged the driver after ~18 rounds (first hit by the
@@ -72,6 +72,7 @@ def test_cc_labels_deep_diameter_graph_converges(spark):
 
     from pyspark.sql import functions as F
 
+    from iceberg_query_engine_spark.queries import dedup_suite
     from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
 
     n = 3000
@@ -82,10 +83,11 @@ def test_cc_labels_deep_diameter_graph_converges(spark):
         base.select((F.col("id") + 1).alias("src"), F.col("id").alias("dst"))
     )
     t0 = time.perf_counter()
-    # local_edge_gate=0 forces the DISTRIBUTED rounds — the machinery
-    # under regression here (the toy-size gate would otherwise route
-    # this 6k-edge graph to the local union-find)
-    labels = cc_labels(edges, local_edge_gate=0)
+    # a 0 gate forces the DISTRIBUTED rounds — the machinery under
+    # regression here (the toy-size gate would otherwise route this
+    # 6k-edge graph to the local union-find)
+    monkeypatch.setattr(dedup_suite, "CC_LOCAL_EDGE_GATE", 0)
+    labels = cc_labels(edges)
     out = labels.agg(
         F.count_distinct("label").alias("n"), F.min("label").alias("m")
     ).collect()[0]
@@ -93,7 +95,7 @@ def test_cc_labels_deep_diameter_graph_converges(spark):
     assert time.perf_counter() - t0 < 120  # the old code never finished
 
 
-def test_cc_labels_local_gate_bit_parity(spark):
+def test_cc_labels_local_gate_bit_parity(spark, monkeypatch):
     """The toy-size local union-find and the distributed rounds must
     be bit-identical on arbitrary symmetric graphs (same contract as
     the rank.py gate: results never depend on which path ran)."""
@@ -101,6 +103,7 @@ def test_cc_labels_local_gate_bit_parity(spark):
 
     from pyspark.sql import functions as F
 
+    from iceberg_query_engine_spark.queries import dedup_suite
     from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
 
     rng = random.Random(8)
@@ -110,7 +113,8 @@ def test_cc_labels_local_gate_bit_parity(spark):
         pairs + [(b, a) for a, b in pairs], "src long, dst long"
     )
     local = sorted(map(tuple, cc_labels(edges).collect()))
-    dist = sorted(map(tuple, cc_labels(edges, local_edge_gate=0).collect()))
+    monkeypatch.setattr(dedup_suite, "CC_LOCAL_EDGE_GATE", 0)
+    dist = sorted(map(tuple, cc_labels(edges).collect()))
     assert local == dist and len(local) > 0
 
 
@@ -126,22 +130,26 @@ def _cc_dirs() -> set[str]:
     return {d for d in os.listdir(root) if d.startswith("cc_labels_")}
 
 
-def test_cc_labels_shallow_graph_creates_no_spill_dir(spark):
+def test_cc_labels_shallow_graph_creates_no_spill_dir(spark, monkeypatch):
+    from iceberg_query_engine_spark.queries import dedup_suite
     from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
+
+    monkeypatch.setattr(dedup_suite, "CC_LOCAL_EDGE_GATE", 0)
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (3, 4), (4, 3)], "src long, dst long"
     )
     before = _cc_dirs()
-    assert cc_labels(edges, local_edge_gate=0).count() == 4
+    assert cc_labels(edges).count() == 4
     assert _cc_dirs() == before
 
 
-def test_cc_labels_deep_graph_cleans_up_spill_dir(spark):
+def test_cc_labels_deep_graph_cleans_up_spill_dir(spark, monkeypatch):
     """A path graph deep enough to cross the parquet-spill threshold
     must leave no cc_labels_* tree behind — and still converge right."""
     from pyspark.sql import functions as F
 
+    from iceberg_query_engine_spark.queries import dedup_suite
     from iceberg_query_engine_spark.queries.dedup_suite import cc_labels
 
     n = 3000  # ~log2 diameter rounds with pointer jumping > 12 spill rounds
@@ -152,7 +160,8 @@ def test_cc_labels_deep_graph_cleans_up_spill_dir(spark):
     before = _cc_dirs()
     # force the DISTRIBUTED path: the spill lifecycle under test never
     # engages on the local union-find the toy-size gate would pick
-    labels = cc_labels(edges, local_edge_gate=0)
+    monkeypatch.setattr(dedup_suite, "CC_LOCAL_EDGE_GATE", 0)
+    labels = cc_labels(edges)
     # single component labeled by its minimum, readable AFTER cleanup
     assert labels.filter(F.col("label") != 0).count() == 0
     assert labels.count() == n

@@ -8,10 +8,21 @@ one size walker (sources.registry.parquet_bytes).
   action and a release, and a rebuild returns the same rows.
 - A size the walker cannot tell is None, and each consumer takes its
   documented side: the bucket-count floor, stock session confs.
+- at_rest() is the one home for stored derivations: a hit does not
+  build, a changed source is a new path that reclaims the old one, a
+  raising build is never served. The sites that used to decide "is it
+  built?" themselves serve oracle rows after an interrupted build or a
+  regenerated corpus.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from iceberg_query_engine_spark import materialize
@@ -22,6 +33,7 @@ from iceberg_query_engine_spark.queries import catalog
 from iceberg_query_engine_spark.queries.tpch import tables
 from iceberg_query_engine_spark.queries.tpch_full import pick_bucket_count
 from iceberg_query_engine_spark.sources.registry import parquet_bytes
+from iceberg_query_engine_spark.testing import compare
 
 
 def _ranked(spark, sf_dir):
@@ -110,3 +122,147 @@ def test_bucket_count_ignores_sidecars(tmp_path):
 def test_tune_for_corpus_without_parquet_keeps_stock_confs(spark, tmp_path):
     (tmp_path / "_SUCCESS").write_text("")
     assert S.tune_for_corpus(spark, str(tmp_path), cpus=32) == {}
+
+
+# --------------------------------------------------------- stored at rest
+@pytest.fixture()
+def private_tmp(tmp_path, monkeypatch) -> str:
+    """Route the default store root (the system tempdir) into tmp_path."""
+    d = tmp_path / "tempdir"
+    d.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(d))
+    return str(d)
+
+
+def _copy_tables(src_sf: str, dst_sf: str, *names: str) -> str:
+    os.makedirs(dst_sf)
+    for n in names:
+        shutil.copy2(
+            os.path.join(src_sf, f"{n}.parquet"), os.path.join(dst_sf, f"{n}.parquet")
+        )
+    return dst_sf
+
+
+def _bump_mtime(path: str) -> None:
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10_000_000_000))
+
+
+def test_at_rest_hit_does_not_build(tmp_path, private_tmp):
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    pq.write_table(pa.table({"k": [1, 2]}), os.path.join(sf, "t.parquet"))
+    calls = []
+
+    def build(path):
+        calls.append(path)
+        os.makedirs(path)
+
+    p1 = materialize.at_rest("fake", sf, ("t",), build, tag="x")
+    assert p1.startswith(os.path.join(private_tmp, "spark_graft_store", "fake"))
+    assert os.path.exists(os.path.join(p1, materialize.SENTINEL))
+    assert materialize.at_rest("fake", sf, ("t",), build, tag="x") == p1
+    assert calls == [p1]
+
+
+def test_at_rest_changed_source_reclaims_old_path(tmp_path, private_tmp):
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    t = os.path.join(sf, "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2]}), t)
+    p1 = materialize.at_rest("fake", sf, ("t",), os.makedirs)
+    # a store of another source dir shares the kind, not the slug dir
+    other = str(tmp_path / "other")
+    _copy_tables(sf, other, "t")
+    p_other = materialize.at_rest("fake", other, ("t",), os.makedirs)
+    _bump_mtime(t)
+    p2 = materialize.at_rest("fake", sf, ("t",), os.makedirs)
+    assert p2 != p1 and os.path.dirname(p2) == os.path.dirname(p1)
+    assert not os.path.exists(p1)
+    assert os.listdir(os.path.dirname(p2)) == [os.path.basename(p2)]
+    assert os.path.exists(os.path.join(p_other, materialize.SENTINEL))
+
+
+def test_at_rest_raising_build_is_never_served(tmp_path, private_tmp):
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    pq.write_table(pa.table({"k": [1, 2]}), os.path.join(sf, "t.parquet"))
+    seen = []
+
+    def crash(path):
+        os.makedirs(path)
+        open(os.path.join(path, "half"), "w").close()
+        raise RuntimeError("interrupted build")
+
+    def build(path):
+        seen.append(os.path.exists(path))
+        os.makedirs(path)
+
+    with pytest.raises(RuntimeError):
+        materialize.at_rest("fake", sf, ("t",), crash)
+    p = materialize.at_rest("fake", sf, ("t",), build)
+    assert seen == [False]  # the partial dir was removed before the rebuild
+    assert sorted(os.listdir(p)) == [materialize.SENTINEL]
+
+
+def _fail_once(monkeypatch, module, name, at_call):
+    """Make module.<name> raise on its `at_call`-th call (1-based), once."""
+    real = getattr(module, name)
+    n = {"calls": 0}
+
+    def flaky(*a, **k):
+        n["calls"] += 1
+        if n["calls"] == at_call:
+            raise RuntimeError("interrupted build")
+        return real(*a, **k)
+
+    monkeypatch.setattr(module, name, flaky)
+
+
+@pytest.mark.parametrize(
+    "op, at_call",
+    [
+        # the second append of the time-travel fixture
+        ("iceberg_time_travel", 2),
+        # the aggregate's first commit, after both source appends
+        ("iceberg_incremental_agg", 3),
+    ],
+)
+def test_interrupted_fixture_build_is_rebuilt(
+    spark, sf_smoke, tmp_path, private_tmp, monkeypatch, op, at_call
+):
+    from iceberg_query_engine_spark.queries import iceberg_suite
+
+    sf = _copy_tables(sf_smoke, str(tmp_path / "sf"), "orders")
+    _fail_once(monkeypatch, iceberg_suite, "write_snapshot", at_call)
+    with pytest.raises(RuntimeError, match="interrupted build"):
+        iceberg_suite.QUERIES[op](spark, sf).collect()
+    r = compare(op, iceberg_suite.QUERIES[op](spark, sf), iceberg_suite.ORACLE[op], sf)
+    assert r.ok, (r.detail, r.mismatches[:3])
+
+
+def test_ivf_index_tracks_a_regenerated_corpus(
+    spark, sf_smoke, tmp_path, private_tmp, monkeypatch
+):
+    from iceberg_query_engine_spark.queries import similarity_suite as sim
+    from iceberg_query_engine_spark.queries import tpch
+
+    sf = _copy_tables(sf_smoke, str(tmp_path / "sf"), "embeddings")
+    monkeypatch.setattr(tpch, "_TABLE_CACHE", {})
+    first = sim.sim_ivf_persist(spark, sf).collect()
+    # regenerate the corpus at the same path and row count: every
+    # vector moves to another id
+    path = os.path.join(sf, "embeddings.parquet")
+    t = pq.read_table(path)
+    emb = t.column("embedding").to_pylist()
+    t = t.set_column(
+        t.schema.get_field_index("embedding"),
+        pa.field("embedding", t.schema.field("embedding").type),
+        pa.array(emb[7:] + emb[:7], t.schema.field("embedding").type),
+    )
+    pq.write_table(t, path)
+    monkeypatch.setattr(tpch, "_TABLE_CACHE", {})  # a new session's view
+    again = sim.sim_ivf_persist(spark, sf)
+    r = compare("sim_ivf_persist", again, sim.ORACLE["sim_ivf_persist"], sf)
+    assert r.ok, (r.detail, r.mismatches[:3])
+    assert sorted(map(tuple, again.collect())) != sorted(map(tuple, first))

@@ -113,7 +113,6 @@ def test_indexed_star_branches_parity_on_overcap_corpus(spark, tmp_path):
     from iceberg_query_engine_spark.queries.dedup_suite import (
         _pipeline_delta,
         _pipeline_delta_indexed,
-        _PIPE_DELTA_INDEX_CACHE,
     )
     from tests.test_lsh_skew_bound import _minhash_sig
 
@@ -159,7 +158,6 @@ def test_indexed_star_branches_parity_on_overcap_corpus(spark, tmp_path):
         os.path.join(tmp_path, "documents.parquet")
     )
 
-    _PIPE_DELTA_INDEX_CACHE.clear()
     idx_dir = str(tmp_path / "idx")
     indexed = _pipeline_delta_indexed(
         spark, str(tmp_path), 0.9, index_dir=idx_dir
@@ -181,7 +179,6 @@ def test_indexed_star_branches_parity_on_overcap_corpus(spark, tmp_path):
     # pruned-path parity: a 2-doc batch engages the static pruning gate
     # (batch_docs * n_bands <= nb // 2 at nb = 16) — same ledger from
     # pruned directory reads
-    _PIPE_DELTA_INDEX_CACHE.clear()
     pruned = _pipeline_delta_indexed(
         spark, str(tmp_path), 1.0 - 2 / n, index_dir=str(tmp_path / "idx2")
     ).collect()
@@ -197,22 +194,24 @@ def test_indexed_twin_bit_parity_and_index_reuse(spark, sf_oracle, tmp_path):
     import os
 
     from iceberg_query_engine_spark.queries.dedup_suite import (
-        _PIPE_DELTA_INDEX_CACHE,
+        _pipeline_delta_index_dir,
         _pipeline_delta_indexed,
         dedup_pipeline_delta,
     )
+    from iceberg_query_engine_spark.sources.registry import table_rows
 
     idx_parent = str(tmp_path / "idx")
-    _PIPE_DELTA_INDEX_CACHE.clear()
     indexed = _pipeline_delta_indexed(
         spark, sf_oracle, PIPE_DELTA_SPLIT, index_dir=idx_parent
     ).collect()
     stateless = dedup_pipeline_delta(spark, sf_oracle).collect()
     assert [tuple(r) for r in indexed] == [tuple(r) for r in stateless]
-    root = os.path.join(idx_parent, "pipeline_delta_index")
-    (built,) = os.listdir(root)
-    assert os.path.exists(os.path.join(root, built, "_INDEX_SUCCESS"))
-    marker = os.path.join(root, built, "hashes")
+    t = int(PIPE_DELTA_SPLIT * table_rows(sf_oracle, "documents"))
+    built = _pipeline_delta_index_dir(spark, sf_oracle, t, index_dir=idx_parent)
+    assert built.startswith(idx_parent)
+    assert os.listdir(os.path.dirname(built)) == [os.path.basename(built)]
+    assert os.path.exists(os.path.join(built, "_INDEX_SUCCESS"))
+    marker = os.path.join(built, "hashes")
     mtime = os.path.getmtime(marker)
     again = _pipeline_delta_indexed(
         spark, sf_oracle, PIPE_DELTA_SPLIT, index_dir=idx_parent

@@ -53,6 +53,22 @@ def test_stream_foreach_batch_sink(spark, sf_oracle, tmp_path):
     assert "batch_id" in back.columns
 
 
+def test_stream_runs_remove_their_checkpoints(spark, sf_smoke, tmp_path, monkeypatch):
+    """Every streaming run (memory sink in each output mode, and
+    foreachBatch) removes its checkpoint once the query has terminated;
+    the memory sinks stay readable after it is gone."""
+    import os
+    import tempfile
+
+    from iceberg_query_engine_spark.streaming import jobs, stateful
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for op in (jobs.stream_tumbling, jobs.stream_dedup, stateful.stream_stateful_counts):
+        assert op(spark, sf_smoke).count() > 0
+    assert jobs.stream_foreach_batch_to_parquet(spark, sf_smoke, str(tmp_path / "o")) >= 1
+    assert os.listdir(tmp_path / "sg_ckpt") == []
+
+
 def test_write_parquet_partitioned(engine, tmp_path):
     """Hive-style partitioned sink: partition dirs exist and reads are
     partition-pruned (the write-side half of the 100 TB story)."""

@@ -26,6 +26,7 @@ the base index.
 from __future__ import annotations
 
 import os
+import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -46,6 +47,16 @@ Y = " ".join(f"y{i}" for i in range(1, 11))
 CONTAM = " ".join(f"e{i}" for i in range(1, 9)) + " " + " ".join(
     f"u{i}" for i in range(1, 26)
 )
+
+
+@pytest.fixture(scope="module", autouse=True)
+def private_tempdir(tmp_path_factory):
+    """Keep every store, run dir and checkpoint this module makes under
+    its own tmp dir: the stores key on the synthetic corpus' path, so
+    in the shared tempdir they would outlive the test session."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tempfile, "tempdir", str(tmp_path_factory.mktemp("tempdir")))
+        yield
 
 
 @pytest.fixture(scope="module")
