@@ -191,14 +191,14 @@ def test_indexed_twin_bit_parity_and_index_reuse(spark, sf_oracle, tmp_path):
     from its stored index (it shares the stateless twin's oracle), the
     index must land under the caller's index_dir, and a second call
     must REUSE it (no rebuild)."""
+    import glob
     import os
 
+    from iceberg_query_engine_spark import materialize
     from iceberg_query_engine_spark.queries.dedup_suite import (
-        _pipeline_delta_index_dir,
         _pipeline_delta_indexed,
         dedup_pipeline_delta,
     )
-    from iceberg_query_engine_spark.sources.registry import table_rows
 
     idx_parent = str(tmp_path / "idx")
     indexed = _pipeline_delta_indexed(
@@ -206,11 +206,15 @@ def test_indexed_twin_bit_parity_and_index_reuse(spark, sf_oracle, tmp_path):
     ).collect()
     stateless = dedup_pipeline_delta(spark, sf_oracle).collect()
     assert [tuple(r) for r in indexed] == [tuple(r) for r in stateless]
-    t = int(PIPE_DELTA_SPLIT * table_rows(sf_oracle, "documents"))
-    built = _pipeline_delta_index_dir(spark, sf_oracle, t, index_dir=idx_parent)
-    assert built.startswith(idx_parent)
+    # the op alone built exactly one complete store under idx_parent
+    stores = glob.glob(
+        os.path.join(
+            idx_parent, "spark_graft_store", "*", "*", "*", materialize.SENTINEL
+        )
+    )
+    assert len(stores) == 1, stores
+    built = os.path.dirname(stores[0])
     assert os.listdir(os.path.dirname(built)) == [os.path.basename(built)]
-    assert os.path.exists(os.path.join(built, "_INDEX_SUCCESS"))
     marker = os.path.join(built, "hashes")
     mtime = os.path.getmtime(marker)
     again = _pipeline_delta_indexed(
