@@ -13,7 +13,7 @@ Env:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS    local[] parallelism (default 32)
   BENCH_PLAN=1        also print df.explain(formatted) per query to stderr
-  BENCH_REPEAT        timing iterations per query (default 1, report min)
+  BENCH_REPEAT        timing iterations per query (default 2, report min)
 
 Counterpart of the reference's `benchmark-parquet` CLI
 (/root/reference/src/main.rs:59-113) and benchmark_vs_duckdb.py.

@@ -230,7 +230,7 @@ def main() -> int:
 
     sf_name = f"sf{args.sf:g}"
     t0 = time.perf_counter()
-    data_dir = tpch_full.ensure_full_data(spark, sf_name, layout=args.layout)
+    data_dir = tpch_full.ensure_full_data(spark, sf_name)
     gen_s = time.perf_counter() - t0
     warehouse_db = os.path.dirname(tpch_full.warehouse_table_dir(sf_name, "lineitem"))
     applied = tune_for_corpus(

@@ -380,6 +380,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         print(_fmt_table(res))
     elif args.cmd == "run":
+        from .materialize import release
         from .queries import catalog as _catalog
 
         qs = _catalog.all_queries()
@@ -402,9 +403,11 @@ def main(argv: list[str] | None = None) -> int:
         t0 = time.perf_counter()
         rows = df.collect()
         ms = (time.perf_counter() - t0) * 1000
+        schema = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+        release()  # the action is done: free what the catalog query pinned
         res = QueryResult(
             rows=rows,
-            schema=[(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+            schema=schema,
             row_count=len(rows),
             metrics=QueryMetrics(total_ms=ms, execute_ms=ms),
         )

@@ -13,7 +13,9 @@ to run. Call ``release()`` between queries, after the action, when no
 frame built on a checkpoint will be acted on again: such a frame fails
 on its next action once its blocks are gone. ``Engine.sql`` does not
 call it: SQL text reaches none of these sites, and a user may still
-hold frames from ``Engine.dataframe``.
+hold frames from ``Engine.dataframe``. A query whose returned frame
+reads files it wrote (a streaming run's output) takes its directory from
+``scratch_dir``; ``release()`` removes it after the unpersists.
 
 At-rest contract. Every build-once derivation kept across sessions (the
 Iceberg-lite fixture tables, the partitioned events copy, the IVF, kNN
@@ -34,6 +36,7 @@ import hashlib
 import os
 import shutil
 import tempfile
+import uuid
 from collections.abc import Callable, Iterable
 
 from pyspark import SparkContext, StorageLevel
@@ -53,7 +56,7 @@ from .sources import registry
 # pays cache write/read (measured r9-opt at sf0.1: persist cost
 # 1.2-3x on ev_dau_wau_mau/op_ks_test/op_freq_itemsets — the same
 # lesson as the reverted corpus-wide respread). The production value
-# is argued in OPTIMIZATION_r09.md.
+# is argued in HISTORY.md, "Size-gated persists".
 MATERIALIZE_MIN_BYTES = 256 << 20
 
 # Broadcast-HINT gate (r9 verdict, What's wrong #1): F.broadcast() is
@@ -107,21 +110,38 @@ def broadcast_if_small(df: DataFrame, sf_dir: str, *source_tables: str) -> DataF
     return df
 
 
+# Directories handed out by scratch_dir() since the last release().
+_SCRATCH: list[str] = []
+
+
+def scratch_dir(name: str) -> str:
+    """A fresh path ``<tempdir>/<name>/<uuid>`` (not created) for files a
+    query's returned frame reads lazily; the next ``release()`` removes
+    it. A caller-chosen directory is never passed through here."""
+    path = os.path.join(tempfile.gettempdir(), name, uuid.uuid4().hex)
+    _SCRATCH.append(path)
+    return path
+
+
 def release() -> int:
     """Free everything the finished query pinned: clear the SQL cache,
     then unpersist, blocking, every RDD of the active context's
     persistent map (persisted frames and localCheckpoint blocks alike;
-    the cache's own unpersist does not wait for its blocks to go).
-    Returns how many RDDs it unpersisted; 0 when no SparkContext is
-    running. See the module docstring for when it is safe to call."""
+    the cache's own unpersist does not wait for its blocks to go), then
+    remove every ``scratch_dir``. Returns how many RDDs it unpersisted;
+    0 when no SparkContext is running. See the module docstring for
+    when it is safe to call."""
+    n = 0
     sc = SparkContext._active_spark_context  # noqa: SLF001
-    if sc is None:
-        return 0
-    rdds = list(sc._jsc.getPersistentRDDs().values())  # noqa: SLF001
-    SparkSession.active().catalog.clearCache()
-    for rdd in rdds:
-        rdd.unpersist(True)
-    return len(rdds)
+    if sc is not None:
+        rdds = list(sc._jsc.getPersistentRDDs().values())  # noqa: SLF001
+        SparkSession.active().catalog.clearCache()
+        for rdd in rdds:
+            rdd.unpersist(True)
+        n = len(rdds)
+    while _SCRATCH:
+        shutil.rmtree(_SCRATCH.pop(), ignore_errors=True)
+    return n
 
 
 SENTINEL = "_INDEX_SUCCESS"

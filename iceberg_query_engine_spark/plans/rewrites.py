@@ -99,10 +99,6 @@ def q9_selective_semijoin(sql: str) -> str:
 def apply_rewrites(sql: str) -> str:
     """All registered dialect rewrites, in order. Every rewrite must be
     semantics-preserving (validated against the DuckDB oracle on the
-    UN-rewritten text by the driver gate). SPARK_GRAFT_NO_REWRITES=1
-    disables them (A/B measurement knob)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_REWRITES") == "1":
-        return sql
+    UN-rewritten text in every oracle run). An A/B of the rewrites
+    takes a git revision without them as its other arm."""
     return q9_selective_semijoin(sql)

@@ -583,7 +583,6 @@ CC_LOCAL_EDGE_GATE = 100_000
 def cc_labels(
     edges: DataFrame,
     cc_spill_dir: str | None = None,
-    on_round=None,
 ) -> DataFrame:
     """Connected-component labels (node, label = min reachable id)
     over a SYMMETRIC (src, dst) edge list — hash-min label propagation
@@ -604,14 +603,7 @@ def cc_labels(
     so repeated invocations leave nothing behind. On a multi-node
     cluster point it at storage every executor can reach (the warehouse
     path or spark.local.dir is NOT shared); the default tempdir is
-    correct only for local mode.
-
-    on_round: optional callable(round_index, wall_seconds) observability
-    hook, called after each propagation round — the per-round flatness
-    signal a production operator (and the scale experiments) watch to
-    confirm the spill path is severing lineage (distributed path only)."""
-    import time as _time
-
+    correct only for local mode."""
     edges = edges.repartition("src").localCheckpoint()
 
     # count on the materialized blocks: one trivial job, no recompute
@@ -640,7 +632,6 @@ def cc_labels(
     prev_sum = _label_sum(labels)
     try:
         for rnd in range(50):
-            rnd_t0 = _time.perf_counter()
             msgs = edges.join(labels, edges.src == labels.node).select(
                 F.col("dst").alias("node"), "label"
             )
@@ -692,8 +683,6 @@ def cc_labels(
                 new_labels.write.mode("overwrite").parquet(path)
                 labels = spark.read.parquet(path)
             cur_sum = _label_sum(labels)
-            if on_round is not None:
-                on_round(rnd, _time.perf_counter() - rnd_t0)
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
@@ -2107,7 +2096,7 @@ def _pipeline_delta_indexed_stages(
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """The indexed delta's stage frames (batch, exact, near,
     contaminated) — split out so experiments can time each probe
-    in isolation (data/exp_pipeline_delta_idx2_r9.py)."""
+    in isolation (`git show b72b397:data/exp_pipeline_delta_idx2_r9.py`)."""
     from ..sources.registry import table_rows
 
     (documents,) = tables(spark, sf_dir, "documents")

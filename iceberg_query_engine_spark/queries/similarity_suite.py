@@ -1074,7 +1074,7 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     intrinsic dimension), the regime where 8-byte PQ structurally
     loses rank information — measured recall@20 here is ~0.26-0.55
     across codebook sizes 16-128 and up to 3 Lloyd refinements
-    (offline sweep, NOTES_r5). Real embedding corpora concentrate on
+    (offline sweep, HISTORY.md). Real embedding corpora concentrate on
     low-dimensional manifolds where the same codes keep recall high;
     the gate exists precisely to measure that before an index swap,
     and a LOW number on THIS corpus is the gate working."""
@@ -1779,7 +1779,7 @@ def sim_knn_clusters_cheap(spark: SparkSession, sf_dir: str) -> DataFrame:
     better, structure concentrates true neighbors in one cell). The
     dial's cheap end: coarse grouping where fragmenting clusters is
     acceptable, or corpora with strong cluster structure. The r8
-    percolation study (NOTES_r8) shows the qualitative difference on
+    percolation study (HISTORY.md) shows the qualitative difference on
     random data: the high-recall graph crosses the percolation
     threshold (one giant component) where this basis yields fragments."""
     return _clusters_from_graph(_knn_graph_ivf(spark, sf_dir))
@@ -1967,7 +1967,7 @@ def _knn_graph_multiprobe(
     # the full corpus): the per-cell kernel computes each left row's
     # top-k independently, so filtered rows' neighbor lists are
     # bit-identical to the full build's — the sampled-recall trick
-    # proven in data/exp_recall_1m_r9.py
+    # proven in `git show b72b397:data/exp_recall_1m_r9.py`
     lhs = probed.filter(left_filter) if left_filter is not None else probed
     left = lhs.select(
         F.col("vec_id").alias("l_id"),

@@ -872,7 +872,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the filter bounds the exchange at 300 rows REGARDLESS of corpus
     # size, so at 100 TB this shuffles KBs after a pruned scan (a
     # corpus-wide respread of the unfiltered scan was measured and
-    # REVERTED this round — see OPTIMIZATION_r09.md Finding 5).
+    # REVERTED — see HISTORY.md, "Corpus-wide respread at registration").
     spread = documents.filter(F.col("doc_id") < 300).repartition(
         spark.sparkContext.defaultParallelism
     )

@@ -76,34 +76,16 @@ def warehouse_table_dir(sf_name: str, table: str) -> str:
     return os.path.join(warehouse, f"{db}.db", table)
 
 
-def _warehouse_has(sf_name: str, table: str) -> bool:
-    loc = warehouse_table_dir(sf_name, table)
-    return os.path.isdir(loc) and any(
-        f.endswith(".parquet") for f in os.listdir(loc)
-    )
-
-
-def ensure_full_data(spark: SparkSession, sf_dir: str, layout: str = "flat") -> str:
-    """Return the full-schema data dir for sf_dir's scale, generating it
-    (deterministically) if absent. sf0.001/sf0.01 ship committed in the
-    repo, so the driver never generates.
-
-    ``layout`` names what the CALLER will read (ADVICE r5): with
-    ``"bucketed"`` a fact table counts as present if its bucketed
-    warehouse copy exists even when the flat parquet doesn't — at bench
-    scale the flat fact files are reclaimed once the catalog layout is
-    built (sf100's flat+bucketed facts together exceed this VM's disk).
-    With the default ``"flat"`` a reclaimed flat fact is genuinely
-    missing and gets regenerated, so flat consumers (``_register``,
-    ``bench_scale --layout flat``) never hit a missing path."""
+def ensure_full_data(spark: SparkSession, sf_dir: str) -> str:
+    """Return the full-schema data dir for sf_dir's scale, generating
+    (deterministically) whichever tables' flat parquet is absent.
+    sf0.001/sf0.01 ship committed in the repo, so the oracle scales
+    never generate. The bucketed catalog layout is written from these flat
+    files and never deletes them, so one check serves every reader."""
     base = os.path.basename(os.path.normpath(sf_dir))
     out = os.path.join(FULL_DATA_ROOT, base)
-    warehouse_ok = layout == "bucketed"
     missing = {
-        t
-        for t in FULL_TABLES
-        if not os.path.exists(os.path.join(out, f"{t}.parquet"))
-        and not (warehouse_ok and t in BUCKET_SPECS and _warehouse_has(base, t))
+        t for t in FULL_TABLES if not os.path.exists(os.path.join(out, f"{t}.parquet"))
     }
     if not missing:
         return out
@@ -207,8 +189,6 @@ def register_catalog_layout(
     sf_name: str,
     buckets: int | None = None,
     analyze: bool = True,
-    only: set[str] | None = None,
-    reclaim_flat: bool = False,
 ) -> str:
     """Register the full schema as CATALOG tables — fact tables
     bucketed+sorted on their join keys, dimensions external — and feed
@@ -229,16 +209,10 @@ def register_catalog_layout(
 
     Idempotent per process; the bucketed write happens once per
     warehouse (re-registered from the existing files on later
-    sessions via CREATE TABLE ... CLUSTERED BY ... LOCATION).
-
-    ``only`` restricts the pass to a table subset and ``reclaim_flat``
-    deletes a fact's FLAT parquet once its bucketed copy is written and
-    analyzed — together they let an sf100-scale ingest run one fact at
-    a time within a single-disk budget (flat+bucketed lineitem alone is
-    ~38 GB; all facts both ways would be ~50 GB — what r5 did by hand).
+    sessions via CREATE TABLE ... CLUSTERED BY ... LOCATION). The flat
+    parquet stays where it is: dimensions are registered on it, and the
+    facts' bucketed copies are written from it.
     """
-    import shutil
-
     from ..sources.registry import table_bytes
 
     if buckets is None:
@@ -246,8 +220,6 @@ def register_catalog_layout(
     db = f"tpch_{sf_name.replace('.', '_')}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for t in FULL_TABLES:
-        if only is not None and t not in only:
-            continue
         full = f"{db}.{t}"
         if spark.catalog.tableExists(full):
             continue
@@ -270,8 +242,7 @@ def register_catalog_layout(
                 # LOCAL count (ADVICE r5: reassigning the loop-shared
                 # `buckets` leaked one table's inferred count into the
                 # next table's fresh write). Schema comes from the
-                # warehouse files themselves (the flat parquet may have
-                # been reclaimed).
+                # warehouse files themselves.
                 t_buckets = _bucket_count_of(loc, existing)
                 schema = spark.read.parquet(loc).schema
                 ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
@@ -318,11 +289,6 @@ def register_catalog_layout(
             spark.sql(f"CREATE TABLE {full} USING parquet LOCATION '{path}'")
         if analyze:
             spark.sql(f"ANALYZE TABLE {full} COMPUTE STATISTICS FOR ALL COLUMNS")
-        if reclaim_flat and t in BUCKET_SPECS and os.path.exists(path):
-            # bucketed copy is written+analyzed; the flat fact is now
-            # redundant (ensure_full_data(layout="flat") regenerates it
-            # on demand for flat consumers)
-            shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
     spark.catalog.setCurrentDatabase(db)
     for t in FULL_TABLES:
         try:

@@ -509,8 +509,8 @@ def generate_tpch_full(
     def write(df: DataFrame, name: str) -> int:
         # `only` regenerates a subset (tables are independent pure
         # functions of spark.range, so any subset is self-consistent) —
-        # used when a fact's flat parquet was reclaimed after its
-        # bucketed warehouse copy was built (tpch_full.ensure_full_data).
+        # tpch_full.ensure_full_data passes the tables whose flat
+        # parquet is missing.
         if only is not None and name not in only:
             return -1
         dest = os.path.join(out_dir, f"{name}.parquet")

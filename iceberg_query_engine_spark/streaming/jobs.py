@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import scratch_dir
+
+
 def _event_ts_physical_type(sf_dir: str) -> str:
     """Read the parquet footer's type for events.ts (e.g. 'timestamp[us]').
 
@@ -504,12 +507,12 @@ def stream_upsert_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch split of the input, so availableNow replay is
     deterministic and oracle-checkable. Scale notes: the per-batch
     upsert touches only changed keys (delete file + data file), never
-    rewrites the table; compact() bounds read amplification."""
+    rewrites the table; compact() bounds read amplification. The table
+    lives in a `materialize.scratch_dir`: the returned frame reads it
+    lazily, and `materialize.release()` removes it after the action."""
     from ..sources.iceberg_lite import IcebergLiteTable
 
-    path = os.path.join(
-        tempfile.gettempdir(), "sg_stream_ice", uuid.uuid4().hex, "user_totals"
-    )
+    path = os.path.join(scratch_dir("sg_stream_ice"), "user_totals")
     events = read_event_stream(spark, sf_dir)
     _run_to_completion(events, "ui", foreach_batch=upsert_user_totals_sink(path))
     t = IcebergLiteTable(path)

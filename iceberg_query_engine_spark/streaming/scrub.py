@@ -42,12 +42,12 @@ single-pass.
 from __future__ import annotations
 
 import os
-import tempfile
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..materialize import scratch_dir
 
 
 def stream_dedup_pipeline(
@@ -57,11 +57,12 @@ def stream_dedup_pipeline(
     timings: list | None = None,
     run_dir: str | None = None,
 ) -> DataFrame:
-    """`chunks`/`timings` are experiment knobs (data/exp_stream_scrub_
-    r9.py): the CATALOG entry always runs the default chunk count —
-    the oracle unrolls exactly STREAM_SCRUB_CHUNKS ranges, so a
-    different count is a different (but equally well-defined)
-    landing schedule, not the catalog query. `timings`, if given,
+    """`chunks`/`timings` are experiment knobs (`git show
+    b72b397:data/exp_stream_scrub_r9.py`): the CATALOG entry always
+    runs the default chunk count — the oracle unrolls exactly
+    STREAM_SCRUB_CHUNKS ranges, so a different count is a different
+    (but equally well-defined) landing schedule, not the catalog
+    query. `timings`, if given,
     receives one {batch, rows, secs} dict per micro-batch.
 
     `run_dir` pins the run's state root (staging/overlay/ledger/
@@ -71,7 +72,10 @@ def stream_dedup_pipeline(
     chunk files are reused as-is (they are only written when absent —
     rewriting them would give them new names the source would treat
     as fresh arrivals). Crash-recovery is exercised by
-    tests/test_stream_scrub.py::test_checkpoint_resume."""
+    tests/test_stream_scrub.py::test_checkpoint_resume. A caller's
+    run_dir is the caller's to remove; without one the run gets a
+    `materialize.scratch_dir`, which `materialize.release()` removes
+    after the action (the returned frame reads it lazily)."""
     from ..queries.dedup_suite import (
         CLUSTER_BAND_SIZE,
         N_HASHES,
@@ -99,9 +103,7 @@ def stream_dedup_pipeline(
     nb = _pipe_idx_buckets(t)
     n_bands = N_HASHES // CLUSTER_BAND_SIZE
 
-    run = run_dir or os.path.join(
-        tempfile.gettempdir(), "sg_stream_scrub", uuid.uuid4().hex
-    )
+    run = run_dir or scratch_dir("sg_stream_scrub")
     staging = os.path.join(run, "staging")
     overlay = os.path.join(run, "overlay")
     ledger = os.path.join(run, "ledger")

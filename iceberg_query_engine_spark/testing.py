@@ -79,6 +79,10 @@ class CompareResult:
     duck_rows: int
     detail: str = ""
     mismatches: list[str] = field(default_factory=list)
+    # both sides after _canon, (spark, duck): what the verdict was made on
+    frames: tuple[pd.DataFrame, pd.DataFrame] | None = field(
+        default=None, repr=False, compare=False
+    )
 
 
 def compare(
@@ -98,20 +102,20 @@ def compare(
         if close:
             con.close()
 
-    if len(spark_pd) != len(duck_pd):
+    a, b = _canon(spark_pd), _canon(duck_pd)
+    if len(a) != len(b):
         return CompareResult(
-            name, False, len(spark_pd), len(duck_pd), "row count mismatch"
+            name, False, len(a), len(b), "row count mismatch", frames=(a, b)
         )
-    s_cols, d_cols = sorted(spark_pd.columns), sorted(duck_pd.columns)
-    if s_cols != d_cols:
+    if list(a.columns) != list(b.columns):
         return CompareResult(
             name,
             False,
-            len(spark_pd),
-            len(duck_pd),
-            f"column mismatch: spark={s_cols} duck={d_cols}",
+            len(a),
+            len(b),
+            f"column mismatch: spark={list(a.columns)} duck={list(b.columns)}",
+            frames=(a, b),
         )
-    a, b = _canon(spark_pd), _canon(duck_pd)
     mism = []
     for c in a.columns:
         neq = a[c] != b[c]
@@ -121,8 +125,9 @@ def compare(
     return CompareResult(
         name,
         not mism,
-        len(spark_pd),
-        len(duck_pd),
+        len(a),
+        len(b),
         "ok" if not mism else "value mismatch",
         mism,
+        frames=(a, b),
     )

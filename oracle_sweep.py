@@ -7,18 +7,51 @@ pytest run (r5 verdict, Next round #5). This script runs EVERY
 compare the driver gate uses, under the driver's ANSI default session —
 and writes `ORACLE_SWEEP_r{N}.json`: one row per query with pass/fail,
 row counts, and wall seconds. Queries without an oracle (`f_approx`)
-get the driver's weaker rows-only check, marked `"mode": "rows_only"`.
+get the weaker rows-only check, at least one row, marked
+`"mode": "rows_only"`.
+
+Every oracle row also carries `spark_sha256` and `oracle_sha256`: the
+sha256 of each side's canonical frame (`testing._canon`: sorted
+columns, sorted rows, normalized cells) as CSV, so anyone can recompute
+any query's result hash independently. `ok` holds exactly when the two
+hashes are equal. A seeded sample of the surface (e.g. the 40 names
+with the smallest sha256("<round>:<name>")) is a view of this file.
 
 Usage: python oracle_sweep.py [round_number] [sf_dir]
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import sys
 import time
 
 from iceberg_query_engine_spark.materialize import release
+from iceberg_query_engine_spark.testing import compare, duck_connect
+
+
+def canon_sha256(canon) -> str:
+    """sha256 of a `testing._canon` frame's CSV form."""
+    return hashlib.sha256(
+        canon.to_csv(index=False).encode("utf-8", "surrogatepass")
+    ).hexdigest()
+
+
+def oracle_row(name: str, spark_df, oracle_sql: str, sf: str, con) -> dict:
+    """One oracle-mode sweep row: `testing.compare` of `spark_df`
+    against `oracle_sql`, plus both canonical frames' hashes."""
+    r = compare(name, spark_df, oracle_sql, sf, con)
+    spark_canon, oracle_canon = r.frames
+    return {
+        "ok": bool(r.ok),
+        "mode": "oracle",
+        "spark_rows": r.spark_rows,
+        "oracle_rows": r.duck_rows,
+        "detail": r.detail if not r.ok else "",
+        "spark_sha256": canon_sha256(spark_canon),
+        "oracle_sha256": canon_sha256(oracle_canon),
+    }
 
 
 def main() -> int:
@@ -27,8 +60,6 @@ def main() -> int:
 
     import __spark_entry__ as e
     from pyspark.sql import SparkSession
-
-    from iceberg_query_engine_spark.testing import compare, duck_connect
 
     # deliberately NOT session.get_spark(): the sweep must reproduce the
     # DRIVER's environment (Spark 4 default ansi=true among others)
@@ -46,17 +77,10 @@ def main() -> int:
         t0 = time.perf_counter()
         try:
             if name in osql:
-                r = compare(name, qs[name](spark, sf), osql[name], sf, con)
-                row = {
-                    "ok": bool(r.ok),
-                    "mode": "oracle",
-                    "spark_rows": r.spark_rows,
-                    "oracle_rows": r.duck_rows,
-                    "detail": r.detail if not r.ok else "",
-                }
+                row = oracle_row(name, qs[name](spark, sf), osql[name], sf, con)
             else:
                 n = qs[name](spark, sf).count()
-                row = {"ok": n >= 0, "mode": "rows_only", "spark_rows": n}
+                row = {"ok": n > 0, "mode": "rows_only", "spark_rows": n}
         except Exception as exc:  # a crash is a failure row, not a sweep abort
             row = {"ok": False, "mode": "error", "detail": repr(exc)[:300]}
         row["secs"] = round(time.perf_counter() - t0, 3)
@@ -64,8 +88,8 @@ def main() -> int:
             n_fail += 1
             print(f"FAIL {name}: {row.get('detail', '')}", file=sys.stderr)
         out[name] = row
-        # free the query's persists and checkpoint blocks, so a sweep
-        # does not pile them up across 293 entries
+        # free the query's persists, checkpoint blocks and scratch dirs,
+        # so a sweep does not pile them up across 293 entries
         release()
 
     artifact = {

@@ -2,8 +2,8 @@
 
 Each test pins one of the five advisor-flagged behaviors so the fix
 can't silently regress: bucket-count sidecar persistence, the crash-
-safe expire ordering, the single-point Holt series, and the
-flat-layout contract of ensure_full_data.
+safe expire ordering, the single-point Holt series, and
+ensure_full_data regenerating exactly the missing flat tables.
 """
 
 from __future__ import annotations
@@ -95,7 +95,7 @@ def test_holt_single_point_series_omitted(spark, tmp_path):
     assert types == {"busy"}, "single-point series must be omitted like the oracle"
 
 
-# --- ADVICE #5: ensure_full_data honors the caller's layout -----------
+# --- ADVICE #5: ensure_full_data regenerates a missing flat fact -----
 
 
 def test_ensure_full_data_flat_regenerates_reclaimed_fact(monkeypatch, tmp_path):
@@ -104,21 +104,16 @@ def test_ensure_full_data_flat_regenerates_reclaimed_fact(monkeypatch, tmp_path)
     monkeypatch.setattr(tpch_full, "FULL_DATA_ROOT", str(tmp_path))
     out = os.path.join(str(tmp_path), "sf9")
     os.makedirs(out)
-    # every table's flat parquet present except lineitem (reclaimed);
-    # its bucketed warehouse copy exists
+    # every table's flat parquet present except lineitem
     for t in tpch_full.FULL_TABLES:
         if t != "lineitem":
             open(os.path.join(out, f"{t}.parquet"), "w").close()
-    monkeypatch.setattr(tpch_full, "_warehouse_has", lambda base, t: t == "lineitem")
 
     def fake_generate(spark, sf, out_dir, single_file=False, only=None):
         calls["only"] = only
 
     monkeypatch.setattr(tpch_full, "generate_tpch_full", fake_generate)
 
-    # bucketed caller: warehouse copy counts, nothing regenerated
-    tpch_full.ensure_full_data(None, "sf9", layout="bucketed")
-    assert "only" not in calls
-    # flat caller: the reclaimed fact is genuinely missing -> regenerate
-    tpch_full.ensure_full_data(None, "sf9", layout="flat")
+    # the missing fact, and only it, is regenerated
+    assert tpch_full.ensure_full_data(None, "sf9") == out
     assert calls["only"] == {"lineitem"}

@@ -1,5 +1,6 @@
 """The bucketed write's size gate reads registry.table_bytes; when the
-size is unknown it takes its safe side, the shuffle-free write."""
+size is unknown it takes its safe side, the shuffle-free write, for
+every bucketed fact."""
 
 from __future__ import annotations
 
@@ -21,11 +22,12 @@ def test_unknown_size_writes_without_shuffle(spark, monkeypatch):
     monkeypatch.setattr(type(spark.range(1)), "repartition", no_repartition)
     try:
         got = tpch_full.register_catalog_layout(
-            spark, data_dir, "gate_unknown", buckets=4, analyze=False, only={"orders"}
+            spark, data_dir, "gate_unknown", buckets=4, analyze=False
         )
         assert got == db
-        flat = spark.read.parquet(os.path.join(data_dir, "orders.parquet"))
-        assert spark.table(f"{db}.orders").count() == flat.count()
+        for t in sorted(tpch_full.BUCKET_SPECS):
+            flat = spark.read.parquet(os.path.join(data_dir, f"{t}.parquet"))
+            assert spark.table(f"{db}.{t}").count() == flat.count(), t
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
         spark.catalog.setCurrentDatabase("default")

@@ -406,3 +406,17 @@ def test_cli_run_subcommand(spark, sf_oracle, capsys):
 
     assert main(["--sf-dir", sf_oracle, "run", "set_nope"]) == 2
     assert "unknown query" in capsys.readouterr().out
+
+
+def test_cli_run_releases_scratch_dirs(spark, sf_smoke, tmp_path, monkeypatch, capsys):
+    """`run` frees what the query left behind once it has printed the
+    rows: the streaming MERGE's table directory is gone on exit."""
+    import os
+    import tempfile
+
+    from iceberg_query_engine_spark.engine import main
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert main(["--sf-dir", sf_smoke, "run", "stream_upsert_iceberg"]) == 0
+    assert "user_id" in capsys.readouterr().out
+    assert os.listdir(tmp_path / "sg_stream_ice") == []

@@ -1,7 +1,8 @@
 """LSH banding under pathological skew: over-cap buckets STAR-expand —
 bounded task work AND the boilerplate family is caught (r8 verdict,
 Next round #5 + the r9 mitigation; companion of
-data/exp_dedup_skew_r9.py which measures the same at 200k docs).
+`git show b72b397:data/exp_dedup_skew_r9.py`, which measures the same
+at 200k docs).
 
 A boilerplate family — identical token SET, rotated order, so every
 member lands in the SAME band buckets but is not an exact dup — is the

@@ -5,7 +5,9 @@ one size walker (sources.registry.parquet_bytes).
   materialisation sites (localCheckpoint in the dedup, similarity and
   operators suites and in operators/rank.py; the ungated ledger
   persist; a persist_if_large frame) leaves 0 persistent RDDs after its
-  action and a release, and a rebuild returns the same rows.
+  action and a release, and a rebuild returns the same rows. The two
+  streaming ops whose frames read their own output lazily leave no
+  scratch directory once the action and release() have run.
 - A size the walker cannot tell is None, and each consumer takes its
   documented side: the bucket-count floor, stock session confs.
 - at_rest() is the one home for stored derivations: a hit does not
@@ -92,6 +94,23 @@ def test_release_without_a_context_is_a_noop(monkeypatch):
 
     monkeypatch.setattr(SparkContext, "_active_spark_context", None)
     assert release() == 0
+
+
+def test_release_removes_streaming_scratch_dirs(spark, sf_smoke, private_tmp, tmp_path):
+    from iceberg_query_engine_spark.streaming.jobs import stream_upsert_iceberg
+    from iceberg_query_engine_spark.streaming.scrub import stream_dedup_pipeline
+
+    release()
+    own_run = str(tmp_path / "own_run")
+    assert stream_dedup_pipeline(spark, sf_smoke).collect()
+    assert stream_dedup_pipeline(spark, sf_smoke, run_dir=own_run).collect()
+    assert stream_upsert_iceberg(spark, sf_smoke).collect()
+    roots = [os.path.join(private_tmp, d) for d in ("sg_stream_scrub", "sg_stream_ice")]
+    assert all(len(os.listdir(r)) == 1 for r in roots), "the ops wrote no scratch dir"
+    release()
+    assert [os.listdir(r) for r in roots] == [[], []]
+    # a caller-chosen run dir is the caller's: never registered, never removed
+    assert os.path.isdir(os.path.join(own_run, "overlay"))
 
 
 # ------------------------------------------------------------ unknown sizes

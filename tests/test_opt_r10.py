@@ -12,7 +12,7 @@
   size tried (sf0.1 and a 75k-doc corpus with oversized buckets) —
   the vote stage's work is PAIR_BUCKET_CAP-bounded, so the extra
   exchange has nothing to amortize; reverted to the r9 shape
-  (evidence in OPTIMIZATION_r10.md). No test — no change shipped.
+  (evidence in HISTORY.md). No test — no change shipped.
 - sim_knn_graph_recall shared probe pass (#5): probes[0] of the
   multi-probe kernel IS the nearest-centroid assignment (bit-identical
   cluster ids), so the shared-pass recall equals the standalone ops'.
@@ -129,8 +129,8 @@ def test_clusters_size_via_window_single_labels_pass(spark, sf_smoke):
         assert plan.count(") Window") == 1, fn.__name__
         # the join-back shape put a size-attach join ABOVE the labels;
         # the window form has none (at sf0.1 the labels ExistingRDD
-        # drops 4→2 and dedup_clusters loses 2 SortMergeJoins —
-        # plans/r10/{sim_knn_clusters,dedup_clusters}_{before,after}.txt)
+        # drops 4→2 and dedup_clusters loses 2 SortMergeJoins — `git show
+        # b72b397:plans/r10/dedup_clusters_before.txt` and its _after twin)
         for join_op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
             assert join_op not in plan, (fn.__name__, join_op)
 

@@ -478,7 +478,7 @@ def test_text_repetition_map_only(spark, sf):
     the ≤300-row doc_id slice (filter-bounded at ANY corpus size) that
     un-serializes the O(len²) gram folds on split-starved scan layouts
     (r9 optimization round; the corpus-wide registry respread was
-    measured a net regression and reverted — OPTIMIZATION_r09.md)."""
+    measured a net regression and reverted — HISTORY.md)."""
     df = text_suite.text_repetition(spark, sf)
     assert pi.shuffle_count(df) <= 2
     assert pi.count_op(df, "Scan parquet") == 1
